@@ -10,24 +10,46 @@ collect `adjacent_k` per hop, return ≤`k` by score. Per-scope params:
     file:                   k=8,  start_k=2, adjacent_k=6, max_depth=2
     code (chunk table):     k=10, start_k=3, adjacent_k=8, max_depth=2
 
-Engine shape: a whole mixed-scope batch of queries retrieves in ONE
-shared set of jobs — queries hash-join the scope partitions
-(partition-pruned, filter pushdown), score = dot on unit vectors into
-a narrow cached (query_id, row_id, edge keys, score) table, then a
-bounded driver loop walks the hops: each ≤batch×k frontier row set is
-pushed back as literal isin predicates over the cached scores (no
-broadcast joins, no lineage recursion), and the final ≤k ids fetch doc
-bodies with one broadcast hash join. The store never shuffles.
+Engine shape, two paths with the same answers:
+
+- Snapshot (serving stores up to a driver bound): `store_snapshot`
+  loads the slim store — vectors as float64, edge keys, topics, doc
+  columns — into the driver ONCE per store DataFrame with one job, and
+  `StoreSnapshot.retrieve` runs seed → ≤2 hops → top-k → doc fetch for
+  a whole mixed-scope batch in numpy. No Spark job runs per call. The
+  bound is `session.driver_bound_rows` at the measured bytes per
+  snapshot row (`snapshot_bound`); a store above it stays on the Spark
+  path. A DataFrame's file list is fixed when it is created, so a
+  snapshot sees exactly what a scan of the same DataFrame would.
+- Spark (`retrieve_batch_multi`): queries hash-join the scope
+  partitions (partition-pruned, filter pushdown), score = dot on unit
+  vectors into a narrow cached (query_id, row_id, edge keys, score)
+  table, then a bounded driver loop walks the hops: each ≤batch×k
+  frontier row set is pushed back as literal isin predicates over the
+  cached scores, and the final ≤k ids fetch doc bodies with one
+  broadcast hash join. The store never shuffles.
+
+Both score with one kernel (`_dot_dimseq`: dim-sequential float64
+accumulation, bit-identical to the JVM fold) and round like
+`F.round(score, 6)`; both rank score desc NULLS LAST, then row_id asc.
 """
 
 from __future__ import annotations
 
+import math
+import threading
+import weakref
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Context, Decimal
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from githubrepostorag_spark.functions import vectors as V
+from githubrepostorag_spark.session import driver_bound_rows
 
 FILTER_KEYS = ("namespace", "repo", "module")
 
@@ -80,6 +102,15 @@ _PARAM_COLS = ("p_k", "p_start_k", "p_adjacent_k", "p_max_depth")
 # keys, and the score — doc bodies are fetched once for the final ≤k
 # rows, so the cached score table stays narrow at any store size
 _SLIM_COLS = ("row_id", "namespace", "repo", "module", "file_path")
+
+
+# a query batch as DataFrame columns; the agent's query meta dicts
+# carry these keys in this order
+QUERY_SCHEMA = (
+    "query_id string, qvec array<float>, flt_namespace string, "
+    "flt_repo string, flt_module string, flt_topics string, "
+    "q_scope string, p_k int, p_start_k int, p_adjacent_k int, p_max_depth int"
+)
 
 
 def with_scope_params(
@@ -177,6 +208,80 @@ def _scored(
     return out
 
 
+def _query_block(qvecs: list) -> np.ndarray:
+    """(queries × dim) float64 block of query vectors, round-tripped
+    through float32 exactly as the array<float> query column stores
+    them. A batch must share one dim."""
+    dims = {len(v) for v in qvecs}
+    if len(dims) > 1:
+        raise ValueError(f"mixed query dims unsupported: {sorted(dims)}")
+    dim = dims.pop() if dims else 0
+    return np.asarray(qvecs, dtype=np.float32).astype(np.float64).reshape(len(qvecs), dim)
+
+
+def _vector_block(vecs: pa.Array | pa.ChunkedArray, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(valid, M) for an Arrow column of store vectors: `valid` marks
+    the rows the JVM fold scores — vector non-NULL, `dim` long, no NULL
+    element (zip_with pads a short side with NULL, and a NULL product
+    poisons the aggregate) — and M holds those rows as (n_valid × dim)
+    float64. Every other row scores NULL."""
+    if isinstance(vecs, pa.ChunkedArray):
+        vecs = vecs.combine_chunks()
+    lens = pc.list_value_length(vecs).fill_null(0).to_numpy(zero_copy_only=False)
+    lens = lens.astype(np.int64)
+    valid = ~vecs.is_null().to_numpy(zero_copy_only=False) & (lens == dim)
+    flat = vecs.flatten()  # elements of the non-NULL rows, in row order
+    owner = np.repeat(np.arange(len(vecs)), lens)
+    valid[owner[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+    return valid, vals[valid[owner]].reshape(int(valid.sum()), dim)
+
+
+def _dot_dimseq(M: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """(rows × queries) dot products, accumulated dim-sequentially in
+    float64 (acc += v[:, i] * q[i], no fused multiply-add): per element
+    the JVM fold's exact left-to-right order, so scores are
+    bit-identical to `V.dot`. A Fortran-ordered M makes each column
+    read contiguous."""
+    S = np.zeros((M.shape[0], Q.shape[0]), dtype=np.float64)
+    for i in range(Q.shape[1]):
+        S += M[:, i : i + 1] * Q[:, i]
+    return S
+
+
+_ROUND_CTX = Context(prec=40)
+_ROUND_STEP = Decimal("1e-6")
+
+
+def _round6_exact(v: float) -> float:
+    """`F.round(v, 6)` for one double: HALF_UP on its decimal string.
+    Beyond 1e11 a double's shortest decimal has no 6th decimal digit,
+    so rounding is the identity there."""
+    if not math.isfinite(v) or abs(v) >= 1e11:
+        return v
+    d = Decimal(repr(v)).quantize(_ROUND_STEP, rounding=ROUND_HALF_UP, context=_ROUND_CTX)
+    return float(d) + 0.0  # BigDecimal has no -0
+
+
+def _round6(x: np.ndarray) -> np.ndarray:
+    """`F.round(x, 6)` over a float64 array. Spark rounds HALF_UP on
+    the double's decimal string, then converts back correctly rounded.
+    For |x| < 1e3 and a 6-decimal fraction more than 1e-6 from a tie,
+    the scaled double decides the side of the tie (its error is below
+    2e-7) and m / 1e6 is the correctly rounded double of m·10⁻⁶; the
+    rest — near ties, large and non-finite values — takes the decimal
+    route."""
+    with np.errstate(invalid="ignore"):
+        a = np.abs(x) * 1e6
+        f = np.floor(a)
+        frac = a - f
+        out = np.copysign(f + (frac >= 0.5), x) / 1e6 + 0.0
+        slow = ~(np.abs(x) < 1e3) | (np.abs(frac - 0.5) < 1e-6)
+    for i in np.flatnonzero(slow):
+        out.flat[i] = _round6_exact(float(x.flat[i]))
+    return out
+
+
 def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
     """`_scored` computed through the Arrow boundary (guide §4.2/§8):
     ONE pass over the slim store ships each candidate row into numpy
@@ -187,73 +292,44 @@ def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
 
     Why: the agent's batches are many-queries × small-store, so the
     join shape evaluates the interpreted `zip_with`+`aggregate` dot
-    fold once per (query, candidate) pair — measured as the dominant
-    cost of agent_batch100 (~4 s of a ~12 s entry at 100×2.3k pairs).
-    Here each pair's score is one fused numpy multiply-add sweep:
-    accumulation runs dim-sequentially (acc += v[:, i] * q[i]) in
-    float64 over float→double-cast inputs, which reproduces the JVM
-    fold's left-to-right order bit for bit; rows whose vector is NULL
-    or off-dimension yield NULL score (the fold's null-poisoning
-    outcome). Rounding stays JVM-side (`F.round`) so the decimal
+    fold once per (query, candidate) pair. Here each pair's score comes
+    from the shared `_dot_dimseq` kernel; rows `_vector_block` marks
+    invalid (NULL, off-dimension, or holding a NULL element) yield a
+    NULL score. Rounding stays JVM-side (`F.round`) so the decimal
     discipline is byte-identical to `_scored`'s.
 
     `meta_rows` must carry ``qvec`` in addition to `_scored`'s meta
-    (the agent passes its own embeddings; they are round-tripped
-    through float32 below exactly as the array<float> query column
+    (the agent passes its own embeddings; `_query_block` round-trips
+    them through float32 exactly as the array<float> query column
     stores them)."""
-    import numpy as np
-
     scopes = sorted({r["q_scope"] for r in meta_rows})
-    groups: dict[tuple[str, ...], list[dict]] = {}
-    for r in meta_rows:
-        keys = tuple(k for k in FILTER_KEYS if r[f"flt_{k}"] is not None)
-        groups.setdefault(keys, []).append(r)
     # plain-python payload captured by the closure (no DataFrames):
-    # (query_id, scope, {filter key: value}, topics-or-None, qvec f64)
-    payload = []
-    dims = set()
-    for keys, rows in groups.items():
-        for r in rows:
-            qv = np.asarray(r["qvec"], dtype=np.float32).astype(np.float64)
-            dims.add(qv.shape[0])
-            payload.append(
-                (
-                    r["query_id"],
-                    r["q_scope"],
-                    {k: r[f"flt_{k}"] for k in keys},
-                    r["flt_topics"],
-                    qv,
-                )
-            )
-    assert len(dims) == 1, f"mixed query dims unsupported: {dims}"
-    dim = dims.pop()
+    # (query_id, scope, {filter key: value}, topics-or-None)
+    payload = [
+        (
+            r["query_id"],
+            r["q_scope"],
+            {k: r[f"flt_{k}"] for k in FILTER_KEYS if r[f"flt_{k}"] is not None},
+            r["flt_topics"],
+        )
+        for r in meta_rows
+    ]
+    Q = _query_block([r["qvec"] for r in meta_rows])
+    dim = Q.shape[1]
 
     slim = store.filter(F.col("scope").isin(scopes)).select(
         "scope", *_SLIM_COLS, "topics", "vector"
     )
 
     def score_batches(batches):
-        import pyarrow as pa
-
         for batch in batches:
-            cols = batch.to_pydict()
-            n = len(cols["row_id"])
+            n = batch.num_rows
             if n == 0:
                 continue
-            vecs = cols["vector"]
-            lens = np.fromiter(
-                (len(v) if v is not None else -1 for v in vecs),
-                dtype=np.int64,
-                count=n,
-            )
-            valid = lens == dim
-            Vm = (
-                np.asarray(
-                    [v for v, ok in zip(vecs, valid) if ok], dtype=np.float64
-                ).reshape(int(valid.sum()), dim)
-                if valid.any()
-                else np.zeros((0, dim))
-            )
+            cols = {c: batch.column(c).to_pylist() for c in ("scope", *_SLIM_COLS, "topics")}
+            valid, M = _vector_block(batch.column("vector"), dim)
+            S = _dot_dimseq(np.asfortranarray(M), Q)
+            valid_pos = np.cumsum(valid) - 1  # row idx -> M/S row
             scope_arr = np.asarray(cols["scope"], dtype=object)
             key_arrs = {
                 k: np.asarray(cols[k], dtype=object) for k in FILTER_KEYS
@@ -262,15 +338,7 @@ def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
             out_cols: dict[str, list] = {c: [] for c in ("query_id", *_SLIM_COLS)}
             out_scores: list = []
             src = {c: np.asarray(cols[c], dtype=object) for c in _SLIM_COLS}
-            # one (valid rows × queries) score matrix per batch,
-            # accumulated dim-sequentially: per element this is the JVM
-            # fold's exact left-to-right order
-            Q = np.stack([qv for *_rest, qv in payload])  # (q, dim)
-            S = np.zeros((Vm.shape[0], len(payload)), dtype=np.float64)
-            for i in range(dim):
-                S = S + Vm[:, i : i + 1] * Q[None, :, i]
-            valid_pos = np.cumsum(valid) - 1  # row idx -> Vm/S row
-            for qi, (qid, qscope, flt, topics_val, _qv) in enumerate(payload):
+            for qi, (qid, qscope, flt, topics_val) in enumerate(payload):
                 mask = scope_arr == qscope
                 for k, v in flt.items():
                     mask = mask & (key_arrs[k] == v)
@@ -595,8 +663,11 @@ def retrieve_batch_multi(
 
 def _fetch_docs(store: DataFrame, ids: DataFrame, scopes: list[str] | None = None) -> DataFrame:
     """Join the (tiny) ranked id list back to the store for doc columns.
-    row_id is globally unique across scopes (sha1 over scope|keys); the
-    scope filter keeps partition pruning in the fetch scan."""
+    row_id is meant to be unique (sha1 over scope|keys); the scope
+    filter keeps partition pruning in the fetch scan. A duplicated
+    chunk row_id fans out here, past k rows for its query; the join
+    stays because q40's oracle joins the same way. `StoreSnapshot`
+    fetches by position instead."""
     if scopes:
         store = store.filter(F.col("scope").isin(scopes))
     s = store.alias("s")
@@ -612,6 +683,194 @@ def _fetch_docs(store: DataFrame, ids: DataFrame, scopes: list[str] | None = Non
         # callers read rows score-desc (V5); the result is ≤k×batch rows
         .orderBy(F.desc("score"), F.asc("row_id"))
     )
+
+
+# ------------------------------------------------------------ snapshot
+
+# the columns a snapshot holds: doc columns plus the vector
+_SNAPSHOT_COLS = (*_DOC_COLS, "vector")
+
+# driver bytes per snapshot row: 384 float64s (3,072 B) plus the doc
+# columns as Python objects and the per-row codes. Measured 4,023 B/row
+# resident on the 9,443-row sf0.1 ingest store (~10.5 KB/row at peak
+# while it builds). The bound is 65,536 rows (the floor) on a 2g driver
+# and 83,886 on the default 16g.
+_SNAPSHOT_ROW_BYTES = 4096
+
+
+def snapshot_bound(spark: SparkSession) -> int:
+    """Most store rows `store_snapshot` holds in the driver."""
+    return driver_bound_rows(spark, bytes_per_row=_SNAPSHOT_ROW_BYTES)
+
+
+def _codes(values: list) -> tuple[np.ndarray, dict]:
+    """Integer codes of a string column (NULL → -1) and its value → code map."""
+    index: dict = {}
+    codes = np.fromiter(
+        (-1 if v is None else index.setdefault(v, len(index)) for v in values),
+        dtype=np.int64,
+        count=len(values),
+    )
+    return codes, index
+
+
+def _top(idx: np.ndarray, score: np.ndarray, null: np.ndarray, rid: np.ndarray, n: int) -> np.ndarray:
+    """The first `n` of `idx` by score desc NULLS LAST, then row_id asc
+    (`rid` is row_id's sort rank); ties keep `idx` order."""
+    order = np.lexsort((rid[idx], -np.where(null[idx], 0.0, score[idx]), null[idx]))
+    return idx[order[:n]]
+
+
+@dataclass
+class _ScopeBlock:
+    """One scope's rows: store positions, NULL-score mask, float64
+    vectors of the scored rows (Fortran order), edge-key codes, and
+    row_id sort ranks."""
+
+    pos: np.ndarray
+    null: np.ndarray
+    M: np.ndarray
+    codes: dict[str, np.ndarray]
+    rid: np.ndarray
+
+
+class StoreSnapshot:
+    """The slim serving store held in the driver. `retrieve` answers a
+    mixed-scope query batch with the rows `retrieve_batch_multi` would
+    return, in numpy, with no Spark job; it is read-only after load, so
+    threads may share it."""
+
+    def __init__(self, table: pa.Table, dim: int | None):
+        docs = {c: table.column(c).to_pylist() for c in _DOC_COLS}
+        self.docs = docs
+        self.dim = dim  # the length of every non-NULL store vector
+        valid, M = _vector_block(table.column("vector"), dim or 0)
+        m_row = np.cumsum(valid) - 1
+        keys = {k: _codes(docs[k]) for k in EDGE_KEYS}
+        self.index = {k: index for k, (_, index) in keys.items()}  # value → code
+        rid = np.unique(np.asarray(docs["row_id"], dtype=object), return_inverse=True)[1]
+        rid = rid.reshape(-1)
+        scopes = np.asarray(docs["scope"], dtype=object)
+        self.blocks: dict[str, _ScopeBlock] = {}
+        for scope in {s for s in docs["scope"] if s is not None}:
+            p = np.flatnonzero(scopes == scope)
+            self.blocks[scope] = _ScopeBlock(
+                pos=p,
+                null=~valid[p],
+                M=np.asfortranarray(M[m_row[p[valid[p]]]]),
+                codes={k: c[p] for k, (c, _) in keys.items()},
+                rid=rid[p],
+            )
+        self._topic_masks: dict[tuple[str, str], np.ndarray] = {}
+
+    def _topic_mask(self, scope: str, b: _ScopeBlock, topic: str) -> np.ndarray:
+        mask = self._topic_masks.get((scope, topic))
+        if mask is None:
+            topics = self.docs["topics"]
+            mask = np.fromiter(
+                (topic in (topics[g] or []) for g in b.pos), dtype=bool, count=len(b.pos)
+            )
+            self._topic_masks[(scope, topic)] = mask
+        return mask
+
+    def retrieve(self, meta: list[dict], max_depth: int = 2) -> list[dict]:
+        """`retrieve_batch_multi(..., query_meta=meta, np_kernel=True)`
+        as plain row dicts (query_id, doc columns, score, hop), ≤p_k
+        per query, each query's rows score-desc."""
+        out: list[dict] = []
+        if not meta:
+            return out
+        Q = _query_block([m["qvec"] for m in meta])
+        by_scope: dict[str, list[int]] = {}
+        for j, m in enumerate(meta):
+            by_scope.setdefault(m["q_scope"], []).append(j)
+        for scope, js in by_scope.items():
+            b = self.blocks.get(scope)
+            if b is None:
+                continue
+            S = np.zeros((len(b.pos), len(js)))
+            if Q.shape[1] == self.dim:
+                null = b.null
+                S[~null] = _round6(_dot_dimseq(b.M, Q[js]))
+            else:  # every store vector is off-dimension: all NULL
+                null = np.ones(len(b.pos), dtype=bool)
+            for col, j in enumerate(js):
+                out.extend(self._ranked(meta[j], scope, b, S[:, col], null, max_depth))
+        return out
+
+    def _ranked(self, m: dict, scope: str, b: _ScopeBlock, score: np.ndarray,
+                null: np.ndarray, max_depth: int) -> list[dict]:
+        """Seed → hops → top p_k for one query, as `retrieve_batch_multi`'s
+        driver loop ranks them."""
+        cand = np.ones(len(b.pos), dtype=bool)
+        for k in FILTER_KEYS:
+            v = m[f"flt_{k}"]
+            if v is not None:
+                cand &= b.codes[k] == self.index[k].get(v, -2)
+        if m["flt_topics"] is not None:
+            cand &= self._topic_mask(scope, b, m["flt_topics"])
+        frontier = _top(np.flatnonzero(cand), score, null, b.rid, m["p_start_k"])
+        reached = [frontier]
+        hops = [np.zeros(len(frontier), dtype=np.int64)]
+        for depth in range(1, min(max_depth, m["p_max_depth"]) + 1):
+            edge = np.zeros(len(b.pos), dtype=bool)
+            for k in EDGE_KEYS:
+                vals = b.codes[k][frontier]
+                vals = vals[vals >= 0]
+                if vals.size:
+                    edge |= np.isin(b.codes[k], vals)
+            if not edge.any():
+                break
+            seen = b.rid[np.concatenate(reached)]
+            frontier = _top(
+                np.flatnonzero(cand & edge & ~np.isin(b.rid, seen)),
+                score, null, b.rid, m["p_adjacent_k"],
+            )
+            if not frontier.size:
+                break
+            reached.append(frontier)
+            hops.append(np.full(len(frontier), depth, dtype=np.int64))
+        idx, hop = np.concatenate(reached), np.concatenate(hops)
+        order = np.lexsort((b.rid[idx], -np.where(null[idx], 0.0, score[idx]), null[idx]))
+        rows = []
+        for o in order[: m["p_k"]]:
+            i, g = idx[o], b.pos[idx[o]]
+            row = {"query_id": m["query_id"]}
+            row.update((c, self.docs[c][g]) for c in _DOC_COLS)
+            row["score"] = None if null[i] else float(score[i])
+            row["hop"] = int(hop[o])
+            rows.append(row)
+        return rows
+
+
+_SNAPSHOTS: "weakref.WeakKeyDictionary[DataFrame, StoreSnapshot | None]" = (
+    weakref.WeakKeyDictionary()
+)
+_SNAPSHOTS_LOCK = threading.Lock()
+
+
+def store_snapshot(store: DataFrame) -> StoreSnapshot | None:
+    """The driver snapshot of `store`, loaded by the first call for this
+    DataFrame instance with one job (`limit(bound + 1).toArrow()`) and
+    reused by every later call. None — also cached — when the store
+    holds more than `snapshot_bound` rows, or vectors of more than one
+    length; the caller then retrieves through `retrieve_batch_multi`.
+
+    Keying on the instance keeps what a reader sees unchanged: the
+    DataFrame's file list was fixed when it was created, and a snapshot
+    outlives those files (a later `compact_store` cannot fail it)."""
+    with _SNAPSHOTS_LOCK:
+        if store in _SNAPSHOTS:
+            return _SNAPSHOTS[store]
+    bound = snapshot_bound(store.sparkSession)
+    table = store.select(*_SNAPSHOT_COLS).limit(bound + 1).toArrow()
+    lens = pc.list_value_length(table.column("vector")).drop_null()
+    dims = pc.unique(lens).to_pylist()
+    snap = None
+    if table.num_rows <= bound and len(dims) <= 1:
+        snap = StoreSnapshot(table, dims[0] if dims else None)
+    with _SNAPSHOTS_LOCK:
+        return _SNAPSHOTS.setdefault(store, snap)
 
 
 def retrieve_batch(

@@ -24,9 +24,10 @@ are preserved bit-for-bit:
   retry (:448-516). Sources = 6-key metadata + ≤1200-char text (:70-85).
 
 The loop itself is driver-side (bounded, ≤3 iterations) while every
-retrieval is a batched DataFrame job — the Spark analog of the
-reference's per-query state machine, amortized across the whole query
-batch.
+retrieval serves the whole query batch at once — from the store's
+driver snapshot when it fits the driver bound, else as one batched
+DataFrame job — the Spark analog of the reference's per-query state
+machine, amortized across the whole query batch.
 """
 
 from __future__ import annotations
@@ -42,10 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from githubrepostorag_spark.functions.embed import EMBED_DIM, embed_text
 from githubrepostorag_spark.llm.stub import LLM, sanitize_llm_output
 from githubrepostorag_spark.operators.retrieval import (
+    QUERY_SCHEMA,
     SCOPE_PARAMS,
     SCOPE_TO_TABLE,
-    IvfIndex,
     retrieve_batch_multi,
+    store_snapshot,
 )
 
 MAX_RAG_ATTEMPTS = 3  # rag_shared/config.py:6,37
@@ -129,15 +131,11 @@ class GraphRAGAgent:
         store: DataFrame,
         llm: LLM,
         max_iters: int = MAX_RAG_ATTEMPTS,
-        ivf: dict[str, IvfIndex] | None = None,
     ):
         self.spark = spark
         self.store = store
         self.llm = llm
         self.max_iters = max_iters
-        # per-scope ANN indexes (precomputed, like the reference's SAI);
-        # scopes without an index retrieve exactly
-        self.ivf = ivf or {}
 
     # ---------------- plan ----------------
     def plan(self, st: QueryState) -> None:
@@ -167,77 +165,56 @@ class GraphRAGAgent:
         st.emit("plan", scope=scope, filters=dict(filters), attempt=st.attempt)
 
     # ---------------- retrieve ----------------
-    def _queries_df(
-        self, entries: list[tuple[str, str, dict, str]]
-    ) -> tuple[DataFrame, list[dict]]:
-        """entries: (query_id, text, filters, agent_scope). The scope
-        rides along as a table-scope column + per-query ranking params,
-        so one DataFrame serves a mixed-scope batch."""
-        rows, meta = [], []
+    @staticmethod
+    def _query_meta(entries: list[tuple[str, str, dict, str]]) -> list[dict]:
+        """entries: (query_id, text, filters, agent_scope) → one dict
+        per entry, keys in `QUERY_SCHEMA` order. The scope rides along
+        as a table scope + per-query ranking params, so one list serves
+        a mixed-scope batch."""
+        meta = []
         for qid, text, filters, scope in entries:
-            tscope = SCOPE_TO_TABLE.get(scope, scope)
             p = SCOPE_PARAMS[scope]
-            rows.append(
-                (
-                    qid,
-                    [float(x) for x in embed_text(text, EMBED_DIM)],
-                    filters.get("namespace"),
-                    filters.get("repo"),
-                    filters.get("module"),
-                    filters.get("topics"),
-                    tscope,
-                    p.k,
-                    p.start_k,
-                    p.adjacent_k,
-                    p.max_depth,
-                )
-            )
             meta.append(
                 {
                     "query_id": qid,
+                    "qvec": [float(x) for x in embed_text(text, EMBED_DIM)],
                     "flt_namespace": filters.get("namespace"),
                     "flt_repo": filters.get("repo"),
                     "flt_module": filters.get("module"),
                     "flt_topics": filters.get("topics"),
-                    "q_scope": tscope,
+                    "q_scope": SCOPE_TO_TABLE.get(scope, scope),
                     "p_k": p.k,
                     "p_start_k": p.start_k,
                     "p_adjacent_k": p.adjacent_k,
                     "p_max_depth": p.max_depth,
-                    # the vectorized scorer's input (np_kernel below)
-                    "qvec": rows[-1][1],
                 }
             )
-        df = self.spark.createDataFrame(
-            rows,
-            "query_id string, qvec array<float>, flt_namespace string, "
-            "flt_repo string, flt_module string, flt_topics string, "
-            "q_scope string, p_k int, p_start_k int, p_adjacent_k int, p_max_depth int",
-        )
-        return df, meta
+        return meta
 
     def _retrieve_all(
         self, entries: list[tuple[str, str, dict, str]]
     ) -> dict[str, list[dict]]:
-        """ONE retrieval job for the whole mixed-scope entry list — the
-        latency-critical path, so every scope and every expansion query
-        shares a single plan instead of a job per scope."""
+        """ONE retrieval for the whole mixed-scope entry list — every
+        scope and every expansion query share it. A store within the
+        driver bound answers from its snapshot with no Spark job;
+        a larger one runs one shared Spark plan whose exact scoring
+        goes through the vectorized Arrow kernel (see _scored_np)."""
         out: dict[str, list[dict]] = {qid: [] for qid, _, _, _ in entries}
         if not entries:
             return out
-        qdf, meta = self._queries_df(entries)
-        ivf_t = {
-            SCOPE_TO_TABLE.get(s, s): idx for s, idx in self.ivf.items() if idx is not None
-        }
-        rows = retrieve_batch_multi(
-            self.store, qdf, ivf=ivf_t or None, query_meta=meta,
-            # the agent holds its query embeddings driver-side, so the
-            # exact path can score through the vectorized Arrow kernel
-            # (one store pass for the whole batch — see _scored_np)
-            np_kernel=True,
-        ).collect()
-        for r in rows:
-            d = r.asDict()
+        meta = self._query_meta(entries)
+        snap = store_snapshot(self.store)
+        if snap is not None:
+            rows = snap.retrieve(meta)
+        else:
+            qdf = self.spark.createDataFrame([tuple(m.values()) for m in meta], QUERY_SCHEMA)
+            rows = [
+                r.asDict()
+                for r in retrieve_batch_multi(
+                    self.store, qdf, query_meta=meta, np_kernel=True
+                ).collect()
+            ]
+        for d in rows:
             out[d.pop("query_id")].append(d)
         return out
 

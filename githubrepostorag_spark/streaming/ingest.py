@@ -93,9 +93,14 @@ def compact_store(spark: SparkSession, store_path: str) -> None:
     partition via dynamic partition overwrite — only repos that have a
     stale version are rewritten; untouched repo partitions' files are
     left in place. Run periodically (the table-format analogue is
-    snapshot expiry); readers keep using `read_latest_store`, which is
-    correct before, during (parquet readers see either file set), and
-    after compaction.
+    snapshot expiry).
+
+    Not safe beside open readers: a DataFrame from `read_latest_store`
+    fixed its file list when it was created, and the rewrite deletes
+    the superseded files, so its next scan can fail with
+    FileNotFoundException. Resolve the view again after compaction. An
+    agent whose store snapshot loaded before it (see
+    `operators.retrieval.store_snapshot`) keeps answering from memory.
     """
     latest = read_latest_store(spark, store_path)
     stale_repos = (

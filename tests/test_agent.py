@@ -11,8 +11,10 @@ from __future__ import annotations
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from githubrepostorag_spark.llm.stub import DeterministicLLM
+from githubrepostorag_spark.operators import retrieval as R
 from githubrepostorag_spark.plans.agent import GraphRAGAgent
 from githubrepostorag_spark.plans.ingest import ingest_pipeline
 from tests.fixtures_corpus import corpus_df
@@ -182,3 +184,162 @@ def test_agent_batch100_completes_and_jobs_stay_bounded(spark, store):
     # term. 100 per-query jobs would need jobs_big >= 100.
     assert jobs_big <= 3 * jobs_small + 10, (jobs_small, jobs_big)
     assert jobs_big < 100
+
+
+QUERIES = (
+    "tell me about the projects",
+    "stacktrace timeout exception in the event handler",
+)
+FILTERS = (
+    {},
+    {"namespace": "default"},
+    {"repo": "alpha"},
+    {"repo": "beta", "module": "lib"},
+    {"module": "src"},
+    {"topics": "activemq"},
+    {"namespace": "default", "topics": "activemq"},
+    {"repo": "nope"},  # zero hits
+)
+
+
+@pytest.fixture(scope="module")
+def rich_store(store):
+    """The ingested store with topics on some rows (one holding a NULL
+    element, one a NULL array) and a chunk vector holding a NULL."""
+    first_chunk = (
+        store.filter("scope = 'chunk'").agg(F.min("row_id")).first()[0]
+    )
+    rich = store.withColumn(
+        "topics",
+        F.when(
+            F.col("module") == "src",
+            F.array(F.lit("activemq"), F.lit(None).cast("string")),
+        )
+        .when(F.col("module") == "lib", F.lit(None))
+        .when(F.col("module") == "docs", F.array(F.lit("activemq")))
+        .otherwise(F.col("topics")),
+    ).withColumn(
+        "vector",
+        F.when(
+            F.col("row_id") == first_chunk,
+            F.concat(F.slice("vector", 1, 383), F.array(F.lit(None).cast("float"))),
+        ).otherwise(F.col("vector")),
+    ).persist()
+    rich.count()
+    yield rich
+    rich.unpersist()
+
+
+def _spark_rows(spark, store, meta):
+    qdf = spark.createDataFrame([tuple(m.values()) for m in meta], R.QUERY_SCHEMA)
+    return [
+        r.asDict()
+        for r in R.retrieve_batch_multi(
+            store, qdf, query_meta=meta, np_kernel=True
+        ).collect()
+    ]
+
+
+def _key(r):
+    return tuple(
+        tuple(v) if isinstance(v, list) else v
+        for v in (r[c] for c in ("query_id", *R._DOC_COLS, "score", "hop"))
+    )
+
+
+def test_snapshot_matches_spark_path_all_scopes(spark, rich_store):
+    """One mixed-scope batch — four scopes × namespace/repo/module/topics
+    filters, zero-hit queries included — returns exactly the rows of
+    the agent's Spark path, ≤k per query. (That path's Arrow scorer
+    equals the JVM fold: `tests/test_retrieval.py`.)"""
+    entries = [
+        (f"q{i}", text, flt, scope)
+        for i, (text, flt, scope) in enumerate(
+            (t, f, s) for t in QUERIES for f in FILTERS for s in R.SCOPE_PARAMS
+        )
+    ]
+    meta = GraphRAGAgent._query_meta(entries)
+    snap = R.store_snapshot(rich_store)
+    assert snap is not None
+    got = snap.retrieve(meta)
+    assert sorted(map(_key, got)) == sorted(map(_key, _spark_rows(spark, rich_store, meta)))
+    per_q = {m["query_id"]: 0 for m in meta}
+    for r in got:
+        per_q[r["query_id"]] += 1
+    assert all(per_q[m["query_id"]] <= m["p_k"] for m in meta)
+    assert sum(n > 0 for n in per_q.values()) > len(meta) // 2
+    assert all(per_q[m["query_id"]] == 0 for m in meta if m["flt_repo"] == "nope")
+    assert {r["hop"] for r in got} >= {0, 1}
+    assert any(r["score"] is None for r in got)  # the NULL-element vector
+    zero_hit = [m for m in meta if m["flt_repo"] == "nope"]
+    assert snap.retrieve(zero_hit) == [] == _spark_rows(spark, rich_store, zero_hit)
+    assert snap.retrieve([]) == []
+
+
+def _answers(states):
+    return [(st.job_id, st.scope, st.answer, st.sources, st.events) for st in states]
+
+
+JOBS = [
+    {"job_id": "s1", "query": "Tell me about the projects in this workspace"},
+    {"job_id": "s2", "query": "stacktrace timeout exception in stream handler"},
+    {"job_id": "s3", "query": "repo: alpha what does the src module contain"},
+    {"job_id": "s4", "query": "how is the cache configured", "force_level": "package"},
+]
+
+
+def test_second_run_batch_schedules_no_spark_jobs(spark, store):
+    """Below the driver bound the store loads once; a later batch over
+    the same store DataFrame runs no Spark job at all."""
+    agent = GraphRAGAgent(spark, store, DeterministicLLM())
+    first = agent.run_batch(JOBS)
+    sc = spark.sparkContext
+    sc.setJobGroup("agent-snapshot-warm", "agent-snapshot-warm")
+    try:
+        again = GraphRAGAgent(spark, store, DeterministicLLM()).run_batch(JOBS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("agent-snapshot-warm") == []
+    assert _answers(again) == _answers(first)
+    assert all(st.docs for st in again)
+
+
+def test_above_bound_spark_path_same_answers(spark, store, monkeypatch):
+    """With the bound below the store's size the store stays on the
+    Spark path (the verdict is cached per DataFrame) and the agent
+    answers exactly as from the snapshot."""
+    want = GraphRAGAgent(spark, store, DeterministicLLM()).run_batch(JOBS)
+    monkeypatch.setattr(R, "snapshot_bound", lambda spark: 3)
+    big = store.select("*")
+    assert R.store_snapshot(big) is None
+    got = GraphRAGAgent(spark, big, DeterministicLLM()).run_batch(JOBS)
+    assert _answers(got) == _answers(want)
+
+
+def test_snapshot_outlives_compaction(spark, tmp_path):
+    """An agent whose snapshot loaded before `compact_store` rewrote the
+    store answers identically after it; a fresh view agrees."""
+    from githubrepostorag_spark.streaming.ingest import (
+        compact_store,
+        read_latest_store,
+        stream_ingest_docs,
+    )
+
+    src, path, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+    schema = "repo string, namespace string, file_path string, text string"
+    for rows in (
+        [("repoA", "default", "m0/a.py", "def retry_timeout():\n    raise Exception(1)\n" * 60),
+         ("repoB", "default", "m0/b.py", "def handler_error():\n    return 2\n" * 60)],
+        [("repoA", "default", "m0/a.py", "def retry_timeout():\n    return 9\n" * 30)],
+    ):
+        spark.createDataFrame(rows, schema).write.mode("append").json(src)
+        stream_ingest_docs(spark.readStream.schema(schema).json(src), path, ckpt).awaitTermination(300)
+
+    jobs = [{"job_id": "c1", "query": "stacktrace timeout exception in retry"}]
+    agent = GraphRAGAgent(spark, read_latest_store(spark, path), DeterministicLLM())
+    before = agent.run_batch(jobs)
+    assert before[0].docs
+    compact_store(spark, path)
+    assert _answers(agent.run_batch(jobs)) == _answers(before)
+    fresh = GraphRAGAgent(spark, read_latest_store(spark, path), DeterministicLLM())
+    assert _answers(fresh.run_batch(jobs)) == _answers(before)

@@ -125,3 +125,212 @@ def test_retrieve_np_kernel_end_to_end_identical(spark, store, queries):
         )
     )
     assert old == new and len(old) > 0
+
+
+def _meta(queries):
+    from githubrepostorag_spark.operators.retrieval import with_scope_params
+
+    q = with_scope_params(
+        queries.withColumn("qvec", F.col("qvec").cast("array<float>")), "code"
+    )
+    return q, [r.asDict() for r in q.collect()]
+
+
+def _row_key(r):
+    return (
+        r["query_id"], r["row_id"], r["score"], r["hop"], r["body"], r["scope"],
+        r["namespace"], r["repo"], r["module"], r["file_path"], r["language"],
+        None if r["topics"] is None else tuple(r["topics"]),
+    )
+
+
+def test_snapshot_matches_spark_paths(spark, store, queries):
+    """The driver snapshot returns exactly the rows — ids, scores, hops
+    and doc columns — of both Spark scorers, and each query's rows come
+    score-desc."""
+    from githubrepostorag_spark.operators.retrieval import (
+        retrieve_batch_multi,
+        store_snapshot,
+    )
+
+    q, meta = _meta(queries)
+    snap = store_snapshot(store)
+    assert snap is not None
+    got = snap.retrieve(meta)
+    for np_kernel in (False, True):
+        want = retrieve_batch_multi(store, q, query_meta=meta, np_kernel=np_kernel)
+        assert sorted(map(_row_key, got)) == sorted(
+            _row_key(r.asDict()) for r in want.collect()
+        )
+    for qid in {r["query_id"] for r in got}:
+        scores = [r["score"] for r in got if r["query_id"] == qid]
+        assert scores == sorted(scores, reverse=True)
+    assert {r["hop"] for r in got} == {0, 1, 2}
+    assert snap.retrieve([]) == []
+
+
+def test_snapshot_at_most_k_rows_on_duplicated_row_ids(spark, store, queries):
+    """A duplicated chunk row_id fans out in `_fetch_docs`'s join, past
+    k rows for its query. The snapshot fetches by position: it returns
+    the same (row_id, score, hop) set and never more than k rows."""
+    from githubrepostorag_spark.operators.retrieval import (
+        retrieve_batch_multi,
+        store_snapshot,
+    )
+
+    dup = store.unionByName(store)
+    q, meta = _meta(queries)
+    got = store_snapshot(dup).retrieve(meta)
+    want = retrieve_batch_multi(dup, q, query_meta=meta, np_kernel=True).collect()
+    key = lambda r: (r["query_id"], r["row_id"], r["score"], r["hop"])
+    assert set(map(key, got)) == set(map(key, want))
+    for m in meta:
+        assert 0 < sum(r["query_id"] == m["query_id"] for r in got) <= m["p_k"]
+
+
+def _tiny_store(spark, rows):
+    return spark.createDataFrame(
+        [
+            (rid, f"body {rid}", "chunk", "ns", "r", "m", f"m/{rid}.py", "py", ["t"], vec)
+            for rid, vec in rows
+        ],
+        "row_id string, body string, scope string, namespace string, repo string, "
+        "module string, file_path string, language string, topics array<string>, "
+        "vector array<float>",
+    )
+
+
+def _tiny_meta(qid, qvec, **params):
+    return {
+        "query_id": qid, "qvec": qvec, "flt_namespace": None, "flt_repo": None,
+        "flt_module": None, "flt_topics": None, "q_scope": "chunk",
+        "p_k": 10, "p_start_k": 3, "p_adjacent_k": 8, "p_max_depth": 2, **params,
+    }
+
+
+def test_null_vector_element_scores_null(spark):
+    """A vector holding a NULL element scores NULL, as the JVM fold's
+    null-poisoned aggregate does, in the Arrow kernel and the snapshot
+    alike — never NaN, which would rank first. NULL and off-dimension
+    vectors score NULL too."""
+    from githubrepostorag_spark.operators.retrieval import (
+        _scored,
+        _scored_np,
+        store_snapshot,
+    )
+
+    st = _tiny_store(
+        spark,
+        [
+            ("a", [1.0, 0.0, 0.0]),
+            ("b", [0.5, None, 0.5]),
+            ("c", None),
+            ("d", [1.0, 0.0]),
+            ("e", [0.0, 1.0, 0.0]),
+        ],
+    )
+    meta = [_tiny_meta("q", [1.0, 0.0, 0.0])]
+    qdf = spark.createDataFrame(
+        [("q", [1.0, 0.0, 0.0], None, None, None, None, "chunk")],
+        "query_id string, qvec array<float>, flt_namespace string, flt_repo string, "
+        "flt_module string, flt_topics string, q_scope string",
+    )
+    fold = {r["row_id"]: r["score"] for r in _scored(st, qdf, meta).collect()}
+    arrow = {r["row_id"]: r["score"] for r in _scored_np(st, meta).collect()}
+    assert fold == arrow == {"a": 1.0, "b": None, "c": None, "d": None, "e": 0.0}
+    # vectors of mixed length keep the Spark path; without "d" the
+    # snapshot serves the store and ranks the NULL scores last
+    assert store_snapshot(st) is None
+    got = store_snapshot(st.filter("row_id != 'd'")).retrieve(meta)
+    assert [(r["row_id"], r["score"]) for r in got] == [
+        ("a", 1.0), ("e", 0.0), ("b", None), ("c", None),
+    ]
+
+
+def test_mixed_query_dims_raise_value_error(spark):
+    """A batch whose query vectors differ in length is refused with
+    ValueError (an assert would vanish under ``python -O``)."""
+    from githubrepostorag_spark.operators.retrieval import (
+        _query_block,
+        _scored_np,
+        store_snapshot,
+    )
+
+    st = _tiny_store(spark, [("a", [1.0, 0.0, 0.0])])
+    meta = [_tiny_meta("q1", [1.0, 0.0, 0.0]), _tiny_meta("q2", [1.0, 0.0])]
+    for call in (
+        lambda: _query_block([m["qvec"] for m in meta]),
+        lambda: _scored_np(st, meta),
+        lambda: store_snapshot(st).retrieve(meta),
+    ):
+        with pytest.raises(ValueError, match="mixed query dims"):
+            call()
+
+
+def test_round6_matches_spark_round(spark):
+    """`_round6` reproduces `F.round(x, 6)` (HALF_UP on the double's
+    decimal string) bit for bit on 10⁵+ doubles: scores in [-1, 1],
+    exact 6-decimal ties and their neighbours, and wide magnitudes."""
+    import numpy as np
+    import pandas as pd
+
+    from githubrepostorag_spark.operators.retrieval import _round6
+
+    rng = np.random.default_rng(7)
+    ties = np.array(
+        [float(f"{m / 1e6:.6f}5") for m in rng.integers(-999_999, 1_000_000, 20_000)]
+    )
+    xs = np.concatenate(
+        [
+            rng.uniform(-1.0, 1.0, 60_000),
+            ties,
+            np.nextafter(ties, np.inf),
+            np.nextafter(ties, -np.inf),
+            rng.standard_normal(10_000) * 10.0 ** rng.integers(-12, 14, 10_000),
+            [0.0, -0.0, -1e-9, 5e-7, -5e-7, 0.5, 1e300, -1e300, np.inf, -np.inf, np.nan],
+        ]
+    )
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(xs)), "x": xs}))
+    rows = df.select("i", F.round("x", 6).alias("r")).collect()
+    want = np.empty(len(xs))
+    for r in rows:
+        want[r["i"]] = r["r"]
+    got = _round6(xs)
+    same = (got.view(np.int64) == want.view(np.int64)) | (np.isnan(got) & np.isnan(want))
+    assert len(xs) >= 100_000
+    assert same.all(), [(x, g, w) for x, g, w in zip(xs[~same], got[~same], want[~same])][:5]
+
+
+def test_snapshot_cache_shared_across_threads(spark):
+    """More threads than cores racing on one store DataFrame all get the
+    same cached snapshot, and every retrieve from it agrees."""
+    import sys
+    import threading
+
+    from githubrepostorag_spark.operators.retrieval import store_snapshot
+
+    st = _tiny_store(spark, [(f"r{i}", [float(i % 3), 1.0, 0.5]) for i in range(12)])
+    meta = [_tiny_meta("q", [1.0, 0.0, 0.0])]
+    got: list = []
+    lock = threading.Lock()
+
+    def worker():
+        snap = store_snapshot(st)
+        rows = snap.retrieve(meta)
+        with lock:
+            got.append((snap, rows))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(got) == 12
+    assert all(s is got[0][0] for s, _ in got)
+    assert all(rows == got[0][1] and rows for _, rows in got)
