@@ -17,10 +17,12 @@ Engine shape, two paths with the same answers:
   columns — into the driver ONCE per store DataFrame with one job, and
   `StoreSnapshot.retrieve` runs seed → ≤2 hops → top-k → doc fetch for
   a whole mixed-scope batch in numpy. No Spark job runs per call. The
-  bound is `session.driver_bound_rows` at the measured bytes per
-  snapshot row (`snapshot_bound`); a store above it stays on the Spark
-  path. A DataFrame's file list is fixed when it is created, so a
-  snapshot sees exactly what a scan of the same DataFrame would.
+  bound is `session.driver_bound_rows` at the measured peak bytes per
+  snapshot row (`snapshot_bound`). A store above it stays on the Spark
+  path, and is found above it before any body ships: by its parquet
+  footers, else by a count of row_ids. A DataFrame's file list is
+  fixed when it is created, so a snapshot sees exactly what a scan of
+  the same DataFrame would.
 - Spark (`retrieve_batch_multi`): queries hash-join the scope
   partitions (partition-pruned, filter pushdown), score = dot on unit
   vectors into a narrow cached (query_id, row_id, edge keys, score)
@@ -41,10 +43,12 @@ import threading
 import weakref
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Context, Decimal
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -105,12 +109,13 @@ _SLIM_COLS = ("row_id", "namespace", "repo", "module", "file_path")
 
 
 # a query batch as DataFrame columns; the agent's query meta dicts
-# carry these keys in this order
+# carry these keys, and `QUERY_COLS` orders them into rows
 QUERY_SCHEMA = (
     "query_id string, qvec array<float>, flt_namespace string, "
     "flt_repo string, flt_module string, flt_topics string, "
     "q_scope string, p_k int, p_start_k int, p_adjacent_k int, p_max_depth int"
 )
+QUERY_COLS = tuple(f.split()[0] for f in QUERY_SCHEMA.split(", "))
 
 
 def with_scope_params(
@@ -690,17 +695,18 @@ def _fetch_docs(store: DataFrame, ids: DataFrame, scopes: list[str] | None = Non
 # the columns a snapshot holds: doc columns plus the vector
 _SNAPSHOT_COLS = (*_DOC_COLS, "vector")
 
-# driver bytes per snapshot row: 384 float64s (3,072 B) plus the doc
-# columns as Python objects and the per-row codes. Measured 4,023 B/row
-# resident on the 9,443-row sf0.1 ingest store (~10.5 KB/row at peak
-# while it builds). The bound is 65,536 rows (the floor) on a 2g driver
-# and 83,886 on the default 16g.
-_SNAPSHOT_ROW_BYTES = 4096
+# driver bytes per snapshot row at the peak of its load: the Arrow
+# table (1,865 B/row) beside the snapshot being built from it (10,455
+# B/row at peak, 3,991 B/row resident once built: 384 float64s plus the
+# doc columns as Python objects), measured on the 9,443-row sf0.1
+# ingest store. No floor: the bound is 3,486 rows on a 2g driver and
+# 27,889 on the default 16g.
+_SNAPSHOT_ROW_BYTES = 12_320
 
 
 def snapshot_bound(spark: SparkSession) -> int:
     """Most store rows `store_snapshot` holds in the driver."""
-    return driver_bound_rows(spark, bytes_per_row=_SNAPSHOT_ROW_BYTES)
+    return driver_bound_rows(spark, bytes_per_row=_SNAPSHOT_ROW_BYTES, floor=0)
 
 
 def _codes(values: list) -> tuple[np.ndarray, dict]:
@@ -761,22 +767,13 @@ class StoreSnapshot:
                 codes={k: c[p] for k, (c, _) in keys.items()},
                 rid=rid[p],
             )
-        self._topic_masks: dict[tuple[str, str], np.ndarray] = {}
 
-    def _topic_mask(self, scope: str, b: _ScopeBlock, topic: str) -> np.ndarray:
-        mask = self._topic_masks.get((scope, topic))
-        if mask is None:
-            topics = self.docs["topics"]
-            mask = np.fromiter(
-                (topic in (topics[g] or []) for g in b.pos), dtype=bool, count=len(b.pos)
-            )
-            self._topic_masks[(scope, topic)] = mask
-        return mask
-
-    def retrieve(self, meta: list[dict], max_depth: int = 2) -> list[dict]:
+    def retrieve(self, meta: list[dict]) -> list[dict]:
         """`retrieve_batch_multi(..., query_meta=meta, np_kernel=True)`
         as plain row dicts (query_id, doc columns, score, hop), ≤p_k
-        per query, each query's rows score-desc."""
+        per query, each query's rows score-desc. Each query walks its
+        own p_max_depth hops (2 in every `SCOPE_PARAMS` entry, which is
+        also `retrieve_batch_multi`'s default cap)."""
         out: list[dict] = []
         if not meta:
             return out
@@ -794,25 +791,32 @@ class StoreSnapshot:
                 S[~null] = _round6(_dot_dimseq(b.M, Q[js]))
             else:  # every store vector is off-dimension: all NULL
                 null = np.ones(len(b.pos), dtype=bool)
+            topic_masks: dict[str, np.ndarray] = {}  # this batch's topics only
             for col, j in enumerate(js):
-                out.extend(self._ranked(meta[j], scope, b, S[:, col], null, max_depth))
+                out.extend(self._ranked(meta[j], b, S[:, col], null, topic_masks))
         return out
 
-    def _ranked(self, m: dict, scope: str, b: _ScopeBlock, score: np.ndarray,
-                null: np.ndarray, max_depth: int) -> list[dict]:
-        """Seed → hops → top p_k for one query, as `retrieve_batch_multi`'s
-        driver loop ranks them."""
+    def _ranked(self, m: dict, b: _ScopeBlock, score: np.ndarray,
+                null: np.ndarray, topic_masks: dict[str, np.ndarray]) -> list[dict]:
+        """Seed → ≤p_max_depth hops → top p_k for one query, as
+        `retrieve_batch_multi`'s driver loop ranks them."""
         cand = np.ones(len(b.pos), dtype=bool)
         for k in FILTER_KEYS:
             v = m[f"flt_{k}"]
             if v is not None:
                 cand &= b.codes[k] == self.index[k].get(v, -2)
-        if m["flt_topics"] is not None:
-            cand &= self._topic_mask(scope, b, m["flt_topics"])
+        topic = m["flt_topics"]
+        if topic is not None:
+            if topic not in topic_masks:
+                topics = self.docs["topics"]
+                topic_masks[topic] = np.fromiter(
+                    (topic in (topics[g] or []) for g in b.pos), dtype=bool, count=len(b.pos)
+                )
+            cand &= topic_masks[topic]
         frontier = _top(np.flatnonzero(cand), score, null, b.rid, m["p_start_k"])
         reached = [frontier]
         hops = [np.zeros(len(frontier), dtype=np.int64)]
-        for depth in range(1, min(max_depth, m["p_max_depth"]) + 1):
+        for depth in range(1, m["p_max_depth"] + 1):
             edge = np.zeros(len(b.pos), dtype=bool)
             for k in EDGE_KEYS:
                 vals = b.codes[k][frontier]
@@ -855,6 +859,8 @@ def store_snapshot(store: DataFrame) -> StoreSnapshot | None:
     reused by every later call. None — also cached — when the store
     holds more than `snapshot_bound` rows, or vectors of more than one
     length; the caller then retrieves through `retrieve_batch_multi`.
+    `_fits` vets the row count first, so a store above the bound ships
+    no body or vector to the driver.
 
     Keying on the instance keeps what a reader sees unchanged: the
     DataFrame's file list was fixed when it was created, and a snapshot
@@ -863,14 +869,41 @@ def store_snapshot(store: DataFrame) -> StoreSnapshot | None:
         if store in _SNAPSHOTS:
             return _SNAPSHOTS[store]
     bound = snapshot_bound(store.sparkSession)
-    table = store.select(*_SNAPSHOT_COLS).limit(bound + 1).toArrow()
-    lens = pc.list_value_length(table.column("vector")).drop_null()
-    dims = pc.unique(lens).to_pylist()
     snap = None
-    if table.num_rows <= bound and len(dims) <= 1:
-        snap = StoreSnapshot(table, dims[0] if dims else None)
+    if _fits(store, bound):
+        table = store.select(*_SNAPSHOT_COLS).limit(bound + 1).toArrow()
+        lens = pc.list_value_length(table.column("vector")).drop_null()
+        dims = pc.unique(lens).to_pylist()
+        if table.num_rows <= bound and len(dims) <= 1:
+            snap = StoreSnapshot(table, dims[0] if dims else None)
     with _SNAPSHOTS_LOCK:
         return _SNAPSHOTS.setdefault(store, snap)
+
+
+def _footer_rows(store: DataFrame) -> int | None:
+    """Rows in the parquet files `store` scans, summed from their
+    footers with no Spark job; None unless it scans local parquet files
+    only."""
+    files = store.inputFiles()
+    if not files or not all(f.startswith("file:") for f in files):
+        return None
+    try:
+        return sum(pq.read_metadata(unquote(urlparse(f).path)).num_rows for f in files)
+    except (OSError, pa.ArrowException):
+        return None
+
+
+def _fits(store: DataFrame, bound: int) -> bool:
+    """Whether `store` holds at most `bound` rows, decided before any
+    body or vector ships: by its parquet footers when they count no
+    more (no Spark job), else by counting at most bound + 1 row_ids.
+    Footers over-count a filtered or windowed scan, which the count
+    settles; a plan that repeats rows can exceed them, which the load's
+    own row check catches."""
+    rows = _footer_rows(store)
+    if rows is not None and rows <= bound:
+        return True
+    return store.select("row_id").limit(bound + 1).count() <= bound
 
 
 def retrieve_batch(

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from githubrepostorag_spark.functions.embed import EMBED_DIM, embed_text
 from githubrepostorag_spark.llm.stub import LLM, sanitize_llm_output
 from githubrepostorag_spark.operators.retrieval import (
+    QUERY_COLS,
     QUERY_SCHEMA,
     SCOPE_PARAMS,
     SCOPE_TO_TABLE,
@@ -168,7 +169,7 @@ class GraphRAGAgent:
     @staticmethod
     def _query_meta(entries: list[tuple[str, str, dict, str]]) -> list[dict]:
         """entries: (query_id, text, filters, agent_scope) → one dict
-        per entry, keys in `QUERY_SCHEMA` order. The scope rides along
+        per entry, keyed by `QUERY_COLS`. The scope rides along
         as a table scope + per-query ranking params, so one list serves
         a mixed-scope batch."""
         meta = []
@@ -207,7 +208,9 @@ class GraphRAGAgent:
         if snap is not None:
             rows = snap.retrieve(meta)
         else:
-            qdf = self.spark.createDataFrame([tuple(m.values()) for m in meta], QUERY_SCHEMA)
+            qdf = self.spark.createDataFrame(
+                [tuple(m[c] for c in QUERY_COLS) for m in meta], QUERY_SCHEMA
+            )
             rows = [
                 r.asDict()
                 for r in retrieve_batch_multi(

@@ -231,7 +231,9 @@ def rich_store(store):
 
 
 def _spark_rows(spark, store, meta):
-    qdf = spark.createDataFrame([tuple(m.values()) for m in meta], R.QUERY_SCHEMA)
+    qdf = spark.createDataFrame(
+        [tuple(m[c] for c in R.QUERY_COLS) for m in meta], R.QUERY_SCHEMA
+    )
     return [
         r.asDict()
         for r in R.retrieve_batch_multi(
@@ -259,6 +261,7 @@ def test_snapshot_matches_spark_path_all_scopes(spark, rich_store):
         )
     ]
     meta = GraphRAGAgent._query_meta(entries)
+    assert all(tuple(m) == R.QUERY_COLS for m in meta)
     snap = R.store_snapshot(rich_store)
     assert snap is not None
     got = snap.retrieve(meta)

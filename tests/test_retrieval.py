@@ -247,6 +247,40 @@ def test_null_vector_element_scores_null(spark):
     ]
 
 
+def test_bound_verdict_ships_no_rows(spark, tmp_path, monkeypatch):
+    """Below the bound a parquet store loads with one job, its footers
+    having counted it. Above the bound a store is found so before any
+    body or vector reaches the driver — by its footers, or by a count
+    of row_ids when it has no file list — and keeps the Spark path. A
+    filter the footers over-count is settled by that count."""
+    from githubrepostorag_spark.operators import retrieval as R
+
+    rows = [(f"r{i}", [float(i), 1.0, 0.0]) for i in range(6)]
+    path = str(tmp_path / "store")
+    _tiny_store(spark, rows).write.parquet(path)
+    assert R._footer_rows(spark.read.parquet(path)) == 6
+    assert R._footer_rows(_tiny_store(spark, rows)) is None
+    fresh = spark.read.parquet(path)
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-load", "snapshot-load")
+    try:
+        assert R.store_snapshot(fresh) is not None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("snapshot-load")) == 1
+
+    monkeypatch.setattr(R, "snapshot_bound", lambda spark: 5)
+    snap = R.store_snapshot(spark.read.parquet(path).filter("row_id < 'r3'"))
+    assert snap is not None and len(snap.docs["row_id"]) == 3
+
+    def no_load(self):
+        raise AssertionError("an above-bound store shipped to the driver")
+
+    monkeypatch.setattr(type(_tiny_store(spark, rows)), "toArrow", no_load)
+    assert R.store_snapshot(spark.read.parquet(path)) is None
+    assert R.store_snapshot(_tiny_store(spark, rows)) is None
+
+
 def test_mixed_query_dims_raise_value_error(spark):
     """A batch whose query vectors differ in length is refused with
     ValueError (an assert would vanish under ``python -O``)."""
