@@ -35,11 +35,31 @@ import json
 import os
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from githubrepostorag_spark.plans.agent import GraphRAGAgent
 
 QUERY_SCHEMA = "job_id string, query string, namespace string, force_level string"
+ANSWER_SCHEMA = pa.schema(
+    [("job_id", pa.string()), ("answer", pa.string()),
+     ("scope", pa.string()), ("sources", pa.string())]
+)
+EVENT_SCHEMA = pa.schema(
+    [("job_id", pa.string()), ("seq", pa.int32()),
+     ("event", pa.string()), ("data", pa.string())]
+)
+
+
+def _append(spark: SparkSession, rows: list[tuple], schema: pa.Schema, path: str) -> None:
+    """Append `rows` (tuples in `schema` order) to the parquet sink at
+    `path` as one file. The rows are control-plane small (one per job or
+    event of a trigger), so they ship to the JVM as one Arrow table and
+    are written by one task: a list of tuples is pickled and unpickled
+    row by row, then written as one file per core, which made the two
+    appends the slowest and least steady step of a trigger."""
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+    spark.createDataFrame(table).coalesce(1).write.mode("append").parquet(path)
 
 
 class CancelFlags:
@@ -127,12 +147,8 @@ def run_job_stream(
                     event_rows.append(
                         (e.pop("job_id"), e.pop("seq"), e.pop("event"), json.dumps(e, default=str))
                     )
-        spark.createDataFrame(
-            answer_rows, "job_id string, answer string, scope string, sources string"
-        ).write.mode("append").parquet(answers_path)
-        spark.createDataFrame(
-            event_rows, "job_id string, seq int, event string, data string"
-        ).write.mode("append").parquet(events_path)
+        _append(spark, answer_rows, ANSWER_SCHEMA, answers_path)
+        _append(spark, event_rows, EVENT_SCHEMA, events_path)
 
     writer = (
         queries.writeStream.foreachBatch(process_batch)

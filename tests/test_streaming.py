@@ -69,6 +69,14 @@ def test_job_stream_end_to_end(spark, store, tmp_path):
     assert json.loads(answers["s1"]["sources"])  # non-empty source list
     assert answers["s3"]["answer"] == ""  # cancelled → empty final
 
+    # one trigger appends one file to each sink, in the sinks' schemas
+    for sink, ddl in (
+        ("answers", "job_id string, answer string, scope string, sources string"),
+        ("events", "job_id string, seq int, event string, data string"),
+    ):
+        assert len(list((tmp_path / sink).glob("part-*.parquet"))) == 1
+        assert spark.read.parquet(str(tmp_path / sink)).schema == spark.createDataFrame([], ddl).schema
+
     events = spark.read.parquet(str(tmp_path / "events"))
     s1_events = [
         r["event"]
