@@ -10,30 +10,33 @@ collect `adjacent_k` per hop, return ≤`k` by score. Per-scope params:
     file:                   k=8,  start_k=2, adjacent_k=6, max_depth=2
     code (chunk table):     k=10, start_k=3, adjacent_k=8, max_depth=2
 
-Engine shape, two paths with the same answers:
+One ranker, run in the driver or per query in Spark. For one query
+over a block of store rows, `_candidates` keeps the rows that pass the
+query's filters (namespace/repo/module equality, topics membership)
+and `_walk` ranks them: seed the top `start_k`, expand ≤`max_depth`
+hops to the top `adjacent_k` unseen rows sharing an edge key with the
+last hop, keep the top `k` reached. Scores come from one kernel
+(`_dot_dimseq`: dim-sequential float64 accumulation, bit-identical to
+`V.dot`) rounded like `F.round(score, 6)` (`_round6`); ranks are score
+desc NULLS LAST, then row_id asc. Queries score with their `qvec` as
+given.
 
 - Snapshot (serving stores up to a driver bound): `store_snapshot`
   loads the slim store — vectors as float64, edge keys, topics, doc
   columns — into the driver ONCE per store DataFrame with one job, and
-  `StoreSnapshot.retrieve` runs seed → ≤2 hops → top-k → doc fetch for
-  a whole mixed-scope batch in numpy. No Spark job runs per call. The
-  bound is `session.driver_bound_rows` at the measured peak bytes per
+  `StoreSnapshot.retrieve` ranks a whole mixed-scope batch and fetches
+  its docs by position in numpy. No Spark job runs per call. The bound
+  is `session.driver_bound_rows` at the measured peak bytes per
   snapshot row (`snapshot_bound`). A store above it stays on the Spark
   path, and is found above it before any body ships: by its parquet
   footers, else by a count of row_ids. A DataFrame's file list is
   fixed when it is created, so a snapshot sees exactly what a scan of
   the same DataFrame would.
-- Spark (`retrieve_batch_multi`): queries hash-join the scope
-  partitions (partition-pruned, filter pushdown), score = dot on unit
-  vectors into a narrow cached (query_id, row_id, edge keys, score)
-  table, then a bounded driver loop walks the hops: each ≤batch×k
-  frontier row set is pushed back as literal isin predicates over the
-  cached scores, and the final ≤k ids fetch doc bodies with one
-  broadcast hash join. The store never shuffles.
-
-Both score with one kernel (`_dot_dimseq`: dim-sequential float64
-accumulation, bit-identical to the JVM fold) and round like
-`F.round(score, 6)`; both rank score desc NULLS LAST, then row_id asc.
+- Spark (`retrieve_batch_multi`): one plan. A `mapInArrow` pass scores
+  each store row against the whole query block and emits each query's
+  candidates as slim (query_id, row_id, edge keys, score) rows;
+  `groupBy("query_id").applyInArrow` walks each query's rows; the ≤k
+  ids per query fetch their doc columns with one broadcast hash join.
 """
 
 from __future__ import annotations
@@ -49,10 +52,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from githubrepostorag_spark.functions import vectors as V
 from githubrepostorag_spark.session import driver_bound_rows
 
 FILTER_KEYS = ("namespace", "repo", "module")
@@ -96,15 +98,14 @@ _DOC_COLS = (
     "topics",
 )
 
-# per-query ranking params carried as columns on the query batch — the
-# driver reads them (via query_meta or a collect) so queries against
-# DIFFERENT scopes (different k/start_k/adjacent_k) rank correctly
-# inside one shared job
+# per-query ranking params carried as columns on the query batch, so
+# queries against DIFFERENT scopes (different k/start_k/adjacent_k)
+# rank correctly inside one shared plan
 _PARAM_COLS = ("p_k", "p_start_k", "p_adjacent_k", "p_max_depth")
 
 # slim scoring schema: ranking + hop expansion need only ids, edge
 # keys, and the score — doc bodies are fetched once for the final ≤k
-# rows, so the cached score table stays narrow at any store size
+# rows, so the shuffled score rows stay narrow at any store size
 _SLIM_COLS = ("row_id", "namespace", "repo", "module", "file_path")
 
 
@@ -133,100 +134,20 @@ def with_scope_params(
     )
 
 
-def _or_tree(conds: list):
-    """Balanced OR of a condition list. A left-deep ``c0 | c1 | ...``
-    fold nests O(n) deep and overflows the JVM stack during
-    Column→Expression conversion at ~1000 branches (observed with a
-    1000-query burst batch); pairwise reduction keeps the tree
-    log₂(n) deep, so batch size is bounded by plan-analysis cost, not
-    by stack depth."""
-    while len(conds) > 1:
-        conds = [
-            conds[i] | conds[i + 1] if i + 1 < len(conds) else conds[i]
-            for i in range(0, len(conds), 2)
-        ]
-    return conds[0]
-
-
-def _scored(
-    store: DataFrame,
-    queries: DataFrame,
-    query_meta: list[dict] | None = None,
-) -> DataFrame:
-    """All (query × candidate) scores under the query's filters (SURVEY
-    F10). Vectors are unit-normalized at write → cosine == dot.
-
-    Scale plan: a single null-or-equal join over every filter key is a
-    non-equi predicate, which Spark can only execute as a broadcast
-    nested-loop over the whole scope partition. Instead the (tiny)
-    query batch is split by WHICH filter keys are non-null — one tiny
-    driver-side pass over the query rows — and each group joins the
-    store on scope + its equality keys as a broadcast HASH join (the
-    store side never shuffles; provided keys prune candidates before
-    any vector math). The scope column is always an equality key, so
-    even the filterless group hash-joins instead of nested-looping.
-    `flt_topics` is a list-membership test, applied post-join per group.
-    """
-    meta_rows = (
-        query_meta
-        if query_meta is not None
-        else queries.select(
-            "query_id", *[f"flt_{k}" for k in FILTER_KEYS], "flt_topics", "q_scope"
-        ).collect()
-    )
-    # static scan pruning to the scopes this batch touches
-    scopes = sorted({r["q_scope"] for r in meta_rows})
-    groups: dict[tuple[str, ...], list[str]] = {}
-    topic_ids = set()
-    for r in meta_rows:
-        keys = tuple(k for k in FILTER_KEYS if r[f"flt_{k}"] is not None)
-        groups.setdefault(keys, []).append(r["query_id"])
-        if r["flt_topics"] is not None:
-            topic_ids.add(r["query_id"])
-
-    out: DataFrame | None = None
-    st = store.filter(F.col("scope").isin(scopes)).alias("s")
-    for keys, qids in groups.items():
-        q = F.broadcast(queries.filter(F.col("query_id").isin(qids)).alias("q"))
-        cond = F.col("s.scope") == F.col("q.q_scope")
-        for k in keys:
-            cond = cond & (F.col(f"s.{k}") == F.col(f"q.flt_{k}"))
-        joined = st.join(q, cond)
-        if topic_ids.intersection(qids):
-            joined = joined.filter(
-                F.col("q.flt_topics").isNull()
-                | F.array_contains(
-                    F.coalesce(F.col("s.topics"), F.array()), F.col("q.flt_topics")
-                )
-            )
-        part = joined.select(
-            F.col("q.query_id").alias("query_id"),
-            *[F.col(f"s.{c}").alias(c) for c in _SLIM_COLS],
-            F.round(
-                V.dot(V.as_double(F.col("s.vector")), V.as_double(F.col("q.qvec"))), 6
-            ).alias("score"),
-        )
-        out = part if out is None else out.unionByName(part)
-    if out is None:  # empty query batch
-        empty = _scored_schema_like(store, queries)
-        return empty
-    return out
-
-
 def _query_block(qvecs: list) -> np.ndarray:
-    """(queries × dim) float64 block of query vectors, round-tripped
-    through float32 exactly as the array<float> query column stores
-    them. A batch must share one dim."""
+    """(queries × dim) float64 block of query vectors, taken as given
+    (a caller that stores them as array<float> rounds them first). A
+    batch must share one dim."""
     dims = {len(v) for v in qvecs}
     if len(dims) > 1:
         raise ValueError(f"mixed query dims unsupported: {sorted(dims)}")
     dim = dims.pop() if dims else 0
-    return np.asarray(qvecs, dtype=np.float32).astype(np.float64).reshape(len(qvecs), dim)
+    return np.asarray(qvecs, dtype=np.float64).reshape(len(qvecs), dim)
 
 
 def _vector_block(vecs: pa.Array | pa.ChunkedArray, dim: int) -> tuple[np.ndarray, np.ndarray]:
     """(valid, M) for an Arrow column of store vectors: `valid` marks
-    the rows the JVM fold scores — vector non-NULL, `dim` long, no NULL
+    the rows `V.dot` scores non-NULL — vector non-NULL, `dim` long, no NULL
     element (zip_with pads a short side with NULL, and a NULL product
     poisons the aggregate) — and M holds those rows as (n_valid × dim)
     float64. Every other row scores NULL."""
@@ -245,9 +166,9 @@ def _vector_block(vecs: pa.Array | pa.ChunkedArray, dim: int) -> tuple[np.ndarra
 def _dot_dimseq(M: np.ndarray, Q: np.ndarray) -> np.ndarray:
     """(rows × queries) dot products, accumulated dim-sequentially in
     float64 (acc += v[:, i] * q[i], no fused multiply-add): per element
-    the JVM fold's exact left-to-right order, so scores are
-    bit-identical to `V.dot`. A Fortran-ordered M makes each column
-    read contiguous."""
+    the exact left-to-right order of `V.dot`'s JVM fold, so scores are
+    bit-identical to it. A Fortran-ordered M makes each column read
+    contiguous."""
     S = np.zeros((M.shape[0], Q.shape[0]), dtype=np.float64)
     for i in range(Q.shape[1]):
         S += M[:, i : i + 1] * Q[:, i]
@@ -287,392 +208,207 @@ def _round6(x: np.ndarray) -> np.ndarray:
     return out
 
 
-def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
-    """`_scored` computed through the Arrow boundary (guide §4.2/§8):
-    ONE pass over the slim store ships each candidate row into numpy
-    once, scores it against the whole (broadcast-in-closure) query
-    block, and emits exactly the rows the per-group broadcast hash
-    joins would — same filters, same null semantics, bit-identical
-    scores.
+def _scores(valid: np.ndarray, M: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """(rows × queries) scores, each `F.round(V.dot(vector, qvec), 6)`:
+    M holds the `valid` rows' vectors; every other row scores 0 here
+    and NULL to its caller."""
+    S = np.zeros((len(valid), len(Q)))
+    if valid.any():
+        S[valid] = _round6(_dot_dimseq(M, Q))
+    return S
 
-    Why: the agent's batches are many-queries × small-store, so the
-    join shape evaluates the interpreted `zip_with`+`aggregate` dot
-    fold once per (query, candidate) pair. Here each pair's score comes
-    from the shared `_dot_dimseq` kernel; rows `_vector_block` marks
-    invalid (NULL, off-dimension, or holding a NULL element) yield a
-    NULL score. Rounding stays JVM-side (`F.round`) so the decimal
-    discipline is byte-identical to `_scored`'s.
 
-    `meta_rows` must carry ``qvec`` in addition to `_scored`'s meta
-    (the agent passes its own embeddings; `_query_block` round-trips
-    them through float32 exactly as the array<float> query column
-    stores them)."""
-    scopes = sorted({r["q_scope"] for r in meta_rows})
-    # plain-python payload captured by the closure (no DataFrames):
-    # (query_id, scope, {filter key: value}, topics-or-None)
-    payload = [
-        (
-            r["query_id"],
-            r["q_scope"],
-            {k: r[f"flt_{k}"] for k in FILTER_KEYS if r[f"flt_{k}"] is not None},
-            r["flt_topics"],
+# ------------------------------------------------------------ ranker
+
+
+def _codes(values: list) -> tuple[np.ndarray, dict]:
+    """Integer codes of a string column (NULL → -1) and its value → code map."""
+    index: dict = {}
+    codes = np.fromiter(
+        (-1 if v is None else index.setdefault(v, len(index)) for v in values),
+        dtype=np.int64,
+        count=len(values),
+    )
+    return codes, index
+
+
+def _ranks(row_ids: list) -> np.ndarray:
+    """Sort rank of each row_id (equal ids share a rank)."""
+    return np.unique(np.asarray(row_ids, dtype=object), return_inverse=True)[1].reshape(-1)
+
+
+def _candidates(m: dict, codes: dict[str, np.ndarray], index: dict[str, dict],
+                topics: list, topic_masks: dict[str, np.ndarray]) -> np.ndarray:
+    """The rows of a block that pass query `m`'s filters: each non-NULL
+    flt_namespace/flt_repo/flt_module equals the row's key (`codes`
+    and their value → code `index`), and a non-NULL flt_topics is in
+    the row's topics. `topic_masks` caches one mask per topic for the
+    block."""
+    cand = np.ones(len(topics), dtype=bool)
+    for k in FILTER_KEYS:
+        v = m[f"flt_{k}"]
+        if v is not None:
+            cand &= codes[k] == index[k].get(v, -2)
+    topic = m["flt_topics"]
+    if topic is not None:
+        if topic not in topic_masks:
+            topic_masks[topic] = np.fromiter(
+                (topic in (t or []) for t in topics), dtype=bool, count=len(topics)
+            )
+        cand &= topic_masks[topic]
+    return cand
+
+
+def _top(idx: np.ndarray, score: np.ndarray, null: np.ndarray, rid: np.ndarray, n: int) -> np.ndarray:
+    """The first `n` of `idx` by score desc NULLS LAST, then row_id asc
+    (`rid` is row_id's sort rank); ties keep `idx` order."""
+    order = np.lexsort((rid[idx], -np.where(null[idx], 0.0, score[idx]), null[idx]))
+    return idx[order[:n]]
+
+
+def _walk(m: dict, score: np.ndarray, null: np.ndarray, codes: dict[str, np.ndarray],
+          rid: np.ndarray, cand: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Seed → ≤p_max_depth hops → top p_k for query `m` over one block
+    of rows (`score` with its NULL mask, edge-key `codes`, row_id ranks
+    `rid`, filter mask `cand`): the positions of its hits, ranked, and
+    the hop that reached each. A hop keeps the top p_adjacent_k unseen
+    candidates sharing a non-NULL edge key with the previous hop."""
+    frontier = _top(np.flatnonzero(cand), score, null, rid, m["p_start_k"])
+    reached = [frontier]
+    hops = [np.zeros(len(frontier), dtype=np.int64)]
+    for depth in range(1, m["p_max_depth"] + 1):
+        edge = np.zeros(len(cand), dtype=bool)
+        for k in EDGE_KEYS:
+            vals = codes[k][frontier]
+            vals = vals[vals >= 0]
+            if vals.size:
+                edge |= np.isin(codes[k], vals)
+        if not edge.any():
+            break
+        seen = rid[np.concatenate(reached)]
+        frontier = _top(
+            np.flatnonzero(cand & edge & ~np.isin(rid, seen)),
+            score, null, rid, m["p_adjacent_k"],
         )
-        for r in meta_rows
-    ]
-    Q = _query_block([r["qvec"] for r in meta_rows])
-    dim = Q.shape[1]
+        if not frontier.size:
+            break
+        reached.append(frontier)
+        hops.append(np.full(len(frontier), depth, dtype=np.int64))
+    idx, hop = np.concatenate(reached), np.concatenate(hops)
+    order = _top(np.arange(len(idx)), score[idx], null[idx], rid[idx], m["p_k"])
+    return idx[order], hop[order]
 
+
+# ------------------------------------------------------------ spark path
+
+_IDS_SCHEMA = "query_id string, row_id string, score double, hop int"
+
+
+def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
+    """Every query's candidates as slim (query_id, row_id, edge keys,
+    score) rows, in ONE `mapInArrow` pass over the slim store: each
+    store row ships into numpy once, is scored against the whole
+    (closure-captured) query block by `_scores`, and is kept for each
+    query of its scope whose filters it passes (`_candidates`). Rows
+    `_vector_block` marks invalid (NULL, off-dimension, or holding a
+    NULL element) score NULL.
+
+    `meta_rows` are query dicts keyed by `QUERY_COLS`."""
+    scopes = sorted({r["q_scope"] for r in meta_rows})
+    meta = [{c: r[c] for c in QUERY_COLS if c != "qvec"} for r in meta_rows]
+    Q = _query_block([r["qvec"] for r in meta_rows])
+    qids = pa.array([r["query_id"] for r in meta_rows], type=pa.string())
     slim = store.filter(F.col("scope").isin(scopes)).select(
         "scope", *_SLIM_COLS, "topics", "vector"
     )
 
     def score_batches(batches):
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
-            cols = {c: batch.column(c).to_pylist() for c in ("scope", *_SLIM_COLS, "topics")}
-            valid, M = _vector_block(batch.column("vector"), dim)
-            S = _dot_dimseq(np.asfortranarray(M), Q)
-            valid_pos = np.cumsum(valid) - 1  # row idx -> M/S row
-            scope_arr = np.asarray(cols["scope"], dtype=object)
-            key_arrs = {
-                k: np.asarray(cols[k], dtype=object) for k in FILTER_KEYS
-            }
-            topics_masks: dict[str, np.ndarray] = {}
-            out_cols: dict[str, list] = {c: [] for c in ("query_id", *_SLIM_COLS)}
-            out_scores: list = []
-            src = {c: np.asarray(cols[c], dtype=object) for c in _SLIM_COLS}
-            for qi, (qid, qscope, flt, topics_val) in enumerate(payload):
-                mask = scope_arr == qscope
-                for k, v in flt.items():
-                    mask = mask & (key_arrs[k] == v)
-                if topics_val is not None:
-                    tm = topics_masks.get(topics_val)
-                    if tm is None:
-                        tm = np.fromiter(
-                            (topics_val in (t or []) for t in cols["topics"]),
-                            dtype=bool,
-                            count=n,
-                        )
-                        topics_masks[topics_val] = tm
-                    mask = mask & tm
-                idx = np.nonzero(mask)[0]
-                if idx.size == 0:
-                    continue
-                out_cols["query_id"].extend([qid] * idx.size)
-                for c in _SLIM_COLS:
-                    out_cols[c].extend(src[c][idx].tolist())
-                out_scores.extend(
-                    float(S[valid_pos[j], qi]) if valid[j] else None
-                    for j in idx
-                )
-            if not out_scores:
+            valid, M = _vector_block(batch.column("vector"), Q.shape[1])
+            S = _scores(valid, np.asfortranarray(M), Q)
+            keys = {k: _codes(batch.column(k).to_pylist()) for k in FILTER_KEYS}
+            codes = {k: c for k, (c, _) in keys.items()}
+            index = {k: i for k, (_, i) in keys.items()}
+            topics = batch.column("topics").to_pylist()
+            scope = np.asarray(batch.column("scope").to_pylist(), dtype=object)
+            in_scope = {s: scope == s for s in scopes}
+            topic_masks: dict[str, np.ndarray] = {}
+            rows, cols = [], []
+            for qi, m in enumerate(meta):
+                cand = in_scope[m["q_scope"]] & _candidates(m, codes, index, topics, topic_masks)
+                hit = np.flatnonzero(cand)
+                rows.append(hit)
+                cols.append(np.full(hit.size, qi))
+            r, c = np.concatenate(rows), np.concatenate(cols)
+            if not r.size:
                 continue
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "query_id": pa.array(out_cols["query_id"], type=pa.string()),
-                    **{
-                        c: pa.array(out_cols[c], type=pa.string())
-                        for c in _SLIM_COLS
-                    },
-                    "score": pa.array(out_scores, type=pa.float64()),
-                }
+            slim_rows = batch.select(list(_SLIM_COLS)).take(r)
+            yield pa.RecordBatch.from_arrays(
+                [qids.take(c), *slim_rows.columns, pa.array(S[r, c], mask=~valid[r])],
+                names=["query_id", *_SLIM_COLS, "score"],
             )
 
-    raw = slim.mapInArrow(
+    return slim.mapInArrow(
         score_batches,
-        "query_id string, "
-        + ", ".join(f"{c} string" for c in _SLIM_COLS)
-        + ", score double",
-    )
-    return raw.select(
-        "query_id", *_SLIM_COLS, F.round(F.col("score"), 6).alias("score")
-    )
-
-
-def _scored_schema_like(store: DataFrame, queries: DataFrame) -> DataFrame:
-    st = store.alias("s")
-    q = queries.alias("q")
-    return (
-        st.crossJoin(q)
-        .select(
-            F.col("q.query_id").alias("query_id"),
-            *[F.col(f"s.{c}").alias(c) for c in _SLIM_COLS],
-            F.lit(0.0).alias("score"),
-        )
-        .limit(0)
-    )
-
-
-@dataclass
-class IvfIndex:
-    """Coarse-quantization index over one store scope: a sampled
-    codebook plus per-row cell assignments (both precomputed once per
-    store version — the engine analog of the reference's SAI index
-    build at write time)."""
-
-    centroids: DataFrame  # (cell long, centroid array<double>)
-    assignments: DataFrame  # (row_id string, cell long)
-
-
-def build_ivf_index(store: DataFrame, n_cells: int = 16) -> IvfIndex:
-    """Deterministic IVF codebook: the `n_cells` lowest-row_id vectors
-    seed the cells; every row is assigned to its nearest centroid.
-
-    One broadcast of the tiny codebook; the store scan never shuffles.
-    (A k-means refinement loop slots in here without changing the
-    index shape.)
-    """
-    # orderBy+limit = TakeOrderedAndProject (top-k per partition + merge,
-    # no global sort); the row_number window then runs over n_cells rows
-    seeds = store.select("row_id", "vector").orderBy("row_id").limit(n_cells)
-    cents = (
-        seeds.withColumn("rn", F.row_number().over(Window.orderBy("row_id")))
-        .select(
-            (F.col("rn") - 1).cast("long").alias("cell"),
-            V.as_double("vector").alias("centroid"),
-        )
-    )
-    scored = store.select("row_id", "vector").crossJoin(F.broadcast(cents)).select(
-        "row_id", "cell", V.dot(V.as_double("vector"), F.col("centroid")).alias("sim")
-    )
-    wa = Window.partitionBy("row_id").orderBy(F.desc("sim"), F.asc("cell"))
-    assignments = (
-        scored.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") == 1)
-        .select("row_id", "cell")
-    )
-    return IvfIndex(centroids=cents, assignments=assignments)
-
-
-def _scored_ivf(
-    store: DataFrame, queries: DataFrame, ivf: IvfIndex, n_probes: int
-) -> DataFrame:
-    """IVF-pruned candidate scoring: each query scores ONLY rows whose
-    cell is among its `n_probes` nearest centroids — the 100 TB serving
-    plan (scan cost ~ n_probes/n_cells of the scope; all joins hash).
-    Equality/topics filters apply on the pruned candidates."""
-    probes = (
-        queries.select("query_id", "qvec")
-        .crossJoin(F.broadcast(ivf.centroids))
-        .select(
-            "query_id", "cell", V.dot(F.col("centroid"), V.as_double("qvec")).alias("sim")
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("cell"))
-            ),
-        )
-        .filter(F.col("rn") <= n_probes)
-        .select("query_id", "cell")
-    )
-    cand = (
-        store.join(ivf.assignments, "row_id")
-        .join(F.broadcast(probes), "cell")
-        .alias("s")
-        .join(F.broadcast(queries.alias("q")), F.col("s.query_id") == F.col("q.query_id"))
-    )
-    filt = F.lit(True)
-    for k in FILTER_KEYS:
-        filt = filt & (F.col(f"q.flt_{k}").isNull() | (F.col(f"s.{k}") == F.col(f"q.flt_{k}")))
-    filt = filt & (
-        F.col("q.flt_topics").isNull()
-        | F.array_contains(F.coalesce(F.col("s.topics"), F.array()), F.col("q.flt_topics"))
-    )
-    return cand.filter(filt).select(
-        F.col("s.query_id").alias("query_id"),
-        *[F.col(f"s.{c}").alias(c) for c in _SLIM_COLS],
-        F.round(V.dot(V.as_double(F.col("s.vector")), V.as_double(F.col("q.qvec"))), 6).alias(
-            "score"
-        ),
+        "query_id string, " + ", ".join(f"{c} string" for c in _SLIM_COLS) + ", score double",
     )
 
 
 def retrieve_batch_multi(
     store: DataFrame,
     queries: DataFrame,
-    ivf: dict[str, IvfIndex] | None = None,
-    n_probes: int = 3,
     query_meta: list[dict] | None = None,
-    max_depth: int = 2,
-    np_kernel: bool = False,
 ) -> DataFrame:
     """Seed-and-expand retrieval for a batch of queries spanning ANY mix
-    of scopes — the whole batch runs as ONE Spark job.
+    of scopes, as one Spark plan: `_scored_np` scores, then
+    `groupBy("query_id").applyInArrow` runs `_walk` over each query's
+    candidates, then `_fetch_docs` joins the ranked ids to their doc
+    columns. Returns ≤p_k rows per query (more only for a duplicated
+    row_id) with hop + score, score-desc ranked.
 
-    queries: (query_id string, qvec array<float>, flt_namespace,
-    flt_repo, flt_module, flt_topics — nullable strings, q_scope string
-    = TABLE scope, p_k/p_start_k/p_adjacent_k/p_max_depth ints); use
-    `with_scope_params` to attach the last five. Returns ≤p_k rows per
-    query with hop + score, score-desc ranked.
-
-    `ivf` maps TABLE scope → IvfIndex; queries on indexed scopes score
-    only their probe cells (approximate, like the reference's ANN
-    index), the rest score exactly with hash-join filter pruning.
-    The per-hop loop bound is `max_depth` globally with per-query
-    p_max_depth gating, so mixed-depth batches rank correctly. Callers
-    holding filter metadata driver-side (the agent does) pass
-    `query_meta` (with q_scope per row) to skip the metadata collect.
-
-    ``np_kernel``: opt-in vectorized scorer for the exact path — the
-    caller must pass `query_meta` rows that ALSO carry the query's
-    ``qvec``. Scoring then runs as one Arrow pass over the slim store
-    (`_scored_np`): each store row ships through the Python boundary
-    once and is scored against the whole broadcast query block in
-    numpy, instead of being joined and re-scored per query by the
-    interpreted higher-order fold. Scores are bit-identical (see
-    `_scored_np`); rounding stays JVM-side. The agent turns this on —
-    its batches are exactly the many-queries×small-store shape the
-    fold is slowest at. Oracle-parity callers (q40's retrieve_batch)
-    keep the default JVM fold.
-    """
-    ivf = ivf or {}
-    meta_rows = (
+    queries: `QUERY_SCHEMA` columns (query_id, qvec, the nullable
+    flt_namespace/flt_repo/flt_module/flt_topics strings, q_scope =
+    TABLE scope, p_k/p_start_k/p_adjacent_k/p_max_depth ints); use
+    `with_scope_params` to attach the last five. The driver collects
+    them, unless the caller passes the same rows as `query_meta` dicts
+    (the agent does)."""
+    meta = (
         query_meta
         if query_meta is not None
-        else queries.select(
-            "query_id",
-            *[f"flt_{k}" for k in FILTER_KEYS],
-            "flt_topics",
-            "q_scope",
-            *_PARAM_COLS,
-        ).collect()
+        else [r.asDict() for r in queries.select(*QUERY_COLS).collect()]
     )
-    params = {
-        r["query_id"]: (r["p_k"], r["p_start_k"], r["p_adjacent_k"], r["p_max_depth"])
-        for r in meta_rows
-    }
+    scopes = sorted({m["q_scope"] for m in meta})
+    if not meta:
+        return _fetch_docs(store, store.sparkSession.createDataFrame([], _IDS_SCHEMA), scopes)
+    params = {m["query_id"]: {c: m[c] for c in _PARAM_COLS} for m in meta}
 
-    ids_schema = "query_id string, row_id string, score double, hop int"
-    batch_scopes = sorted({r["q_scope"] for r in meta_rows})
-    if not meta_rows:
-        ids = store.sparkSession.createDataFrame([], ids_schema)
-        return _fetch_docs(store, ids, batch_scopes)
-
-    exact_meta = [r for r in meta_rows if r["q_scope"] not in ivf]
-    parts: list[DataFrame] = []
-    if exact_meta:
-        exact_ids = [r["query_id"] for r in exact_meta]
-        sub = queries if not ivf else queries.filter(F.col("query_id").isin(exact_ids))
-        parts.append(
-            _scored_np(store, exact_meta)
-            if np_kernel
-            else _scored(store, sub, exact_meta)
+    def walk(table: pa.Table) -> pa.Table:
+        score = table.column("score")
+        idx, hop = _walk(
+            params[table.column("query_id")[0].as_py()],
+            score.fill_null(0.0).to_numpy(),
+            score.is_null().to_numpy(),
+            {k: _codes(table.column(k).to_pylist())[0] for k in EDGE_KEYS},
+            _ranks(table.column("row_id").to_pylist()),
+            np.ones(table.num_rows, dtype=bool),
         )
-    for tscope, index in ivf.items():
-        qids = [r["query_id"] for r in meta_rows if r["q_scope"] == tscope]
-        if not qids:
-            continue
-        sub = queries.filter(F.col("query_id").isin(qids))
-        parts.append(
-            _scored_ivf(store.filter(F.col("scope") == tscope), sub, index, n_probes)
+        return table.select(["query_id", "row_id", "score"]).take(idx).append_column(
+            "hop", pa.array(hop, type=pa.int32())
         )
-    scored = parts[0]
-    for p in parts[1:]:
-        scored = scored.unionByName(p)
-    # the slim score table is scanned once per hop plus once for seeds;
-    # cap its cached partition count at cluster parallelism (coalesce is
-    # narrow — no shuffle) so those rescans don't pay per-partition task
-    # overhead proportional to the store's write-time partitioning
-    n_slots = store.sparkSession.sparkContext.defaultParallelism
-    scored = scored.coalesce(max(1, n_slots)).cache()
-    try:
-        # --- seeds: one job ranks every query's top start_k ---
-        max_start = max(p[1] for p in params.values())
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("row_id"))
-        seed_rows = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= max_start)
-            .drop("rn")
-            .collect()
-        )
-        by_q: dict[str, list] = {}
-        for r in seed_rows:
-            by_q.setdefault(r["query_id"], []).append(r)
 
-        def rank_key(r):
-            # Spark desc() is NULLS LAST; mirror it driver-side
-            return (r["score"] is None, -(r["score"] or 0.0), r["row_id"])
-        reached: dict[str, list[tuple]] = {}  # qid -> [(row_id, score, hop)]
-        frontier: dict[str, list] = {}
-        for qid, (k, start_k, adj_k, depth_q) in params.items():
-            top = sorted(by_q.get(qid, []), key=rank_key)[:start_k]
-            reached[qid] = [(r["row_id"], r["score"], 0) for r in top]
-            frontier[qid] = top
-
-        # --- hops: the frontier is ≤ batch×k rows by construction, so
-        # it travels driver→executors as literal isin predicates over
-        # the cached slim score table — no broadcast joins, no
-        # re-computation of prior hops (the old lineage-recursive plan
-        # re-ran hop N-1's subplan once per later reference) ---
-        for depth in range(1, max_depth + 1):
-            conds = []
-            active_adj: dict[str, int] = {}
-            for qid, (k, start_k, adj_k, depth_q) in params.items():
-                fr = frontier.get(qid) or []
-                if depth > depth_q or not fr:
-                    continue
-                key_sets = {
-                    key: sorted({r[key] for r in fr if r[key] is not None})
-                    for key in EDGE_KEYS
-                }
-                edge_cond = None
-                for key, vals in key_sets.items():
-                    if not vals:
-                        continue
-                    c = F.col(key).isin(vals)
-                    edge_cond = c if edge_cond is None else edge_cond | c
-                if edge_cond is None:
-                    continue
-                seen_ids = [row_id for row_id, _, _ in reached[qid]]
-                conds.append(
-                    (F.col("query_id") == qid)
-                    & edge_cond
-                    & ~F.col("row_id").isin(seen_ids)
-                )
-                active_adj[qid] = adj_k
-            if not conds:
-                break
-            cond = _or_tree(conds)
-            max_adj = max(active_adj.values())
-            hop_rows = (
-                scored.filter(cond)
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= max_adj)
-                .drop("rn")
-                .collect()
-            )
-            hop_by_q: dict[str, list] = {}
-            for r in hop_rows:
-                hop_by_q.setdefault(r["query_id"], []).append(r)
-            frontier = {}
-            for qid, adj_k in active_adj.items():
-                top = sorted(hop_by_q.get(qid, []), key=rank_key)[:adj_k]
-                reached[qid].extend((r["row_id"], r["score"], depth) for r in top)
-                frontier[qid] = top
-
-        # --- final: rank ≤k per query driver-side, fetch doc columns once ---
-        final: list[tuple] = []
-        for qid, (k, _, _, _) in params.items():
-            rows = sorted(
-                reached.get(qid, []), key=lambda t: (t[1] is None, -(t[1] or 0.0), t[0])
-            )[:k]
-            final.extend((qid, row_id, score, hop) for row_id, score, hop in rows)
-        ids = store.sparkSession.createDataFrame(final, ids_schema)
-        return _fetch_docs(store, ids, batch_scopes)
-    finally:
-        scored.unpersist()
+    ids = _scored_np(store, meta).groupBy("query_id").applyInArrow(walk, _IDS_SCHEMA)
+    return _fetch_docs(store, ids, scopes)
 
 
 def _fetch_docs(store: DataFrame, ids: DataFrame, scopes: list[str] | None = None) -> DataFrame:
     """Join the (tiny) ranked id list back to the store for doc columns.
     row_id is meant to be unique (sha1 over scope|keys); the scope
     filter keeps partition pruning in the fetch scan. A duplicated
-    chunk row_id fans out here, past k rows for its query; the join
-    stays because q40's oracle joins the same way. `StoreSnapshot`
-    fetches by position instead."""
+    chunk row_id fans out here, past k rows for its query (q40's oracle
+    ranks ids only, over a fixture whose ids are unique).
+    `StoreSnapshot` fetches by position instead."""
     if scopes:
         store = store.filter(F.col("scope").isin(scopes))
     s = store.alias("s")
@@ -685,8 +421,10 @@ def _fetch_docs(store: DataFrame, ids: DataFrame, scopes: list[str] | None = Non
             F.col("i.score").alias("score"),
             F.col("i.hop").alias("hop"),
         )
-        # callers read rows score-desc (V5); the result is ≤k×batch rows
-        .orderBy(F.desc("score"), F.asc("row_id"))
+        # callers read rows score-desc (V5); the result is ≤k×batch
+        # rows, so one partition sorts them without a range sample
+        .repartition(1)
+        .sortWithinPartitions(F.desc("score"), F.asc("row_id"))
     )
 
 
@@ -709,35 +447,18 @@ def snapshot_bound(spark: SparkSession) -> int:
     return driver_bound_rows(spark, bytes_per_row=_SNAPSHOT_ROW_BYTES, floor=0)
 
 
-def _codes(values: list) -> tuple[np.ndarray, dict]:
-    """Integer codes of a string column (NULL → -1) and its value → code map."""
-    index: dict = {}
-    codes = np.fromiter(
-        (-1 if v is None else index.setdefault(v, len(index)) for v in values),
-        dtype=np.int64,
-        count=len(values),
-    )
-    return codes, index
-
-
-def _top(idx: np.ndarray, score: np.ndarray, null: np.ndarray, rid: np.ndarray, n: int) -> np.ndarray:
-    """The first `n` of `idx` by score desc NULLS LAST, then row_id asc
-    (`rid` is row_id's sort rank); ties keep `idx` order."""
-    order = np.lexsort((rid[idx], -np.where(null[idx], 0.0, score[idx]), null[idx]))
-    return idx[order[:n]]
-
-
 @dataclass
 class _ScopeBlock:
     """One scope's rows: store positions, NULL-score mask, float64
-    vectors of the scored rows (Fortran order), edge-key codes, and
-    row_id sort ranks."""
+    vectors of the scored rows (Fortran order), edge-key codes, row_id
+    sort ranks, and topics."""
 
     pos: np.ndarray
     null: np.ndarray
     M: np.ndarray
     codes: dict[str, np.ndarray]
     rid: np.ndarray
+    topics: list
 
 
 class StoreSnapshot:
@@ -754,8 +475,7 @@ class StoreSnapshot:
         m_row = np.cumsum(valid) - 1
         keys = {k: _codes(docs[k]) for k in EDGE_KEYS}
         self.index = {k: index for k, (_, index) in keys.items()}  # value → code
-        rid = np.unique(np.asarray(docs["row_id"], dtype=object), return_inverse=True)[1]
-        rid = rid.reshape(-1)
+        rid = _ranks(docs["row_id"])
         scopes = np.asarray(docs["scope"], dtype=object)
         self.blocks: dict[str, _ScopeBlock] = {}
         for scope in {s for s in docs["scope"] if s is not None}:
@@ -766,14 +486,13 @@ class StoreSnapshot:
                 M=np.asfortranarray(M[m_row[p[valid[p]]]]),
                 codes={k: c[p] for k, (c, _) in keys.items()},
                 rid=rid[p],
+                topics=[docs["topics"][g] for g in p],
             )
 
     def retrieve(self, meta: list[dict]) -> list[dict]:
-        """`retrieve_batch_multi(..., query_meta=meta, np_kernel=True)`
-        as plain row dicts (query_id, doc columns, score, hop), ≤p_k
-        per query, each query's rows score-desc. Each query walks its
-        own p_max_depth hops (2 in every `SCOPE_PARAMS` entry, which is
-        also `retrieve_batch_multi`'s default cap)."""
+        """`retrieve_batch_multi(..., query_meta=meta)` as plain row
+        dicts (query_id, doc columns, score, hop), ≤p_k per query, each
+        query's rows score-desc."""
         out: list[dict] = []
         if not meta:
             return out
@@ -785,66 +504,22 @@ class StoreSnapshot:
             b = self.blocks.get(scope)
             if b is None:
                 continue
-            S = np.zeros((len(b.pos), len(js)))
-            if Q.shape[1] == self.dim:
-                null = b.null
-                S[~null] = _round6(_dot_dimseq(b.M, Q[js]))
-            else:  # every store vector is off-dimension: all NULL
-                null = np.ones(len(b.pos), dtype=bool)
+            # an off-dimension query finds every store vector off-dimension
+            null = b.null if Q.shape[1] == self.dim else np.ones(len(b.pos), dtype=bool)
+            S = _scores(~null, b.M, Q[js])
             topic_masks: dict[str, np.ndarray] = {}  # this batch's topics only
             for col, j in enumerate(js):
-                out.extend(self._ranked(meta[j], b, S[:, col], null, topic_masks))
+                m = meta[j]
+                cand = _candidates(m, b.codes, self.index, b.topics, topic_masks)
+                idx, hop = _walk(m, S[:, col], null, b.codes, b.rid, cand)
+                for i, h in zip(idx, hop):
+                    g = b.pos[i]
+                    row = {"query_id": m["query_id"]}
+                    row.update((c, self.docs[c][g]) for c in _DOC_COLS)
+                    row["score"] = None if null[i] else float(S[i, col])
+                    row["hop"] = int(h)
+                    out.append(row)
         return out
-
-    def _ranked(self, m: dict, b: _ScopeBlock, score: np.ndarray,
-                null: np.ndarray, topic_masks: dict[str, np.ndarray]) -> list[dict]:
-        """Seed → ≤p_max_depth hops → top p_k for one query, as
-        `retrieve_batch_multi`'s driver loop ranks them."""
-        cand = np.ones(len(b.pos), dtype=bool)
-        for k in FILTER_KEYS:
-            v = m[f"flt_{k}"]
-            if v is not None:
-                cand &= b.codes[k] == self.index[k].get(v, -2)
-        topic = m["flt_topics"]
-        if topic is not None:
-            if topic not in topic_masks:
-                topics = self.docs["topics"]
-                topic_masks[topic] = np.fromiter(
-                    (topic in (topics[g] or []) for g in b.pos), dtype=bool, count=len(b.pos)
-                )
-            cand &= topic_masks[topic]
-        frontier = _top(np.flatnonzero(cand), score, null, b.rid, m["p_start_k"])
-        reached = [frontier]
-        hops = [np.zeros(len(frontier), dtype=np.int64)]
-        for depth in range(1, m["p_max_depth"] + 1):
-            edge = np.zeros(len(b.pos), dtype=bool)
-            for k in EDGE_KEYS:
-                vals = b.codes[k][frontier]
-                vals = vals[vals >= 0]
-                if vals.size:
-                    edge |= np.isin(b.codes[k], vals)
-            if not edge.any():
-                break
-            seen = b.rid[np.concatenate(reached)]
-            frontier = _top(
-                np.flatnonzero(cand & edge & ~np.isin(b.rid, seen)),
-                score, null, b.rid, m["p_adjacent_k"],
-            )
-            if not frontier.size:
-                break
-            reached.append(frontier)
-            hops.append(np.full(len(frontier), depth, dtype=np.int64))
-        idx, hop = np.concatenate(reached), np.concatenate(hops)
-        order = np.lexsort((b.rid[idx], -np.where(null[idx], 0.0, score[idx]), null[idx]))
-        rows = []
-        for o in order[: m["p_k"]]:
-            i, g = idx[o], b.pos[idx[o]]
-            row = {"query_id": m["query_id"]}
-            row.update((c, self.docs[c][g]) for c in _DOC_COLS)
-            row["score"] = None if null[i] else float(score[i])
-            row["hop"] = int(hop[o])
-            rows.append(row)
-        return rows
 
 
 _SNAPSHOTS: "weakref.WeakKeyDictionary[DataFrame, StoreSnapshot | None]" = (
@@ -911,42 +586,14 @@ def retrieve_batch(
     queries: DataFrame,
     scope: str,
     params: ScopeParams | None = None,
-    ivf: IvfIndex | None = None,
-    n_probes: int = 3,
-    query_meta: list[dict] | None = None,
 ) -> DataFrame:
     """Single-scope convenience wrapper over `retrieve_batch_multi`.
 
-    queries: (query_id string, qvec array<float>, flt_namespace,
+    queries: (query_id string, qvec array<float|double>, flt_namespace,
     flt_repo, flt_module, flt_topics — nullable strings).
     Returns ≤k rows per query with hop + score, score-desc ranked.
     """
-    params = params or SCOPE_PARAMS[scope]
-    tscope = SCOPE_TO_TABLE.get(scope, scope)
-    q2 = with_scope_params(queries, scope, params)
-    meta = (
-        [
-            dict(
-                r,
-                q_scope=tscope,
-                p_k=params.k,
-                p_start_k=params.start_k,
-                p_adjacent_k=params.adjacent_k,
-                p_max_depth=params.max_depth,
-            )
-            for r in query_meta
-        ]
-        if query_meta is not None
-        else None
-    )
-    return retrieve_batch_multi(
-        store,
-        q2,
-        ivf={tscope: ivf} if ivf is not None else None,
-        n_probes=n_probes,
-        query_meta=meta,
-        max_depth=params.max_depth,
-    )
+    return retrieve_batch_multi(store, with_scope_params(queries, scope, params))
 
 
 def mmr_rerank(rows: list[dict], k: int, lambda_mult: float = 0.35) -> list[dict]:

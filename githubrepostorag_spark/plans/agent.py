@@ -26,7 +26,7 @@ are preserved bit-for-bit:
 The loop itself is driver-side (bounded, ≤3 iterations) while every
 retrieval serves the whole query batch at once — from the store's
 driver snapshot when it fits the driver bound, else as one batched
-DataFrame job — the Spark analog of the reference's per-query state
+DataFrame plan — the Spark analog of the reference's per-query state
 machine, amortized across the whole query batch.
 """
 
@@ -38,6 +38,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Any
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from githubrepostorag_spark.functions.embed import EMBED_DIM, embed_text
@@ -169,16 +170,18 @@ class GraphRAGAgent:
     @staticmethod
     def _query_meta(entries: list[tuple[str, str, dict, str]]) -> list[dict]:
         """entries: (query_id, text, filters, agent_scope) → one dict
-        per entry, keyed by `QUERY_COLS`. The scope rides along
-        as a table scope + per-query ranking params, so one list serves
-        a mixed-scope batch."""
+        per entry, keyed by `QUERY_COLS`. The query vector is rounded
+        to float32, as the array<float> `QUERY_SCHEMA` column stores it,
+        so the snapshot and the Spark path score the same vector. The
+        scope rides along as a table scope + per-query ranking params,
+        so one list serves a mixed-scope batch."""
         meta = []
         for qid, text, filters, scope in entries:
             p = SCOPE_PARAMS[scope]
             meta.append(
                 {
                     "query_id": qid,
-                    "qvec": [float(x) for x in embed_text(text, EMBED_DIM)],
+                    "qvec": np.float32(embed_text(text, EMBED_DIM)).tolist(),
                     "flt_namespace": filters.get("namespace"),
                     "flt_repo": filters.get("repo"),
                     "flt_module": filters.get("module"),
@@ -198,8 +201,8 @@ class GraphRAGAgent:
         """ONE retrieval for the whole mixed-scope entry list — every
         scope and every expansion query share it. A store within the
         driver bound answers from its snapshot with no Spark job;
-        a larger one runs one shared Spark plan whose exact scoring
-        goes through the vectorized Arrow kernel (see _scored_np)."""
+        a larger one runs the same ranking as one shared Spark plan
+        (`retrieve_batch_multi`)."""
         out: dict[str, list[dict]] = {qid: [] for qid, _, _, _ in entries}
         if not entries:
             return out
@@ -213,9 +216,7 @@ class GraphRAGAgent:
             )
             rows = [
                 r.asDict()
-                for r in retrieve_batch_multi(
-                    self.store, qdf, query_meta=meta, np_kernel=True
-                ).collect()
+                for r in retrieve_batch_multi(self.store, qdf, query_meta=meta).collect()
             ]
         for d in rows:
             out[d.pop("query_id")].append(d)

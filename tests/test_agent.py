@@ -234,12 +234,7 @@ def _spark_rows(spark, store, meta):
     qdf = spark.createDataFrame(
         [tuple(m[c] for c in R.QUERY_COLS) for m in meta], R.QUERY_SCHEMA
     )
-    return [
-        r.asDict()
-        for r in R.retrieve_batch_multi(
-            store, qdf, query_meta=meta, np_kernel=True
-        ).collect()
-    ]
+    return [r.asDict() for r in R.retrieve_batch_multi(store, qdf, query_meta=meta).collect()]
 
 
 def _key(r):
@@ -252,8 +247,8 @@ def _key(r):
 def test_snapshot_matches_spark_path_all_scopes(spark, rich_store):
     """One mixed-scope batch — four scopes × namespace/repo/module/topics
     filters, zero-hit queries included — returns exactly the rows of
-    the agent's Spark path, ≤k per query. (That path's Arrow scorer
-    equals the JVM fold: `tests/test_retrieval.py`.)"""
+    the agent's Spark path, ≤k per query. (Their scorer equals the
+    inline `V.dot` expression: `tests/test_retrieval.py`.)"""
     entries = [
         (f"q{i}", text, flt, scope)
         for i, (text, flt, scope) in enumerate(

@@ -102,6 +102,7 @@ def test_queries_run_and_match_oracle_sample(spark, duck):
         "q26_simhash",
         "q28_knn_bruteforce",
         "q33_graph_2hop",
+        "q40_retrieve_chunk",
     ]
     for name in sample:
         sdf = qs[name](spark, "/root/testdata/sf0.001").toPandas()

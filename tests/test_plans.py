@@ -46,7 +46,7 @@ def test_store_scan_partition_pruning(spark, tmp_path):
     assert "scope = chunk" in plan.replace("#", " #").replace("(", " ").replace(")", " ") or (
         "scope" in plan and "chunk" in plan
     )
-    # filtered queries join hash-style; column pruning keeps the scan narrow
+    # the ranked ids fetch their doc columns with a broadcast hash join
     assert "BroadcastHashJoin" in plan
 
 

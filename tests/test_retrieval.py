@@ -1,14 +1,17 @@
-"""Retrieval scale-path tests: hash-join filter pruning and the IVF
-ANN index (SURVEY V2/V3 + the reference's SAI-index tactic)."""
+"""Retrieval tests: the one ranker shared by the driver snapshot and
+the Spark path, and its scoring kernel against the inline JVM
+expression `F.round(V.dot(V.as_double(vector), V.as_double(qvec)), 6)`."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from githubrepostorag_spark.functions import vectors as V
 from githubrepostorag_spark.operators.retrieval import (
-    build_ivf_index,
     retrieve_batch,
+    with_scope_params,
 )
 from githubrepostorag_spark.plans.parity import fixture_queries, fixture_store
 from githubrepostorag_spark.sources.testdata import load_table
@@ -31,45 +34,30 @@ def queries(spark):
     return fixture_queries(load_table(spark, SF, "embeddings"))
 
 
-def test_ivf_all_probes_equals_exact(spark, store, queries):
-    """Probing every cell makes the ANN candidate set the full store —
-    the pruned plan must reproduce the exact results bit-for-bit."""
-    ivf = build_ivf_index(store, n_cells=8)
-    exact = {
-        (r["query_id"], r["row_id"], r["score"], r["hop"])
-        for r in retrieve_batch(store, queries, "code").collect()
-    }
-    ann = {
-        (r["query_id"], r["row_id"], r["score"], r["hop"])
-        for r in retrieve_batch(store, queries, "code", ivf=ivf, n_probes=8).collect()
-    }
-    assert ann == exact
+def _jvm_scored(store, queries):
+    """Reference scores, independent of the engine's kernel: the inline
+    JVM expression over a cross join, each query's scope and filters
+    applied here."""
+    s, q = store.alias("s"), queries.alias("q")
+    keep = F.col("s.scope") == F.col("q.q_scope")
+    for k in ("namespace", "repo", "module"):
+        keep &= F.col(f"q.flt_{k}").isNull() | (F.col(f"s.{k}") == F.col(f"q.flt_{k}"))
+    keep &= F.col("q.flt_topics").isNull() | F.array_contains(
+        F.coalesce(F.col("s.topics"), F.array()), F.col("q.flt_topics")
+    )
+    return s.crossJoin(q).filter(keep).select(
+        F.col("q.query_id").alias("query_id"),
+        *[F.col(f"s.{c}").alias(c) for c in ("row_id", "namespace", "repo", "module", "file_path")],
+        F.round(V.dot(V.as_double(F.col("s.vector")), V.as_double(F.col("q.qvec"))), 6).alias(
+            "score"
+        ),
+    )
 
 
-def test_ivf_pruning_subsets_and_overlaps(spark, store, queries):
-    """With fewer probes the candidate set shrinks but stays useful:
-    every ANN hit is a real store row from a probed cell, per-query
-    caps hold, and the seeds overlap the exact top-k substantially."""
-    ivf = build_ivf_index(store, n_cells=8)
-    ann = retrieve_batch(store, queries, "code", ivf=ivf, n_probes=4).collect()
-    per_query: dict[str, list] = {}
-    for r in ann:
-        per_query.setdefault(r["query_id"], []).append(r)
-    assert set(per_query) == {"q0", "q1", "q2"}
-    for qid, rows in per_query.items():
-        assert len(rows) <= 10  # k cap holds under pruning
-        scores = [r["score"] for r in rows]
-        assert scores == sorted(scores, reverse=True)
-    # filtered query only returns rows matching its filter
-    assert all(r["repo"] == "src1" for r in per_query["q1"])
-    # overlap with exact top-k on the unfiltered query
-    exact_ids = {
-        r["row_id"]
-        for r in retrieve_batch(store, queries, "code").collect()
-        if r["query_id"] == "q0"
-    }
-    ann_ids = {r["row_id"] for r in per_query["q0"]}
-    assert len(ann_ids & exact_ids) / len(exact_ids) >= 0.3
+def _same_rows(a, b):
+    assert a.count() == b.count() > 0
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
 
 
 def test_empty_query_batch(spark, store, queries):
@@ -79,57 +67,46 @@ def test_empty_query_batch(spark, store, queries):
 
 
 def test_scored_np_matches_join_kernel(spark, store, queries):
-    """The vectorized Arrow scorer (`_scored_np`, the agent's exact
-    path — r13 optimization) must reproduce the broadcast-join +
-    interpreted-fold scorer row for row, score for score: same
-    candidate multiset under the same filters (multiset equality via
-    two exceptAll probes), including the float32 round-trip the
-    array<float> query column imposes."""
-    from githubrepostorag_spark.operators.retrieval import (
-        _scored,
-        _scored_np,
-        with_scope_params,
-    )
+    """The Arrow scorer (`_scored_np`) emits exactly the reference's
+    rows, score for score, for array<float> queries (the agent's
+    `QUERY_SCHEMA`): same candidate multiset under the same filters."""
+    from githubrepostorag_spark.operators.retrieval import _scored_np
 
     q = with_scope_params(
         queries.withColumn("qvec", F.col("qvec").cast("array<float>")), "code"
     )
+    _same_rows(_scored_np(store, [r.asDict() for r in q.collect()]), _jvm_scored(store, q))
+
+
+def test_double_query_scores_match_jvm_expression(spark, store, queries):
+    """An array<double> query (q40's `fixture_queries`) scores with its
+    vector as given, bit-identical to the reference; rounding it
+    through float32 would change some scores."""
+    from githubrepostorag_spark.operators.retrieval import _scored_np
+
+    q = with_scope_params(queries, "code")
+    assert dict(q.dtypes)["qvec"] == "array<double>"
     meta = [r.asDict() for r in q.collect()]
-    old = _scored(store, q, meta)
-    new = _scored_np(store, meta)
-    assert old.count() == new.count() > 0
-    assert old.exceptAll(new).count() == 0
-    assert new.exceptAll(old).count() == 0
+    scored = _scored_np(store, meta)
+    _same_rows(scored, _jvm_scored(store, q))
+    as_f32 = [dict(m, qvec=np.float32(m["qvec"]).tolist()) for m in meta]
+    assert scored.exceptAll(_scored_np(store, as_f32)).count() > 0
 
 
 def test_retrieve_np_kernel_end_to_end_identical(spark, store, queries):
-    """retrieve_batch_multi(np_kernel=True) — the agent configuration —
-    returns exactly the rows of the default JVM path."""
-    from githubrepostorag_spark.operators.retrieval import (
-        retrieve_batch_multi,
-        with_scope_params,
-    )
+    """`retrieve_batch` — q40's entry, which collects its query rows and
+    array<double> vectors from the caller's columns — returns the rows
+    the driver snapshot ranks for the same queries."""
+    from githubrepostorag_spark.operators.retrieval import store_snapshot
 
-    q = with_scope_params(
-        queries.withColumn("qvec", F.col("qvec").cast("array<float>")), "code"
-    )
-    meta = [r.asDict() for r in q.collect()]
+    meta = [r.asDict() for r in with_scope_params(queries, "code").collect()]
     key = lambda r: (r["query_id"], r["row_id"], r["score"], r["hop"])
-    old = sorted(map(key, retrieve_batch_multi(store, q, query_meta=meta).collect()))
-    new = sorted(
-        map(
-            key,
-            retrieve_batch_multi(
-                store, q, query_meta=meta, np_kernel=True
-            ).collect(),
-        )
-    )
-    assert old == new and len(old) > 0
+    want = sorted(map(key, store_snapshot(store).retrieve(meta)))
+    got = sorted(map(key, retrieve_batch(store, queries, "code").collect()))
+    assert got == want and len(got) > 0
 
 
 def _meta(queries):
-    from githubrepostorag_spark.operators.retrieval import with_scope_params
-
     q = with_scope_params(
         queries.withColumn("qvec", F.col("qvec").cast("array<float>")), "code"
     )
@@ -146,7 +123,7 @@ def _row_key(r):
 
 def test_snapshot_matches_spark_paths(spark, store, queries):
     """The driver snapshot returns exactly the rows — ids, scores, hops
-    and doc columns — of both Spark scorers, and each query's rows come
+    and doc columns — of the Spark path, and each query's rows come
     score-desc."""
     from githubrepostorag_spark.operators.retrieval import (
         retrieve_batch_multi,
@@ -157,11 +134,8 @@ def test_snapshot_matches_spark_paths(spark, store, queries):
     snap = store_snapshot(store)
     assert snap is not None
     got = snap.retrieve(meta)
-    for np_kernel in (False, True):
-        want = retrieve_batch_multi(store, q, query_meta=meta, np_kernel=np_kernel)
-        assert sorted(map(_row_key, got)) == sorted(
-            _row_key(r.asDict()) for r in want.collect()
-        )
+    want = retrieve_batch_multi(store, q, query_meta=meta).collect()
+    assert sorted(map(_row_key, got)) == sorted(_row_key(r.asDict()) for r in want)
     for qid in {r["query_id"] for r in got}:
         scores = [r["score"] for r in got if r["query_id"] == qid]
         assert scores == sorted(scores, reverse=True)
@@ -181,7 +155,7 @@ def test_snapshot_at_most_k_rows_on_duplicated_row_ids(spark, store, queries):
     dup = store.unionByName(store)
     q, meta = _meta(queries)
     got = store_snapshot(dup).retrieve(meta)
-    want = retrieve_batch_multi(dup, q, query_meta=meta, np_kernel=True).collect()
+    want = retrieve_batch_multi(dup, q, query_meta=meta).collect()
     key = lambda r: (r["query_id"], r["row_id"], r["score"], r["hop"])
     assert set(map(key, got)) == set(map(key, want))
     for m in meta:
@@ -209,12 +183,13 @@ def _tiny_meta(qid, qvec, **params):
 
 
 def test_null_vector_element_scores_null(spark):
-    """A vector holding a NULL element scores NULL, as the JVM fold's
+    """A vector holding a NULL element scores NULL, as the reference's
     null-poisoned aggregate does, in the Arrow kernel and the snapshot
     alike — never NaN, which would rank first. NULL and off-dimension
     vectors score NULL too."""
     from githubrepostorag_spark.operators.retrieval import (
-        _scored,
+        QUERY_COLS,
+        QUERY_SCHEMA,
         _scored_np,
         store_snapshot,
     )
@@ -230,12 +205,8 @@ def test_null_vector_element_scores_null(spark):
         ],
     )
     meta = [_tiny_meta("q", [1.0, 0.0, 0.0])]
-    qdf = spark.createDataFrame(
-        [("q", [1.0, 0.0, 0.0], None, None, None, None, "chunk")],
-        "query_id string, qvec array<float>, flt_namespace string, flt_repo string, "
-        "flt_module string, flt_topics string, q_scope string",
-    )
-    fold = {r["row_id"]: r["score"] for r in _scored(st, qdf, meta).collect()}
+    qdf = spark.createDataFrame([tuple(m[c] for c in QUERY_COLS) for m in meta], QUERY_SCHEMA)
+    fold = {r["row_id"]: r["score"] for r in _jvm_scored(st, qdf).collect()}
     arrow = {r["row_id"]: r["score"] for r in _scored_np(st, meta).collect()}
     assert fold == arrow == {"a": 1.0, "b": None, "c": None, "d": None, "e": 0.0}
     # vectors of mixed length keep the Spark path; without "d" the
@@ -305,7 +276,6 @@ def test_round6_matches_spark_round(spark):
     """`_round6` reproduces `F.round(x, 6)` (HALF_UP on the double's
     decimal string) bit for bit on 10⁵+ doubles: scores in [-1, 1],
     exact 6-decimal ties and their neighbours, and wide magnitudes."""
-    import numpy as np
     import pandas as pd
 
     from githubrepostorag_spark.operators.retrieval import _round6
