@@ -21,8 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from githubrepostorag_spark.operators.hierarchy import make_llm_udf
-
 SECTION_SUMMARY_PROMPT = (
     "Write a 2-3 sentence section summary of this code chunk for a "
     "search index.\nContent:{text}"

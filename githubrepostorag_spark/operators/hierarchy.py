@@ -10,41 +10,39 @@ Reference behavior (hierarchy_summary_service.py, catalog_builder.py):
   heuristic fallback) → use README else generate from ≤10 chunk
   summaries (A7)
 
-Engine shape: every rollup is groupBy + sort_array(collect_list(...))
-+ slice + concat + substring — deterministic under any partitioning —
-followed by ONE batched LLM pandas UDF per level. The LLM is the only
-Python in the pipeline and it is Arrow-batched; everything else is
-JVM-side. Shuffles: exactly one per level, keyed on the rollup key.
+Engine shape: every rollup key includes (namespace, repo), so a repo's
+four upper levels need nothing outside the repo. `rollup_hierarchy`
+sends each repo's enriched chunk rows and READMEs to ONE Python call
+(`groupBy("namespace", "repo").applyInArrow(rollup_repo)`: one shuffle
+for all four levels, no window, join or per-level UDF), which runs the
+per-level rules below in memory and returns the repo's chunk rows with
+its file, module, repo and catalog rows — every scope of the repo, for
+one storage projection and one embedding pass. The rules are plain
+Python over row dicts (`file_summaries`, `module_summaries`,
+`repo_overviews`, `catalog_docs`), so the parity plans (q37/q38/q46)
+run the same code against the DuckDB oracle. Member order is Spark's
+ascending order (NULLs first); ids follow `metadata.stable_node_id`.
+The price of one pass: all of a repo's rows sit in one Python worker.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import hashlib
+from collections import defaultdict
+from functools import partial
 
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import from_arrow_schema
+
+from githubrepostorag_spark.llm.stub import sanitize_llm_output
 
 ROLLUP_TRUNCATE = 25_000  # hierarchy_summary_service.py:31,81,157
 MAX_FILES_PER_MODULE = 40  # :107
 MODULE_LIMIT = 10  # :157
 README_LIMIT = 3  # :158
 CATALOG_SUMMARY_LIMIT = 10  # catalog_builder.py:162
-
-
-def make_llm_udf(llm_factory: Callable, template: str):
-    """Batched LLM scalar UDF: prompt = template.format(text=...).
-    Every result passes the L12 sanitizer (reference: llm_init.py:36-48)."""
-    from githubrepostorag_spark.llm.stub import sanitize_llm_output
-
-    @pandas_udf("string")
-    def llm_complete(texts: pd.Series) -> pd.Series:
-        llm = llm_factory()
-        return texts.map(lambda t: sanitize_llm_output(llm.complete(template.format(text=t))))
-
-    return llm_complete
-
 
 FILE_SUMMARY_PROMPT = (
     "Summarize this source file for a code-search index (~200 words). "
@@ -67,164 +65,167 @@ README_JUDGE_PROMPT = (
     "\nREADME:\n{text}"
 )
 
+REPO_KEYS = ("namespace", "repo")
+MODULE_KEYS = (*REPO_KEYS, "module")
+FILE_KEYS = (*MODULE_KEYS, "file_path", "language")
 
-def _limit_per_group(df: DataFrame, keys: list[str], order: list[str], limit: int) -> DataFrame:
-    """Window-rank members and keep ≤limit per group BEFORE collect_list —
-    equivalent to slice(sort_array(collect_list(...)), 1, limit) but the
-    aggregation buffer never materializes an unbounded group (a vendored
-    mega-module can't OOM the rollup)."""
-    w = Window.partitionBy(*keys).orderBy(*[F.asc(c) for c in order])
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= limit).drop("_rn")
+# one row per node of any scope; the columns a scope lacks are NULL
+NODE_SCHEMA = pa.schema(
+    [(c, pa.string()) for c in (*FILE_KEYS, "scope", "component_kind", "node_id", "text")]
+    + [("rollup_of", pa.list_(pa.string())), ("rollup_count", pa.int32()),
+       ("readme_ok", pa.bool_())]
+)
 
 
-def file_rollup_inputs(chunks: DataFrame) -> DataFrame:
-    """A4 pure stage: per-file ordered concat (truncated to 25000) +
-    rollup lineage — everything BEFORE the LLM call, oracle-checkable.
+def node_id(scope: str, namespace, repo, module=None, file_path=None) -> str:
+    """F6 `metadata.stable_node_id` for a node without line span: sha1
+    over the '|'-joined identity fields, NULL joined as ''."""
+    parts = (scope, namespace, repo, module, file_path, None, None)
+    return hashlib.sha1("|".join(p or "" for p in parts).encode()).hexdigest()
 
-    Memory guard: only chunks whose cumulative offset falls inside the
-    25000-char truncation window contribute their TEXT to the collect
-    (later text could never appear in the truncated concat); rollup_of
-    ids — tiny — are collected for every chunk, matching the reference's
-    full lineage.
-    """
-    keys = ["namespace", "repo", "module", "file_path", "language"]
-    # text as the last sort key: synthetic corpora can collide on
-    # (chunk_idx, node_id) — without it the truncation-guard offsets
-    # and the member sort disagree on tie order (seen at sf0.1)
-    w = Window.partitionBy(*keys).orderBy("chunk_idx", "node_id", "text")
-    cum_before = F.coalesce(
-        F.sum(F.length("text") + 2).over(w.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0),
+
+def _order(values) -> tuple:
+    return tuple((v is not None, v) for v in values)
+
+
+def _ranked(rows, keys, order, limit=None):
+    """(key dict, members) per group of `rows` on `keys`, members sorted
+    on `order` and cut to `limit` — `slice(sort_array(collect_list(
+    struct(order))), 1, limit)` per group."""
+    groups = defaultdict(list)
+    for r in rows:
+        groups[tuple(r[k] for k in keys)].append(r)
+    for key in sorted(groups, key=_order):
+        members = sorted(groups[key], key=lambda r: _order(r[c] for c in order))
+        yield dict(zip(keys, key)), members[:limit]
+
+
+def _repo_of(key: dict) -> tuple:
+    return key["namespace"], key["repo"]
+
+
+def _joined(texts) -> str:
+    """array_join(·, "\\n\\n"): NULL members are skipped."""
+    return "\n\n".join(t for t in texts if t is not None)
+
+
+def _complete(llm, template: str, text):
+    if llm is None:  # rollup inputs only (the parity plans)
+        return None
+    return sanitize_llm_output(llm.complete(template.format(text=text)))
+
+
+def _summary(scope, key, rollup_input, members, template, llm, **extra) -> dict:
+    """One summary node: the LLM's summary of `rollup_input` (cut to
+    25000 chars), lineage = the members' ids."""
+    rollup_input = rollup_input[:ROLLUP_TRUNCATE]
+    ids = [m["node_id"] for m in members]
+    return dict(
+        key, **extra, scope=scope, rollup_input=rollup_input,
+        text=_complete(llm, template, rollup_input), rollup_of=ids, rollup_count=len(ids),
+        node_id=node_id(scope, key["namespace"], key["repo"], key.get("module"),
+                        key.get("file_path")),
     )
-    member = F.struct(F.col("chunk_idx"), F.col("node_id"), F.col("text"))
-    id_member = F.struct(F.col("chunk_idx"), F.col("node_id"))
-    grouped = (
-        chunks.withColumn("_cum_before", cum_before)
-        .groupBy(*keys)
-        .agg(
-            F.sort_array(
-                F.collect_list(F.when(F.col("_cum_before") < ROLLUP_TRUNCATE, member))
-            ).alias("members"),
-            F.sort_array(F.collect_list(id_member)).alias("id_members"),
+
+
+def file_summaries(chunks, llm=None) -> list[dict]:
+    """A4: one row per file. Its chunks in (chunk_idx, node_id, text)
+    order, texts joined; lineage = every chunk id."""
+    return [
+        _summary("file", key, _joined(m["text"] for m in ms), ms, FILE_SUMMARY_PROMPT, llm)
+        for key, ms in _ranked(chunks, FILE_KEYS, ("chunk_idx", "node_id", "text"))
+    ]
+
+
+def module_summaries(files, llm=None) -> list[dict]:
+    """A5: one row per module from its first 40 file summaries in
+    (file_path, text, node_id) order."""
+    return [
+        _summary("module", key, _joined(m["text"] for m in ms), ms, MODULE_SUMMARY_PROMPT, llm,
+                 constituent_files=[m["file_path"] for m in ms])
+        for key, ms in _ranked(
+            files, MODULE_KEYS, ("file_path", "text", "node_id"), MAX_FILES_PER_MODULE
         )
-        .select(
-            *keys,
-            F.substring(
-                F.array_join(F.transform("members", lambda m: m["text"]), "\n\n"),
-                1,
-                ROLLUP_TRUNCATE,
-            ).alias("rollup_input"),
-            F.transform("id_members", lambda m: m["node_id"]).alias("rollup_of"),
-        )
-    )
-    return grouped
+    ]
 
 
-def file_summaries(chunks: DataFrame, llm_factory: Callable) -> DataFrame:
-    """A4: one summary doc per file with rollup lineage."""
-    grouped = file_rollup_inputs(chunks)
-    summarize = make_llm_udf(llm_factory, FILE_SUMMARY_PROMPT)
-    return (
-        grouped.withColumn("text", summarize(F.col("rollup_input")))
-        .withColumn("rollup_count", F.size("rollup_of").cast("int"))
-        .withColumn("doc_type", F.lit("file"))
-        .drop("rollup_input")
-    )
+def repo_overviews(modules, readmes, llm=None) -> list[dict]:
+    """A6: one row per repo with modules, from its first 3 READMEs by
+    (file_path, text) and its first 10 module summaries by (module,
+    text, node_id): `concat_ws("\\n\\n", coalesce(readmes, ""), modules)`,
+    so a repo without README starts with "\\n\\n"."""
+    rms = {
+        _repo_of(key): _joined(m["text"] for m in ms)
+        for key, ms in _ranked(readmes, REPO_KEYS, ("file_path", "text"), README_LIMIT)
+    }
+    out = []
+    for key, ms in _ranked(modules, REPO_KEYS, ("module", "text", "node_id"), MODULE_LIMIT):
+        rollup_input = _joined([rms.get(_repo_of(key), ""), _joined(m["text"] for m in ms)])
+        out.append(_summary("repo", key, rollup_input, ms, REPO_SUMMARY_PROMPT, llm))
+    return out
 
 
-def module_rollup_inputs(file_sums: DataFrame) -> DataFrame:
-    """A5 pure stage: per-module ordered concat of ≤40 file summaries
-    (window-limited BEFORE collect) + lineage."""
-    member = F.struct(F.col("file_path"), F.col("text"), F.col("node_id"))
-    limited = _limit_per_group(
-        file_sums,
-        ["namespace", "repo", "module"],
-        ["file_path", "text", "node_id"],
-        MAX_FILES_PER_MODULE,
-    )
-    return (
-        limited.groupBy("namespace", "repo", "module")
-        .agg(F.sort_array(F.collect_list(member)).alias("members"))
-        .select(
-            "namespace",
-            "repo",
-            "module",
-            F.substring(
-                F.array_join(F.transform("members", lambda m: m["text"]), "\n\n"),
-                1,
-                ROLLUP_TRUNCATE,
-            ).alias("rollup_input"),
-            F.transform("members", lambda m: m["node_id"]).alias("rollup_of"),
-            F.transform("members", lambda m: m["file_path"]).alias("constituent_files"),
-        )
-    )
+def catalog_docs(readmes, chunks, llm=None) -> list[dict]:
+    """A7: one row per repo with chunks. Its first README by (file_path,
+    text) is kept when the LLM judges it GOOD; otherwise the entry is
+    generated from the first 10 chunk section summaries by (node_id,
+    section_summary). The judge runs only for a README, the generator
+    only when no README is kept."""
+    first = {
+        _repo_of(key): ms[0]["text"]
+        for key, ms in _ranked(readmes, REPO_KEYS, ("file_path", "text"), 1)
+    }
+    out = []
+    order = ("node_id", "section_summary")
+    for key, ms in _ranked(chunks, REPO_KEYS, order, CATALOG_SUMMARY_LIMIT):
+        readme = first.get(_repo_of(key))
+        ok = readme is not None and _complete(llm, README_JUDGE_PROMPT, readme) == "GOOD"
+        summaries = _joined(m["section_summary"] for m in ms)[:ROLLUP_TRUNCATE]
+        out.append(dict(
+            key, scope="catalog", readme_ok=ok,
+            text=readme if ok else _complete(llm, CATALOG_PROMPT, summaries),
+            node_id=node_id("catalog", *_repo_of(key)),
+        ))
+    return out
 
 
-def module_summaries(file_sums: DataFrame, llm_factory: Callable) -> DataFrame:
-    """A5: one summary doc per module (≤40 files, concat truncated)."""
-    grouped = module_rollup_inputs(file_sums)
-    summarize = make_llm_udf(llm_factory, MODULE_SUMMARY_PROMPT)
-    return (
-        grouped.withColumn("text", summarize(F.col("rollup_input")))
-        .withColumn("rollup_count", F.size("rollup_of").cast("int"))
-        .withColumn("doc_type", F.lit("module"))
-        .drop("rollup_input")
-    )
+def rollup_repo(llm_factory, table):
+    """applyInArrow kernel: one repo's enriched chunk rows and READMEs
+    (flagged `readme`) → its chunk rows as they came, then its file,
+    module, repo and catalog rows."""
+    rows = table.to_pylist()
+    chunks = [r for r in rows if not r["readme"]]
+    if not chunks:
+        return NODE_SCHEMA.empty_table()
+    readmes = [r for r in rows if r["readme"]]
+    llm = llm_factory()
+    files = file_summaries(chunks, llm)
+    modules = module_summaries(files, llm)
+    nodes = [
+        *files, *modules, *repo_overviews(modules, readmes, llm),
+        *catalog_docs(readmes, chunks, llm),
+    ]
+    for n in nodes:
+        n["component_kind"] = chunks[0]["component_kind"]
+    chunk_rows = (dict(c, scope="chunk") for c in chunks)
+    return pa.Table.from_pylist([*chunk_rows, *nodes], schema=NODE_SCHEMA)
 
 
-def repo_overviews(
-    module_sums: DataFrame, readmes: DataFrame, llm_factory: Callable
-) -> DataFrame:
-    """A6: one overview doc per repo from ≤3 READMEs + ≤10 module summaries."""
-    rm = (
-        _limit_per_group(readmes, ["namespace", "repo"], ["file_path", "text"], README_LIMIT)
-        .groupBy("namespace", "repo")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("file_path"), F.col("text")))
-            ).alias("rms")
-        )
-        .select(
-            "namespace",
-            "repo",
-            F.array_join(F.transform("rms", lambda m: m["text"]), "\n\n").alias("readme_text"),
-        )
+def rollup_hierarchy(chunks: DataFrame, readmes: DataFrame, llm_factory) -> DataFrame:
+    """A4-A7 for every repo in one grouped Arrow pass: `NODE_SCHEMA`
+    rows of all five scopes from the enriched chunks (FILE_KEYS,
+    component_kind, chunk_idx, node_id, text, section_summary) and the
+    READMEs (namespace, repo, file_path, text). Only repos with chunks
+    get rows."""
+    members = chunks.select(
+        *FILE_KEYS, "component_kind", "chunk_idx", "node_id", "text", "section_summary",
+        F.lit(False).alias("readme"),
+    ).unionByName(
+        readmes.select(*REPO_KEYS, "file_path", "text", F.lit(True).alias("readme")),
+        allowMissingColumns=True,
     )
-    ms = (
-        _limit_per_group(
-            module_sums, ["namespace", "repo"], ["module", "text", "node_id"], MODULE_LIMIT
-        )
-        .groupBy("namespace", "repo")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("module"), F.col("text"), F.col("node_id")))
-            ).alias("mods")
-        )
-        .select(
-            "namespace",
-            "repo",
-            F.array_join(F.transform("mods", lambda m: m["text"]), "\n\n").alias("module_text"),
-            F.transform("mods", lambda m: m["node_id"]).alias("rollup_of"),
-            F.transform("mods", lambda m: m["module"]).alias("constituent_modules"),
-        )
-    )
-    joined = ms.join(rm, ["namespace", "repo"], "left").select(
-        "namespace",
-        "repo",
-        F.substring(
-            F.concat_ws("\n\n", F.coalesce(F.col("readme_text"), F.lit("")), F.col("module_text")),
-            1,
-            ROLLUP_TRUNCATE,
-        ).alias("rollup_input"),
-        "rollup_of",
-        "constituent_modules",
-    )
-    summarize = make_llm_udf(llm_factory, REPO_SUMMARY_PROMPT)
-    return (
-        joined.withColumn("text", summarize(F.col("rollup_input")))
-        .withColumn("rollup_count", F.size("rollup_of").cast("int"))
-        .withColumn("doc_type", F.lit("repo"))
-        .drop("rollup_input")
+    return members.groupBy(*REPO_KEYS).applyInArrow(
+        partial(rollup_repo, llm_factory), from_arrow_schema(NODE_SCHEMA)
     )
 
 
@@ -254,54 +255,3 @@ def drill_down(
     return exploded.join(
         members, exploded["member_id"] == members["node_id"], "inner"
     ).drop("member_id")
-
-
-def catalog_docs(
-    readmes: DataFrame, chunk_summaries: DataFrame, llm_factory: Callable
-) -> DataFrame:
-    """A7: catalog entry per repo — README if judged GOOD, else generated
-    from ≤10 chunk summaries. Judge fallback heuristic (len>200, no
-    'todo') is the stub default, mirroring catalog_builder.py:8-31."""
-    rm = (
-        _limit_per_group(readmes, ["namespace", "repo"], ["file_path", "text"], 1)
-        .groupBy("namespace", "repo")
-        .agg(
-            F.min(F.struct(F.col("file_path"), F.col("text"))).alias("rm")
-        )
-        .select("namespace", "repo", F.col("rm")["text"].alias("readme_text"))
-    )
-    cs = (
-        _limit_per_group(
-            chunk_summaries, ["namespace", "repo"], ["node_id", "text"], CATALOG_SUMMARY_LIMIT
-        )
-        .groupBy("namespace", "repo")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("node_id"), F.col("text")))
-            ).alias("sums")
-        )
-        .select(
-            "namespace",
-            "repo",
-            F.array_join(F.transform("sums", lambda m: m["text"]), "\n\n").alias("summaries_text"),
-        )
-    )
-    joined = cs.join(rm, ["namespace", "repo"], "left")
-    judge = make_llm_udf(llm_factory, README_JUDGE_PROMPT)
-    generate = make_llm_udf(llm_factory, CATALOG_PROMPT)
-    judged = joined.withColumn(
-        "readme_ok",
-        F.when(
-            F.col("readme_text").isNotNull(), judge(F.col("readme_text")) == "GOOD"
-        ).otherwise(F.lit(False)),
-    )
-    return (
-        judged.withColumn(
-            "text",
-            F.when(F.col("readme_ok"), F.col("readme_text")).otherwise(
-                generate(F.substring(F.col("summaries_text"), 1, ROLLUP_TRUNCATE))
-            ),
-        )
-        .withColumn("doc_type", F.lit("catalog"))
-        .select("namespace", "repo", "doc_type", "text", "readme_ok")
-    )

@@ -30,12 +30,16 @@ from githubrepostorag_spark.functions import vectors as V
 from githubrepostorag_spark.functions.embed import with_embedding
 
 
-def storage_projection(nodes: DataFrame, scope: str) -> DataFrame:
-    """nodes (one scope) → the common storage schema MINUS the vector:
-    row_id, body, sanitized metadata, promoted columns. Scope-specific
-    column sets collapse here, so projections from different scopes
-    union cleanly and can share one embedding pass (`finalize_vectors`)."""
+def storage_projection(nodes: DataFrame, scope: str | None = None) -> DataFrame:
+    """nodes → the common storage schema MINUS the vector: row_id, body,
+    sanitized metadata, promoted columns. Scope-specific column sets
+    collapse here, so projections from different scopes union cleanly
+    and share one embedding pass (`finalize_vectors`). `scope` names the
+    scope of every row; without it the rows carry their own `scope`
+    column (a mix of scopes), and the metadata keeps the always-keep
+    fields only (`metadata.KEEP_ALWAYS`)."""
     cols = set(nodes.columns)
+    scope_col = F.lit(scope) if scope else F.col("scope")
 
     def col_or_null(name: str):
         return F.col(name) if name in cols else F.lit(None).cast("string")
@@ -45,7 +49,7 @@ def storage_projection(nodes: DataFrame, scope: str) -> DataFrame:
         base = base.withColumn(
             "node_id",
             MD.stable_node_id(
-                F.lit(scope),
+                scope_col,
                 col_or_null("namespace"),
                 col_or_null("repo"),
                 col_or_null("module"),
@@ -58,7 +62,7 @@ def storage_projection(nodes: DataFrame, scope: str) -> DataFrame:
         F.col("node_id").alias("row_id"),
         F.col("text").alias("body"),
         MD.sanitized_metadata(base, scope).alias("metadata"),
-        F.lit(scope).alias("scope"),
+        scope_col.alias("scope"),
         *[
             col_or_null(c).alias(c)
             for c in ("namespace", "repo", "module", "file_path", "language", "component_kind")

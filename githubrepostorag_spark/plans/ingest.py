@@ -1,18 +1,26 @@
 """Composed ingest pipeline (reference: ingest_controller.py:192-487).
 
-One linear DataFrame chain replacing the reference's six serial
-stages — preprocess → code_nodes (+L1-L3 enrichment) → file/module/
-repo summaries → catalog → vector rows per scope → audit:
+One DataFrame chain replacing the reference's six serial stages —
+preprocess → code_nodes (+L1-L3 enrichment) → file/module/repo
+summaries → catalog → vector rows per scope → audit:
 
     docs(repo, file_path, text)
       → F1 filter → C5 notebook normalize → F2 language → F3 kind
       → A2 module → C1-C3 chunk → F4 metadata → F6 node ids
       → L1-L3 enrich → A4-A7 rollups → F5/S4 vector rows → S6 audit
 
-Everything is lazily-composed DataFrames: the driver never collects;
-per-repo parallelism is Spark partitioning instead of the reference's
-serial per-repo loop (SURVEY §3.2). The LLM factory is pluggable
-(DeterministicLLM for tests/oracles).
+The per-document stages are the shared Spark operators (the stream
+tick and the parity plans run them too). The four rollup levels are
+ONE grouped Arrow pass (`operators.hierarchy.rollup_hierarchy`): each
+repo's enriched chunks and READMEs go to one Python call that returns
+the repo's chunk rows with its file, module, repo and catalog rows —
+the reference's per-repo loop (SURVEY §3.2) as one shuffle keyed on
+(namespace, repo). All five scopes then share one storage projection,
+one embedding pass and one write. The chain has no branch that
+re-reads the chunks, so nothing is persisted and nothing runs twice.
+
+Everything is lazily-composed DataFrames: the driver never collects.
+The LLM factory is pluggable (DeterministicLLM for tests/oracles).
 """
 
 from __future__ import annotations
@@ -31,11 +39,12 @@ from githubrepostorag_spark.operators.chunking import (
     transform_special_files,
 )
 from githubrepostorag_spark.operators.enrich import enrich_chunks
-from githubrepostorag_spark.operators.hierarchy import (
+from githubrepostorag_spark.operators.hierarchy import (  # noqa: F401 — the rollup levels
     catalog_docs,
     file_summaries,
     module_summaries,
     repo_overviews,
+    rollup_hierarchy,
 )
 from githubrepostorag_spark.plans.timing import StageTimer
 from githubrepostorag_spark.operators.vector_write import (
@@ -52,7 +61,7 @@ class IngestResult:
     module_sums: DataFrame
     repo_sums: DataFrame
     catalog: DataFrame
-    rows: DataFrame  # union of all 5 scopes' vector rows
+    rows: DataFrame  # all 5 scopes' vector rows
     audit: DataFrame  # ingest_runs (S6/A8)
     timed_stages: DataFrame | None = None  # (stage_idx, stage, seconds)
     _cached: tuple = ()  # frames persisted by the pipeline
@@ -61,21 +70,6 @@ class IngestResult:
         """Release every cache the pipeline created."""
         for df in self._cached:
             df.unpersist()
-
-
-def _node_id_for(df: DataFrame, scope: str) -> DataFrame:
-    cols = set(df.columns)
-
-    def c(name: str):
-        return F.col(name) if name in cols else F.lit(None).cast("string")
-
-    return df.withColumn(
-        "node_id",
-        MD.stable_node_id(
-            F.lit(scope), c("namespace"), c("repo"), c("module"), c("file_path"),
-            c("start_line"), c("end_line"),
-        ),
-    )
 
 
 def preprocess(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -119,85 +113,53 @@ def ingest_pipeline(
     every scope's vector build (functions.embed.with_embedding): plug a
     real-model pandas UDF and the store is built with it, dim-guarded.
 
+    The result's frames are lazy and persist nothing: the pipeline is
+    one chain, which the caller's write (`output_path`) runs once. A
+    caller reading several of them should persist what it reads twice.
+
     `collect_stage_times` is a DIAGNOSTIC mode (EXPLAIN ANALYZE-style):
-    it forces each persisted stage in dependency order to attribute
-    per-stage wall seconds (`timed_stages`). Unlike curation/release —
-    whose timers wrap audit counts that run anyway, so timing is free —
-    ingest's stages fuse into the caller's single write action, and
-    forcing boundaries costs ~2 s of lost pipelining at sf0.1
-    (measured), so it is off on the production path.
+    it persists the enriched chunks and forces them, then the rollup
+    pass over them, to attribute per-stage wall seconds
+    (`timed_stages`). Unlike curation/release — whose timers wrap audit
+    counts that run anyway, so timing is free — ingest's stages fuse
+    into the caller's single write action, and forcing boundaries
+    costs ~2 s of lost pipelining at sf0.1 (measured), so it is off on
+    the production path.
     """
     prepped, kinds = preprocess(docs)
     if raw_dump_path is not None:
         # S3 raw-doc debug dump (ingest_controller.py:154-161)
         docs.write.mode("overwrite").json(raw_dump_path)
 
-    def attach(df: DataFrame, doc_type: str, scope: str) -> DataFrame:
-        with_kind = (
-            df if "component_kind" in df.columns
-            else df.join(F.broadcast(kinds), "repo", "left")
-        )
-        attached = FL.attach_common_metadata(
-            with_kind.withColumn("doc_type", F.lit(doc_type)),
-            namespace=namespace,
-            branch=branch,
-            collection=collection,
-            ingest_run_id=ingest_run_id,
-            dev_forced=dev_forced,
-        )
-        return _node_id_for(attached, scope)
-
-    # code_nodes stage: chunk + ids + L1-L3 enrichment. Persisted: four
-    # downstream consumers (chunk rows, file rollups, catalog summaries,
-    # audit counts) would otherwise re-run the chunk explode + LLM +
-    # embedding UDFs once each — the most expensive stage in the DAG.
+    # code_nodes stage: chunk + metadata + ids + L1-L3 enrichment
+    nodes = FL.attach_common_metadata(
+        split_code_documents(prepped).withColumn("doc_type", F.lit("code")),
+        namespace=namespace,
+        branch=branch,
+        collection=collection,
+        ingest_run_id=ingest_run_id,
+        dev_forced=dev_forced,
+    )
+    ids = ("namespace", "repo", "module", "file_path", "start_line", "end_line")
     chunks = enrich_chunks(
-        attach(split_code_documents(prepped), "code", "chunk"), llm_factory
-    ).persist()
+        nodes.withColumn("node_id", MD.stable_node_id(F.lit("chunk"), *map(F.col, ids))),
+        llm_factory,
+    )
+    if collect_stage_times:
+        chunks = chunks.persist()  # a stage boundary to time (see docstring)
 
-    # hierarchy rollups (A4-A6). file/module summaries and READMEs are
-    # tiny (one row per file/module/README) but feed 2-3 branches of the
-    # 5-scope union below — persisted, or each branch re-runs the rollup
-    # aggregations and the preprocess pandas UDFs from scratch.
-    file_sums = attach(
-        file_summaries(chunks, llm_factory).drop("namespace"), "file", "file"
-    ).persist()
-    module_sums = attach(
-        module_summaries(file_sums, llm_factory).drop("namespace"), "module", "module"
-    ).persist()
+    # A4-A7: each repo's chunks and READMEs → its chunk, file, module,
+    # repo and catalog rows, in one grouped pass; then one storage
+    # projection and one embedding pass for all five scopes
     readmes = prepped.filter(
         FL.file_name(F.col("file_path")).startswith("readme")
-    ).withColumn("namespace", F.lit(namespace)).persist()
-    repo_sums = attach(
-        repo_overviews(module_sums, readmes, llm_factory).drop("namespace"),
-        "repo",
-        "repo",
+    ).withColumn("namespace", F.lit(namespace))
+    scoped = rollup_hierarchy(chunks, readmes, llm_factory)
+    rows = finalize_vectors(
+        storage_projection(scoped.withColumn("branch", F.lit(branch))),
+        embedder=embedder,
+        dim=embed_dim,
     )
-
-    # catalog (A7) from READMEs + chunk section summaries
-    chunk_summaries = chunks.select(
-        "namespace", "repo", "node_id", F.col("section_summary").alias("text")
-    )
-    catalog = attach(
-        catalog_docs(readmes, chunk_summaries, llm_factory).drop("namespace"),
-        "catalog",
-        "catalog",
-    )
-
-    # project every scope to the common storage schema FIRST, then embed
-    # the union once: one Arrow-UDF subtree (and one Python-worker
-    # round-trip) instead of five per-scope embedding stages
-    projected = None
-    for df, scope in (
-        (chunks, "chunk"),
-        (file_sums, "file"),
-        (module_sums, "module"),
-        (repo_sums, "repo"),
-        (catalog, "catalog"),
-    ):
-        part = storage_projection(df, scope)
-        projected = part if projected is None else projected.unionByName(part)
-    rows = finalize_vectors(projected, embedder=embedder, dim=embed_dim)
 
     # S6/A8 audit: one ingest_runs row per repo with the chunk node count
     started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
@@ -222,27 +184,28 @@ def ingest_pipeline(
         write_vector_tables(rows, output_path)
 
     # Stage timer (the reference's stage_timer analog, plans/timing.py):
-    # force each PERSISTED stage cache in dependency order and record
-    # its wall seconds. Downstream consumers read these same caches —
-    # no duplicated computation — but the forcing itself serializes
-    # stage boundaries the fused write would otherwise pipeline, so
-    # this runs only in diagnostic mode (see docstring).
+    # fill the chunk cache, then run the rollup pass over it, and record
+    # their wall seconds. Forcing serializes stage boundaries the fused
+    # write would otherwise pipeline, so this runs only in diagnostic
+    # mode (see docstring).
     timed = None
     if collect_stage_times:
         timer = StageTimer()
         timer.time("chunk_enrich", chunks.count)
-        timer.time("file_rollup", file_sums.count)
-        timer.time("module_rollup", module_sums.count)
+        timer.time("hierarchy", scoped.count)
         timed = timer.frame(docs.sparkSession, ingest_run_id, "run_id")
+
+    def level(scope: str) -> DataFrame:
+        return scoped.filter(F.col("scope") == scope)
 
     return IngestResult(
         chunks=chunks,
-        file_sums=file_sums,
-        module_sums=module_sums,
-        repo_sums=repo_sums,
-        catalog=catalog,
+        file_sums=level("file"),
+        module_sums=level("module"),
+        repo_sums=level("repo"),
+        catalog=level("catalog"),
         rows=rows,
         audit=audit,
         timed_stages=timed,
-        _cached=(chunks, file_sums, module_sums, readmes),
+        _cached=(chunks,) if collect_stage_times else (),
     )

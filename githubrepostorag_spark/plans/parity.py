@@ -11,16 +11,21 @@ in DuckDB SQL and every operator lands in CORRECTNESS_r{N}.json.
 Reference behaviors exercised (citations in each operator's module):
 F1/F2/A2 preprocess (transform_service.py, preprocess_service.py,
 scope_utils.py), F3 kind inference, C1-C3 chunking ladder
-(code_pipeline.py, langauge_detector.py), A4/A5 rollup inputs
-(hierarchy_summary_service.py), F5/F6 sanitize + stable ids
-(vector_write_service.py), V3/J1 seed-and-expand retrieval
-(graph_rag_retrievers.py), L1-L3 enrichment (code_pipeline_service.py).
+(code_pipeline.py, langauge_detector.py), A4/A5 rollup inputs by the
+ingest kernel's own per-level rules (hierarchy_summary_service.py),
+F5/F6 sanitize + stable ids (vector_write_service.py), V3/J1
+seed-and-expand retrieval (graph_rag_retrievers.py), L1-L3 enrichment
+(code_pipeline_service.py).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from githubrepostorag_spark.functions import metadata as MD
 from githubrepostorag_spark.functions import text as TXT
@@ -118,10 +123,32 @@ def _chunks_with_ids(documents: DataFrame) -> DataFrame:
     )
 
 
+# the ingest kernel's node columns plus the rollup inputs the oracle checks
+_ROLLUPS = pa.schema([
+    *H.NODE_SCHEMA,
+    pa.field("rollup_input", pa.string()),
+    pa.field("constituent_files", pa.list_(pa.string())),
+])
+
+
+def _level_rows(level, table):
+    """applyInArrow body: one group's rows → `level`'s rollup inputs and
+    lineage (no LLM call)."""
+    return pa.Table.from_pylist(level(table.to_pylist()), schema=_ROLLUPS)
+
+
+def _rollup_inputs(rows: DataFrame, level, keys) -> DataFrame:
+    """The ingest kernel's per-level rule over `rows`, grouped on the
+    level's key."""
+    return rows.groupBy(*keys).applyInArrow(
+        partial(_level_rows, level), from_arrow_schema(_ROLLUPS)
+    )
+
+
 def file_rollups(documents: DataFrame) -> DataFrame:
-    """A4 pure stage over real chunk output (ordered concat, 25000-char
-    truncation, full rollup lineage)."""
-    grouped = H.file_rollup_inputs(_chunks_with_ids(documents))
+    """A4 over real chunk output (ordered concat, 25000-char truncation,
+    full rollup lineage), by the ingest kernel's `file_summaries`."""
+    grouped = _rollup_inputs(_chunks_with_ids(documents), H.file_summaries, H.FILE_KEYS)
     return grouped.select(
         "namespace",
         "repo",
@@ -130,17 +157,18 @@ def file_rollups(documents: DataFrame) -> DataFrame:
         "language",
         "rollup_input",
         F.array_join("rollup_of", ",").alias("rollup_ids"),
-        F.size("rollup_of").cast("long").alias("rollup_count"),
+        F.col("rollup_count").cast("long"),
     )
 
 
 def module_rollups(documents: DataFrame) -> DataFrame:
-    """A5 pure stage: docs as file-summary rows → per-module ≤40 concat."""
+    """A5: docs as file-summary rows → per-module ≤40 concat, by the
+    ingest kernel's `module_summaries`."""
     cd = FL.with_module(FL.tag_language(FL.filter_documents(code_docs_fixture(documents))))
     fd = cd.withColumn("namespace", F.lit("default")).withColumn(
         "node_id", F.md5(F.col("file_path"))
     )
-    grouped = H.module_rollup_inputs(fd)
+    grouped = _rollup_inputs(fd, H.module_summaries, H.MODULE_KEYS)
     return grouped.select(
         "namespace",
         "repo",
@@ -245,7 +273,7 @@ def drilldown(documents: DataFrame) -> DataFrame:
     chunks = scale_out(_chunks_with_ids(documents), "node_id").localCheckpoint(
         eager=False
     )
-    rollups = H.file_rollup_inputs(chunks).select(
+    rollups = _rollup_inputs(chunks, H.file_summaries, H.FILE_KEYS).select(
         "namespace", "repo", "module", "file_path", "language", "rollup_of"
     )
     members = chunks.select("node_id", "chunk_idx", "start_line")

@@ -102,6 +102,8 @@ def test_queries_run_and_match_oracle_sample(spark, duck):
         "q26_simhash",
         "q28_knn_bruteforce",
         "q33_graph_2hop",
+        "q37_file_rollup",
+        "q38_module_rollup",
         "q40_retrieve_chunk",
     ]
     for name in sample:

@@ -15,6 +15,9 @@ from githubrepostorag_spark.llm.stub import DeterministicLLM
 from githubrepostorag_spark.plans.ingest import ingest_pipeline
 from tests.fixtures_corpus import GOOD_README, corpus_df
 
+# sha256 of `_rows_digest` over the fixture corpus, namespace "test"
+PINNED_ROWS_DIGEST = "b7dc528da3a6994acf0a0b7233676a18b230a65a8eb6d8f02ddf7b490962b2d6"
+
 
 @pytest.fixture(scope="module")
 def result(spark):
@@ -96,6 +99,70 @@ def test_vector_rows(result):
     fs = result.file_sums.filter(F.col("file_path") == "src/main.py").first()
     main_chunks = result.chunks.filter(F.col("file_path") == "src/main.py").count()
     assert fs["rollup_count"] == main_chunks
+
+
+def test_catalog_llm_calls_only_where_needed(spark):
+    """The README judge runs only for repos that have a README, and the
+    catalog generator only where the judge says BAD (or there is no
+    README); the catalog rows are the same as with every call made."""
+    from githubrepostorag_spark.operators.hierarchy import (
+        CATALOG_PROMPT,
+        README_JUDGE_PROMPT,
+    )
+    from tests.fixtures_corpus import CORPUS
+
+    judged = spark.sparkContext.accumulator(0)
+    generated = spark.sparkContext.accumulator(0)
+    judge_head = README_JUDGE_PROMPT.split("{")[0]
+    gen_head = CATALOG_PROMPT.split("{")[0]
+
+    class CountingLLM(DeterministicLLM):
+        def complete(self, prompt):
+            if prompt.startswith(judge_head):
+                judged.add(1)
+            elif prompt.startswith(gen_head):
+                generated.add(1)
+            return super().complete(prompt)
+
+    # alpha: GOOD README; beta: BAD README; gamma: no README
+    corpus = CORPUS + [("gamma", "app/run.py", "def run():\n    return 'gamma'")]
+    res = ingest_pipeline(
+        spark.createDataFrame(corpus, "repo string, file_path string, text string"),
+        ingest_run_id="run-llm", llm_factory=CountingLLM, namespace="test",
+    )
+    bodies = {r["repo"]: r["body"] for r in res.rows.collect() if r["scope"] == "catalog"}
+    calls = (judged.value, generated.value)
+    readme_ok = {r["repo"]: r["readme_ok"] for r in res.catalog.collect()}
+    res.unpersist()
+    assert calls == (2, 2)  # judged: alpha, beta; generated: beta, gamma
+    assert readme_ok == {"alpha": True, "beta": False, "gamma": False}
+    assert bodies["alpha"] == GOOD_README
+    assert bodies["beta"].startswith("Summary: ") and bodies["gamma"].startswith("Summary: ")
+
+
+def _rows_digest(rows) -> str:
+    """sha256 over every stored row: scope, row_id, body, sorted
+    metadata items and the float32 vector bytes."""
+    import hashlib
+
+    import numpy as np
+
+    lines = sorted(
+        "\x1f".join([
+            r["scope"], r["row_id"], r["body"],
+            repr(sorted(r["metadata"].items())),
+            np.asarray(r["vector"], dtype=np.float32).tobytes().hex(),
+        ])
+        for r in rows.select("scope", "row_id", "body", "metadata", "vector").collect()
+    )
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+
+def test_whole_output_digest_pinned(result):
+    """The batch ingest's whole output, pinned: any change to a row id,
+    body, metadata entry or vector bit of the fixture corpus fails."""
+    assert result.rows.count() == 31
+    assert _rows_digest(result.rows) == PINNED_ROWS_DIGEST
 
 
 def test_row_ids_stable_across_runs(spark, result):
@@ -311,7 +378,7 @@ def test_timed_stages_on_composed_pipelines(spark):
         collect_stage_times=True,
     )
     rows = ing.timed_stages.orderBy("stage_idx").collect()
-    assert [r.stage for r in rows] == ["chunk_enrich", "file_rollup", "module_rollup"]
+    assert [r.stage for r in rows] == ["chunk_enrich", "hierarchy"]
     assert all(r.seconds >= 0 and r.run_id == "t3" for r in rows)
     ing.unpersist()
     fast = ingest_pipeline(
