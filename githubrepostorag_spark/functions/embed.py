@@ -41,13 +41,10 @@ _TOKEN_VEC_MEMO_CAP = 65_536
 def _token_vector(token: str, dim: int) -> np.ndarray:
     """Stable pseudo-random vector for one token: sha256-expanded bytes
     mapped to [-0.5, 0.5)."""
-    chunks = []
-    n_blocks = (dim + 31) // 32
-    for b in range(n_blocks):
-        digest = hashlib.sha256(f"{b}:{token}".encode()).digest()
-        chunks.append(np.frombuffer(digest, dtype=np.uint8).astype(np.float64))
-    vec = np.concatenate(chunks)[:dim]
-    return vec / 255.0 - 0.5
+    raw = b"".join(
+        hashlib.sha256(f"{b}:{token}".encode()).digest() for b in range((dim + 31) // 32)
+    )
+    return np.frombuffer(raw, dtype=np.uint8, count=dim).astype(np.float64) / 255.0 - 0.5
 
 
 def embed_text(text: str, dim: int = EMBED_DIM) -> np.ndarray:

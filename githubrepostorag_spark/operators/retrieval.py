@@ -538,8 +538,11 @@ def store_snapshot(store: DataFrame) -> StoreSnapshot | None:
     no body or vector to the driver.
 
     Keying on the instance keeps what a reader sees unchanged: the
-    DataFrame's file list was fixed when it was created, and a snapshot
-    outlives those files (a later `compact_store` cannot fail it)."""
+    DataFrame's file list was fixed when it was created, and the
+    snapshot holds its rows in memory. `compact_store` deletes only
+    superseded versions, so a latest view resolved before it still
+    reads; a snapshot also outlives a version that a later batch
+    superseded and compaction then deleted."""
     with _SNAPSHOTS_LOCK:
         if store in _SNAPSHOTS:
             return _SNAPSHOTS[store]

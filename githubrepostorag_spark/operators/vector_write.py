@@ -129,53 +129,3 @@ def write_vector_tables(rows: DataFrame, path: str) -> None:
 
 def read_vector_tables(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def merge_vector_tables(existing: DataFrame, fresh: DataFrame) -> DataFrame:
-    """Incremental re-ingest merge: replace every repo present in
-    `fresh` wholesale (its stale rows drop — deleted files disappear),
-    keep all other repos untouched.
-
-    Repo-grain replace via left_anti join on the fresh repo set (tiny,
-    broadcast): the 100 TB alternative to full-corpus rewrite. row_ids
-    are location-addressed (sha1 of scope/namespace/repo/module/path/
-    lines, the reference's rule), so structurally unchanged files keep
-    their ids across re-ingests — an edit is an UPDATE under the same
-    id, and with a table format (Delta/Iceberg) this same frame is the
-    MERGE source.
-    """
-    repos = fresh.select("repo").distinct()
-    kept = existing.join(F.broadcast(repos), "repo", "left_anti")
-    return kept.unionByName(fresh)
-
-
-def ingest_delta_stats(existing: DataFrame, fresh: DataFrame) -> DataFrame:
-    """Audit of an incremental merge, per re-ingested repo: row_ids
-    added / removed, and of the ids present in both ingests, how many
-    have updated vs unchanged content (body fingerprint compare).
-    Full-outer join on row_id scoped to the fresh repo set — the
-    change-detection query an ingest operator dashboards."""
-    repos = fresh.select("repo").distinct()
-    old = existing.join(F.broadcast(repos), "repo", "left_semi").select(
-        "repo", "row_id", F.md5("body").alias("old_fp")
-    )
-    new = fresh.select("repo", "row_id", F.md5("body").alias("new_fp"))
-    return (
-        old.join(new, ["repo", "row_id"], "full_outer")
-        .groupBy("repo")
-        .agg(
-            F.sum(F.when(F.col("old_fp").isNull(), 1).otherwise(0)).alias("added"),
-            F.sum(F.when(F.col("new_fp").isNull(), 1).otherwise(0)).alias("removed"),
-            F.sum(
-                F.when(
-                    F.col("old_fp").isNotNull()
-                    & F.col("new_fp").isNotNull()
-                    & (F.col("old_fp") != F.col("new_fp")),
-                    1,
-                ).otherwise(0)
-            ).alias("updated"),
-            F.sum(
-                F.when(F.col("old_fp") == F.col("new_fp"), 1).otherwise(0)
-            ).alias("unchanged"),
-        )
-    )

@@ -16,9 +16,34 @@ text decode is a column expression.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _read_roots(
+    spark: SparkSession,
+    roots: list[str],
+    branch: str,
+    glob: str | None = None,
+    repo: str | None = None,
+) -> DataFrame:
+    """Sibling repo trees → documents(repo, branch, file_path, text) in
+    one binaryFile scan. A file's repo is its root's directory name
+    (`repo` overrides it) and its file_path the rest of its path."""
+    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    raw = reader.load(roots)
+    parent = os.path.dirname(roots[0]).strip("/")
+    path = f"^file:/*{re.escape(parent)}/([^/]+)/(.*)$"
+    return raw.select(
+        (F.lit(repo) if repo else F.regexp_extract("path", path, 1)).alias("repo"),
+        F.lit(branch).alias("branch"),
+        F.regexp_extract("path", path, 2).alias("file_path"),
+        F.col("content").cast("string").alias("text"),
+    )
 
 
 def read_repo_directory(
@@ -32,35 +57,22 @@ def read_repo_directory(
 
     file_path is repo-relative (the metadata key the chunker, module
     derivation, and hierarchy group on)."""
-    root = os.path.abspath(path)
-    repo = repo or os.path.basename(root.rstrip("/"))
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(root)
-    rel = F.regexp_replace(
-        F.regexp_replace(F.col("path"), f"^file:{root}/", ""), "^file:/*", ""
-    )
-    return raw.select(
-        F.lit(repo).alias("repo"),
-        F.lit(branch).alias("branch"),
-        rel.alias("file_path"),
-        F.col("content").cast("string").alias("text"),
-    )
+    root = os.path.abspath(path).rstrip("/")
+    return _read_roots(spark, [root], branch, glob, repo or os.path.basename(root))
 
 
 def read_repo_directories(
     spark: SparkSession, base_path: str, branch: str = "main"
 ) -> DataFrame:
     """S2 stand-in: every immediate subdirectory of `base_path` is one
-    repo (the layout `git clone` into a workspace produces)."""
-    out: DataFrame | None = None
-    for name in sorted(os.listdir(base_path)):
-        full = os.path.join(base_path, name)
-        if not os.path.isdir(full):
-            continue
-        df = read_repo_directory(spark, full, repo=name, branch=branch)
-        out = df if out is None else out.unionByName(df)
-    if out is None:
+    repo (the layout `git clone` into a workspace produces), all read by
+    one scan."""
+    base = os.path.abspath(base_path)
+    roots = [
+        os.path.join(base, name)
+        for name in sorted(os.listdir(base))
+        if os.path.isdir(os.path.join(base, name))
+    ]
+    if not roots:
         raise ValueError(f"no repo directories under {base_path}")
-    return out
+    return _read_roots(spark, roots, branch)

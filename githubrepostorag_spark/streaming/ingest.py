@@ -1,20 +1,24 @@
 """Continuous document ingest: a document stream chunked, embedded, and
-appended to a versioned vector store — the always-on form of the batch
+written to a versioned vector store — the always-on form of the batch
 `plans.ingest` pipeline (reference: the ingest controller runs per-repo
 batch jobs; SURVEY §2.10's job plane has no continuous document path,
 so this is engine-added capability).
 
-Design: each micro-batch runs the chunk→project→embed chain (the same
-operators as batch ingest) and APPENDS to parquet partitioned by repo,
-stamped with a monotonically increasing `batch_id`. Appending new repo
-VERSIONS instead of rewriting in place keeps the sink safe under
-failure (a torn batch re-appends idempotently on replay — Spark's
-foreachBatch may re-deliver a batch id, and the reader's latest-wins
-view makes duplicate appends harmless) and turns time travel into a
-filter. `read_latest_store` resolves latest-batch-per-repo at read
-time; a periodic batch compaction (drop superseded batch partitions)
-bounds the log, exactly like a table format's snapshot expiry — with
-Delta/Iceberg this sink becomes a MERGE and the view goes away.
+Layout: one directory per repo version, `repo=R/batch_id=N`, where N is
+the foreachBatch id of the micro-batch that ingested R. Each micro-batch
+runs the chunk→project→embed chain (the same operators as batch ingest)
+and overwrites exactly the directories it writes (dynamic partition
+overwrite). Spark may re-deliver a batch id after a crash between the
+parquet commit and the checkpoint commit; the replay then replaces its
+own directories instead of adding a second copy, so the write is
+idempotent (the rule Delta Lake and the Structured Streaming guide give
+for at-least-once `foreachBatch` sinks).
+
+`read_latest_store` lists the version directories and reads the newest
+one per repo: re-ingesting a repo replaces it wholesale, so files
+deleted upstream disappear. `compact_store` deletes the older
+directories; it never touches a newest version, so a latest view
+resolved before it keeps reading.
 
 State: the stream itself is stateless (chunking/embedding are per-row);
 all versioning lives in the sink layout, so the query restarts from the
@@ -27,7 +31,6 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from githubrepostorag_spark.operators.chunking import split_code_documents
 from githubrepostorag_spark.operators.vector_write import (
@@ -57,13 +60,19 @@ def stream_ingest_docs(
     dim: int | None = None,
 ):
     """Start the continuous ingest query: docs stream → chunk+embed →
-    append versioned parquet. Returns the StreamingQuery."""
+    one `repo=R/batch_id=N` directory per repo in the batch. Returns the
+    StreamingQuery."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         rows = _batch_rows(batch, embedder=embedder, dim=dim).withColumn(
             "batch_id", F.lit(int(batch_id))
         )
-        rows.write.mode("append").partitionBy("repo").parquet(store_path)
+        (
+            rows.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("repo", "batch_id")
+            .parquet(store_path)
+        )
 
     return (
         docs_stream.writeStream.foreachBatch(write_batch)
@@ -73,52 +82,40 @@ def stream_ingest_docs(
     )
 
 
+def _versions(spark: SparkSession, store_path: str):
+    """(Hadoop FileSystem, repo directory → its version directories as
+    (batch_id, path) sorted by batch_id), listed by one glob on the
+    driver: no Spark job."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(f"{store_path.rstrip('/')}/repo=*/batch_id=*")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    out: dict[str, list[tuple[int, str]]] = {}
+    for st in fs.globStatus(pattern) or []:
+        d = st.getPath().toString()
+        repo_dir, version = d.rsplit("/", 1)
+        out.setdefault(repo_dir, []).append((int(version.split("=", 1)[1]), d))
+    return fs, {r: sorted(v) for r, v in out.items()}
+
+
 def read_latest_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """Latest-version-per-repo view of the append-only store: the max
-    batch_id seen for each repo wins wholesale (repo-grain replace,
-    same rule as vector_write.merge_vector_tables — deleted files
-    disappear because the whole repo version is replaced). One window
-    over the repo partitioning; repo partition pruning still applies
-    to filtered reads because `repo` is the physical partition key."""
-    df = spark.read.parquet(store_path)
-    latest = df.withColumn(
-        "_max_b", F.max("batch_id").over(Window.partitionBy("repo"))
-    )
-    return latest.filter(F.col("batch_id") == F.col("_max_b")).drop("_max_b")
+    """Latest-version-per-repo view: the newest `batch_id` directory of
+    each repo, read with the store as the partition base (so `repo` and
+    `batch_id` stay columns). The file list is fixed here, and the plan
+    is a plain scan: no shuffle, no window."""
+    _, versions = _versions(spark, store_path)
+    dirs = [v[-1][1] for v in versions.values()]
+    return spark.read.option("basePath", store_path).parquet(*dirs)
 
 
 def compact_store(spark: SparkSession, store_path: str) -> None:
-    """Drop superseded repo versions from the append-only store: keep
-    exactly the latest batch per repo, rewritten atomically per repo
-    partition via dynamic partition overwrite — only repos that have a
-    stale version are rewritten; untouched repo partitions' files are
-    left in place. Run periodically (the table-format analogue is
-    snapshot expiry).
-
-    Not safe beside open readers: a DataFrame from `read_latest_store`
-    fixed its file list when it was created, and the rewrite deletes
-    the superseded files, so its next scan can fail with
-    FileNotFoundException. Resolve the view again after compaction. An
-    agent whose store snapshot loaded before it (see
-    `operators.retrieval.store_snapshot`) keeps answering from memory.
-    """
-    latest = read_latest_store(spark, store_path)
-    stale_repos = (
-        spark.read.parquet(store_path)
-        .groupBy("repo")
-        .agg(F.countDistinct("batch_id").alias("n_versions"))
-        .filter(F.col("n_versions") > 1)
-        .select("repo")
-    )
-    to_rewrite = latest.join(F.broadcast(stale_repos), "repo", "left_semi")
-    if not to_rewrite.isEmpty():
-        (
-            to_rewrite.repartition("repo")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("repo")
-            .parquet(store_path)
-        )
+    """Delete every repo version below that repo's newest. Only
+    directories are removed: nothing is read or rewritten and no Spark
+    job runs, so a latest view resolved before compaction keeps reading
+    its files. A view that resolved a version which a later batch then
+    superseded does lose its files here."""
+    fs, versions = _versions(spark, store_path)
+    for v in versions.values():
+        for _, d in v[:-1]:
+            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(d), True)
 
 
 def stream_dedup_gate(
@@ -143,8 +140,7 @@ def stream_dedup_gate(
     excludes store rows stamped with the current batch_id — so a
     replay re-derives identical decisions whether the crash hit before
     or after the first attempt's store append (duplicate — never
-    contradictory — log and store rows; dedup by doc_id at read, same
-    at-least-once discipline as the versioned vector store above)
+    contradictory — log and store rows; dedup by doc_id at read)
     rather than being falsely rejected by its own half-landed
     signatures. Batches are exact-deduped within themselves first
     (min doc_id wins) — LSH probing is batch-vs-store; two near-dup

@@ -115,6 +115,29 @@ def test_repodir_source_roundtrip(spark, tmp_path):
     assert dumped.count() == len(CORPUS)
 
 
+def test_repodir_workspace_is_one_scan(spark, tmp_path):
+    """Every repo of a workspace comes from one binaryFile scan; the
+    repo and repo-relative path come from each file's path."""
+    base = tmp_path / "work space+1"
+    for repo, file_path, text in CORPUS + [("gamma", "lib/x.py", "x = 1\n")]:
+        p = base / repo / file_path
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text(text)
+    (base / "stray.txt").write_text("not a repo")
+
+    docs = read_repo_directories(spark, str(base))
+    plan = docs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan binaryFile") == 1
+    assert docs.columns == ["repo", "branch", "file_path", "text"]
+    got = sorted((r.repo, r.file_path, r.text) for r in docs.collect())
+    assert got == sorted(CORPUS + [("gamma", "lib/x.py", "x = 1\n")])
+
+    empty = tmp_path / "empty_ws"
+    empty.mkdir()
+    with pytest.raises(ValueError):
+        read_repo_directories(spark, str(empty))
+
+
 # ---------------- MMR re-rank + notebook helpers ----------------
 
 

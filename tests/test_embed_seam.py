@@ -58,3 +58,26 @@ def test_ingest_pipeline_accepts_custom_embedder(spark):
     )
     dims = res.rows.select(F.size("vector").alias("d")).distinct().collect()
     assert [r.d for r in dims] == [16]
+
+
+@pytest.mark.parametrize("dim", [384, 100])
+def test_token_vector_matches_per_block_formula(dim):
+    """One joined buffer gives bit-identical vectors to the per-digest
+    formula it replaced (kept here as the reference)."""
+    import hashlib
+
+    import numpy as np
+
+    from githubrepostorag_spark.functions.embed import _token_vector
+
+    def reference(token: str) -> np.ndarray:
+        chunks = []
+        for b in range((dim + 31) // 32):
+            digest = hashlib.sha256(f"{b}:{token}".encode()).digest()
+            chunks.append(np.frombuffer(digest, dtype=np.uint8).astype(np.float64))
+        return np.concatenate(chunks)[:dim] / 255.0 - 0.5
+
+    for token in ("def", "retry_timeout", "x", "", "naïve", "日本語", "emoji🙂", "Ünïcödé::path"):
+        got = _token_vector(token, dim)
+        assert got.shape == (dim,) and got.dtype == np.float64
+        assert got.tobytes() == reference(token).tobytes()

@@ -190,14 +190,13 @@ def test_row_ids_stable_across_runs(spark, result):
     assert chunk["node_id"] == hashlib.sha1(ident.encode()).hexdigest()
 
 
-def test_incremental_merge_replaces_only_reingested_repo(spark):
+def test_reingest_keeps_row_ids_of_unchanged_files(spark):
+    """Re-ingesting one repo with one file edited: location-addressed
+    ids mean untouched files keep their row_id AND body, and the edited
+    file keeps its chunk ids while its body changes."""
     from pyspark.sql import functions as F
 
     from githubrepostorag_spark.llm.stub import DeterministicLLM
-    from githubrepostorag_spark.operators.vector_write import (
-        ingest_delta_stats,
-        merge_vector_tables,
-    )
     from githubrepostorag_spark.plans.ingest import ingest_pipeline
     from githubrepostorag_spark.plans.parity import code_docs_fixture
     from githubrepostorag_spark.sources.testdata import load_table
@@ -205,11 +204,6 @@ def test_incremental_merge_replaces_only_reingested_repo(spark):
     docs = code_docs_fixture(load_table(spark, "/root/testdata/sf0.001", "documents")).select(
         "repo", "file_path", "text"
     )
-    full = ingest_pipeline(docs, ingest_run_id="r1", llm_factory=DeterministicLLM)
-    existing = full.rows.persist()
-    existing.count()
-
-    # re-ingest ONE repo with one file's content changed
     repo = docs.select("repo").distinct().orderBy("repo").first().repo
     target = docs.filter(F.col("repo") == repo)
     changed_path = target.select("file_path").orderBy("file_path").first().file_path
@@ -219,31 +213,24 @@ def test_incremental_merge_replaces_only_reingested_repo(spark):
             F.col("file_path") == changed_path, F.concat(F.col("text"), F.lit("\nEDIT"))
         ).otherwise(F.col("text")),
     )
-    delta = ingest_pipeline(edited, ingest_run_id="r2", llm_factory=DeterministicLLM)
-    fresh = delta.rows.persist()
-    fresh.count()
 
-    merged = merge_vector_tables(existing, fresh)
-    # other repos bit-identical
-    other_before = existing.filter(F.col("repo") != repo).select("row_id")
-    other_after = merged.filter(F.col("repo") != repo).select("row_id")
-    assert other_before.exceptAll(other_after).count() == 0
-    assert other_after.exceptAll(other_before).count() == 0
-    # the edited repo's rows come only from the fresh ingest
-    assert (
-        merged.filter(F.col("repo") == repo).select("row_id").exceptAll(
-            fresh.filter(F.col("repo") == repo).select("row_id")
-        ).count()
-        == 0
-    )
-    stats = {r.repo: r for r in ingest_delta_stats(existing, fresh).collect()}
-    s = stats[repo]
-    # location-addressed ids: untouched files keep id AND body; the
-    # edited file keeps its chunk ids but the body fingerprint moves
-    assert s.unchanged > 0
-    assert s.updated > 0 or s.added > 0
-    existing.unpersist(); fresh.unpersist()
-    full.unpersist(); delta.unpersist()
+    def chunks(d, run_id):
+        res = ingest_pipeline(d, ingest_run_id=run_id, llm_factory=DeterministicLLM)
+        rows = res.rows.filter((F.col("scope") == "chunk") & (F.col("repo") == repo))
+        got = {
+            (r.file_path == changed_path, r.row_id): r.h
+            for r in rows.select("file_path", "row_id", F.md5("body").alias("h")).collect()
+        }
+        res.unpersist()
+        return got
+
+    before, after = chunks(docs, "r1"), chunks(edited, "r2")
+    kept = {k: h for k, h in before.items() if not k[0]}
+    assert kept and kept == {k: h for k, h in after.items() if not k[0]}
+    old = {k[1]: h for k, h in before.items() if k[0]}
+    new = {k[1]: h for k, h in after.items() if k[0]}
+    assert old and set(old) == set(new)
+    assert old != new
 
 
 def test_ingest_rows_serve_through_ivf_store(spark, tmp_path):

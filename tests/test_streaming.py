@@ -379,6 +379,91 @@ def test_compact_store_drops_superseded_versions(spark, tmp_path):
     assert spark.read.parquet(store).count() == raw_after
 
 
+def _two_version_store(spark, tmp_path):
+    """A stream store holding repoA at batches 0 and 1, repoB at 0."""
+    from githubrepostorag_spark.streaming.ingest import stream_ingest_docs
+
+    src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+    schema = "repo string, file_path string, text string"
+    for rows in (
+        [("repoA", "m0/a.py", "def a():\n    return 1\n" * 100),
+         ("repoB", "m0/b.py", "def b():\n    return 2\n" * 100)],
+        [("repoA", "m0/a.py", "def a():\n    return 9\n" * 50)],
+    ):
+        spark.createDataFrame(rows, schema).write.mode("append").json(src)
+        stream_ingest_docs(spark.readStream.schema(schema).json(src), store, ckpt).awaitTermination(300)
+    return store
+
+
+def test_stream_replayed_batch_overwrites_its_own_version(spark, tmp_path):
+    """A batch id re-delivered after its parquet commit (the checkpoint
+    commit lost) replaces its own version instead of adding a copy."""
+    from githubrepostorag_spark.streaming.ingest import (
+        read_latest_store,
+        stream_ingest_docs,
+    )
+
+    src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+    schema = "repo string, file_path string, text string"
+    spark.createDataFrame(
+        [("repoA", "m0/a.py", "def a():\n    return 1\n"),
+         ("repoB", "m0/b.py", "def b():\n    return 2\n")],
+        schema,
+    ).write.json(src)
+
+    def run():
+        stream_ingest_docs(spark.readStream.schema(schema).json(src), store, ckpt).awaitTermination(300)
+
+    run()
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+    run()  # batch 0 replays
+    ids = [r.row_id for r in read_latest_store(spark, store).select("row_id").collect()]
+    assert len(ids) == len(set(ids)) == 2
+
+
+def test_latest_view_resolved_before_compaction_still_reads(spark, tmp_path):
+    from githubrepostorag_spark.streaming.ingest import compact_store, read_latest_store
+
+    store = _two_version_store(spark, tmp_path)
+
+    def facts(df):
+        return sorted(df.select("repo", "batch_id", "row_id", F.md5("body")).collect())
+
+    want = facts(read_latest_store(spark, store))
+    view = read_latest_store(spark, store)  # resolved, not run
+    compact_store(spark, store)
+    assert facts(view) == want
+    assert facts(read_latest_store(spark, store)) == want
+
+
+def test_latest_view_is_a_scan_of_the_newest_versions(spark, tmp_path):
+    """The latest view is a plain scan of each repo's newest version
+    directory, and compaction runs no Spark job."""
+    from githubrepostorag_spark.streaming.ingest import compact_store, read_latest_store
+
+    store = _two_version_store(spark, tmp_path)
+    newest = {
+        os.path.join(d, f)
+        for d in (f"{store}/repo=repoA/batch_id=1", f"{store}/repo=repoB/batch_id=0")
+        for f in os.listdir(d)
+        if f.endswith(".parquet")
+    }
+    view = read_latest_store(spark, store)
+    plan = view._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Window" not in plan
+    assert {os.path.normpath(f.split("file:", 1)[1]) for f in view.inputFiles()} == newest
+
+    sc = spark.sparkContext
+    sc.setJobGroup("stream-compact", "stream-compact")
+    try:
+        compact_store(spark, store)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("stream-compact") == []
+    assert not os.path.exists(f"{store}/repo=repoA/batch_id=0")
+
+
 def test_stream_heavy_hitters_mg_guarantee_across_batches(spark, tmp_path):
     """Misra-Gries state carries across micro-batches: after the whole
     (bounded) stream, every user whose TRUE count exceeds
