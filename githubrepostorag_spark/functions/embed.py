@@ -47,16 +47,44 @@ def _token_vector(token: str, dim: int) -> np.ndarray:
     return np.frombuffer(raw, dtype=np.uint8, count=dim).astype(np.float64) / 255.0 - 0.5
 
 
+def embed_batch(texts, dim: int = EMBED_DIM) -> np.ndarray:
+    """Deterministic document embeddings, (len(texts), dim) float64: each
+    row is the L2-normalized sum of its tokens' vectors (zeros for no
+    tokens). One token-vector matrix serves the batch vocabulary
+    (corpora repeat tokens heavily), then one fancy-index + sum per
+    document instead of a per-token loop. Token vectors memoize across
+    batches and calls: Spark reuses the Python worker process, and the
+    vocabulary is tiny relative to total token count, so the sha256
+    expansion runs once per distinct token per process (capped to bound
+    memory)."""
+    memo = _TOKEN_VEC_MEMO.setdefault(dim, {})
+    doc_tokens = [(t or "").lower().split() for t in texts]
+    vocab: dict[str, int] = {}
+    for toks in doc_tokens:
+        for tok in toks:
+            if tok not in vocab:
+                vocab[tok] = len(vocab)
+    mat = np.zeros((max(len(vocab), 1), dim))
+    for tok, i in vocab.items():
+        vec = memo.get(tok)
+        if vec is None:
+            vec = _token_vector(tok, dim)
+            if len(memo) < _TOKEN_VEC_MEMO_CAP:
+                memo[tok] = vec
+        mat[i] = vec
+
+    out = np.zeros((len(doc_tokens), dim))
+    for row, toks in zip(out, doc_tokens):
+        if toks:
+            acc = mat[[vocab[t] for t in toks]].sum(axis=0)
+            n = np.linalg.norm(acc)
+            row[:] = acc / n if n > 0 else acc
+    return out
+
+
 def embed_text(text: str, dim: int = EMBED_DIM) -> np.ndarray:
-    """Deterministic document embedding: normalized sum of token vectors."""
-    tokens = (text or "").lower().split()
-    if not tokens:
-        return np.zeros(dim)
-    acc = np.zeros(dim)
-    for tok in tokens:
-        acc += _token_vector(tok, dim)
-    n = np.linalg.norm(acc)
-    return acc / n if n > 0 else acc
+    """One document's embedding (float64): the query-side `embed_batch`."""
+    return embed_batch([text], dim)[0]
 
 
 _EMBEDDER_CACHE: dict[int, object] = {}
@@ -74,40 +102,7 @@ def make_hash_embedder(dim: int = EMBED_DIM):
 
     @pandas_udf("array<float>")
     def hash_embed(texts: pd.Series) -> pd.Series:
-        # vectorized over the Arrow batch: one token-vector matrix for
-        # the batch vocabulary (corpora repeat tokens heavily), then one
-        # fancy-index + sum per document instead of a per-token loop.
-        # Token vectors memoize across batches/tasks: Spark reuses the
-        # Python worker process, and corpus vocabulary is tiny relative
-        # to total token count, so the 12-digest sha256 expansion runs
-        # once per distinct token per executor (capped to bound memory).
-        memo = _TOKEN_VEC_MEMO.setdefault(dim, {})
-        doc_tokens = [(t or "").lower().split() for t in texts]
-        vocab: dict[str, int] = {}
-        for toks in doc_tokens:
-            for tok in toks:
-                if tok not in vocab:
-                    vocab[tok] = len(vocab)
-        mat = np.zeros((max(len(vocab), 1), dim))
-        for tok, i in vocab.items():
-            vec = memo.get(tok)
-            if vec is None:
-                vec = _token_vector(tok, dim)
-                if len(memo) < _TOKEN_VEC_MEMO_CAP:
-                    memo[tok] = vec
-            mat[i] = vec
-
-        out = []
-        for toks in doc_tokens:
-            if not toks:
-                out.append([0.0] * dim)
-                continue
-            acc = mat[[vocab[t] for t in toks]].sum(axis=0)
-            n = np.linalg.norm(acc)
-            if n > 0:
-                acc = acc / n
-            out.append(acc.astype(np.float32).tolist())
-        return pd.Series(out)
+        return pd.Series(embed_batch(texts, dim).astype(np.float32).tolist())
 
     _EMBEDDER_CACHE[dim] = hash_embed
     return hash_embed

@@ -14,12 +14,14 @@ This engine's equivalents:
   fallback the reference itself uses whenever tree-sitter is missing
   (ImportError path) — semantics preserved, and a real tree-sitter
   callable can be slotted into the same explode shape as a pandas UDF.
-- text fallback / catalog path: char-window splitter with overlap,
-  same built-in shape, parameterized (4000/200 and 1500/100).
+- text fallback: char-window splitter (4000/200), same built-in shape.
+  The reference's catalog splitter (C4, 1500/100) has no counterpart:
+  summary and catalog docs are one row each, built whole by
+  `operators.hierarchy`.
 - notebook normalizer (C5): pure function of the .ipynb JSON, ported
   rule-for-rule (setup-cell regexes, markdown keep, fenced code,
   output-heavy detection) as a scalar pandas UDF (Arrow-batched).
-- kernel language detection (C6): JSON path extraction, column-side.
+- kernel language detection (C6): a pure function of the .ipynb JSON.
 """
 
 from __future__ import annotations
@@ -37,8 +39,6 @@ CODE_CHUNK_LINES_OVERLAP = 10
 CODE_MAX_CHARS = 4000
 TEXT_CHUNK_SIZE = 4000
 TEXT_CHUNK_OVERLAP = 200
-CATALOG_CHUNK_SIZE = 1500
-CATALOG_CHUNK_OVERLAP = 100
 
 
 def _line_chunks(text: Column) -> Column:
@@ -96,7 +96,9 @@ def _char_chunks(text: Column, size: int, overlap: int) -> Column:
 
 def split_code_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """C1-C3 dispatch: line-window chunker for known code languages,
-    char-window fallback otherwise — one explode, no shuffle."""
+    char-window fallback otherwise — one explode, no shuffle. The chunk
+    struct unpacks in one projection (withColumn chains re-analyze the
+    plan per call — measurable across the ingest lineage)."""
     known_code = F.col("language").isin(
         "python", "java", "kotlin", "go", "javascript", "typescript", "ruby", "rust",
         "c", "cpp", "csharp", "php", "scala", "swift", "bash", "zsh", "notebook",
@@ -104,12 +106,6 @@ def split_code_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
     chunks = F.when(known_code, _line_chunks(F.col(text_col))).otherwise(
         _char_chunks(F.col(text_col), TEXT_CHUNK_SIZE, TEXT_CHUNK_OVERLAP)
     )
-    return _exploded_chunks(docs, chunks, text_col)
-
-
-def _exploded_chunks(docs: DataFrame, chunks, text_col: str) -> DataFrame:
-    """Explode + unpack in two projections (withColumn chains re-analyze
-    the plan per call — measurable across the ingest lineage)."""
     out = docs.withColumn("c", F.explode(chunks)).drop(text_col)
     return out.withColumns(
         {
@@ -119,12 +115,6 @@ def _exploded_chunks(docs: DataFrame, chunks, text_col: str) -> DataFrame:
             "end_line": F.col("c.end_line"),
         }
     ).drop("c")
-
-
-def split_catalog_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """C4: 1500/100 char splitter for catalog/summary docs."""
-    chunks = _char_chunks(F.col(text_col), CATALOG_CHUNK_SIZE, CATALOG_CHUNK_OVERLAP)
-    return _exploded_chunks(docs, chunks, text_col)
 
 
 # --------------------------------------------------------------------------
@@ -241,14 +231,6 @@ def normalize_notebook_udf():
     @pandas_udf("string")
     def _udf(texts: pd.Series) -> pd.Series:
         return texts.map(normalize_notebook_text)
-
-    return _udf
-
-
-def kernel_language_udf():
-    @pandas_udf("string")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(detect_kernel_language)
 
     return _udf
 

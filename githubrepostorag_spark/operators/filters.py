@@ -197,23 +197,3 @@ def attach_common_metadata(
         }
     )
 
-
-# F8/F9: query-side heuristics (agent_graph.py:33-42)
-CODEY_TERMS = (
-    "stacktrace", "traceback", "exception", "error", "class ", "function ", "method ",
-    "nullpointer", "undefined", "timeout", "reconnect", "retry", "activemq", "jms",
-)
-
-
-def looks_codey(query: Column) -> Column:
-    ql = F.lower(query)
-    cond = None
-    for term in CODEY_TERMS:
-        clause = ql.contains(term)
-        cond = clause if cond is None else (cond | clause)
-    return cond
-
-
-def repo_hint(query: Column) -> Column:
-    """F8: regex repo-hint extraction; empty string when absent."""
-    return F.regexp_extract(query, r"(?i)(?:repo(?:sitory)?[:\s]+)([\w\-./]+)", 1)

@@ -105,16 +105,6 @@ def finalize_vectors(
     )
 
 
-def build_vector_rows(
-    nodes: DataFrame, scope: str, embedder=None, dim: int | None = None
-) -> DataFrame:
-    """nodes (one scope) → storage rows: row_id, body, vector, metadata,
-    promoted columns. Embeds + normalizes + sanitizes. `embedder`/`dim`
-    pass through the pluggable seam in functions.embed.with_embedding
-    (dim-guarded: a real model of the wrong width fails fast)."""
-    return finalize_vectors(storage_projection(nodes, scope), embedder=embedder, dim=dim)
-
-
 def write_vector_tables(rows: DataFrame, path: str) -> None:
     """Partitioned parquet sink — scope+namespace pruning, repo/module
     row-group ordering."""

@@ -489,27 +489,3 @@ class GraphRAGAgent:
             self.synthesize(st)
             st.emit("final", answer_length=len(st.answer or ""), scope=st.scope)
         return states
-
-    def answers_df(self, states: list[QueryState]) -> DataFrame:
-        rows = [
-            (
-                st.job_id,
-                st.answer or "",
-                st.scope,
-                json.dumps(st.sources),
-            )
-            for st in states
-        ]
-        return self.spark.createDataFrame(
-            rows, "job_id string, answer string, scope string, sources string"
-        )
-
-    def events_df(self, states: list[QueryState]) -> DataFrame:
-        rows = []
-        for st in states:
-            for e in st.events:
-                e = dict(e)
-                rows.append(
-                    (e.pop("job_id"), e.pop("seq"), e.pop("event"), json.dumps(e, default=str))
-                )
-        return self.spark.createDataFrame(rows, "job_id string, seq int, event string, data string")

@@ -10,12 +10,13 @@ Structured Streaming equivalent:
 
     queries stream (file/Kafka source, schema = QueryRequest)
       → foreachBatch: cancel-filter → GraphRAGAgent.run_batch
-      → append to an `answers` sink and a per-stage `events` sink
+      → one file per trigger in an `answers` sink and a per-stage
+        `events` sink
 
 - S8 queue: the streaming source IS the queue; `maxFilesPerTrigger`
   (or Kafka `maxOffsetsPerTrigger`) caps jobs per micro-batch like the
   reference's max_jobs.
-- S9 event bus: the agent's per-stage events append to the events sink
+- S9 event bus: the agent's per-stage events land in the events sink
   (job_id, seq, event, data) — consumers tail it exactly like the
   Redis channel; SSE framing stays API-layer, out of engine scope.
 - S10 cancel: `CancelFlags` is a flag-file directory (any process can
@@ -23,19 +24,31 @@ Structured Streaming equivalent:
   the agent runs, mirroring worker.py:121-124. Cancelled jobs emit a
   `final {cancelled: true}` event and an empty answer.
 
-Scale: each micro-batch of queries is tiny (job rows, not data rows);
-the heavy lifting inside `run_batch` is the same partition-parallel
-retrieval plan as batch mode, and checkpointing gives exactly-once
-sink appends across restarts.
+Each job is answered once, also across a restart. foreachBatch is
+at-least-once: an epoch whose sink writes landed before its checkpoint
+commit runs again after a restart. So the driver, which holds a
+trigger's rows anyway (one per job or event), writes each sink's file
+itself, named by the epoch id and a hash of the checkpoint path, under
+a hidden temp name renamed over the final one:
+- a replayed epoch replaces its own two files;
+- a reader of a sink (Spark and pyarrow both skip hidden names) sees
+  all of a trigger's rows or none;
+- two job streams with different checkpoints can share a sink.
+A trigger runs one Spark job, the dequeue `collect`; below the store's
+snapshot bound the agent runs none (`operators.retrieval.store_snapshot`).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from collections.abc import Callable
+from urllib.parse import urlparse
 
 import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from githubrepostorag_spark.plans.agent import GraphRAGAgent
@@ -51,15 +64,16 @@ EVENT_SCHEMA = pa.schema(
 )
 
 
-def _append(spark: SparkSession, rows: list[tuple], schema: pa.Schema, path: str) -> None:
-    """Append `rows` (tuples in `schema` order) to the parquet sink at
-    `path` as one file. The rows are control-plane small (one per job or
-    event of a trigger), so they ship to the JVM as one Arrow table and
-    are written by one task: a list of tuples is pickled and unpickled
-    row by row, then written as one file per core, which made the two
-    appends the slowest and least steady step of a trigger."""
+def _commit(rows: list[tuple], schema: pa.Schema, sink: str, name: str) -> None:
+    """Write `rows` (tuples in `schema` order) as the one file `name` of
+    the parquet sink at `sink`: written under a hidden temp name, then
+    renamed over `name`, so a rewrite replaces it whole."""
     table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
-    spark.createDataFrame(table).coalesce(1).write.mode("append").parquet(path)
+    fs, root = pafs.FileSystem.from_uri(sink if urlparse(sink).scheme else os.path.abspath(sink))
+    fs.create_dir(root, recursive=True)
+    tmp = f"{root}/.{name}.tmp"
+    pq.write_table(table, tmp, filesystem=fs)
+    fs.move(tmp, f"{root}/{name}")
 
 
 class CancelFlags:
@@ -111,6 +125,9 @@ def run_job_stream(
     job-plane shutdown (the reference's worker SIGTERM).
     """
     spark = queries.sparkSession
+    # names the stream's files in a shared sink; a restart from the same
+    # checkpoint reproduces them, so a replayed epoch overwrites its own
+    tag = hashlib.sha1(os.path.normpath(checkpoint_path).encode()).hexdigest()[:8]
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # job rows are control-plane small — collecting them IS the
@@ -147,8 +164,9 @@ def run_job_stream(
                     event_rows.append(
                         (e.pop("job_id"), e.pop("seq"), e.pop("event"), json.dumps(e, default=str))
                     )
-        _append(spark, answer_rows, ANSWER_SCHEMA, answers_path)
-        _append(spark, event_rows, EVENT_SCHEMA, events_path)
+        name = f"part-{epoch_id:05d}-{tag}.parquet"
+        _commit(answer_rows, ANSWER_SCHEMA, answers_path, name)
+        _commit(event_rows, EVENT_SCHEMA, events_path, name)
 
     writer = (
         queries.writeStream.foreachBatch(process_batch)

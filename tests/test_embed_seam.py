@@ -2,7 +2,7 @@
 
 The reference's embedding model is configured, not hardcoded
 (rag_shared/config.py:24-25); the engine mirrors that as the
-`embedder=` seam on with_embedding / build_vector_rows /
+`embedder=` seam on with_embedding / finalize_vectors /
 ingest_pipeline. These tests plug an arbitrary "real-model stand-in"
 pandas UDF through the seam and pin the dim guard: a model whose
 output width disagrees with the configured store dim must fail the
@@ -81,3 +81,42 @@ def test_token_vector_matches_per_block_formula(dim):
         got = _token_vector(token, dim)
         assert got.shape == (dim,) and got.dtype == np.float64
         assert got.tobytes() == reference(token).tobytes()
+
+
+def test_query_and_udf_embeddings_match_per_token_loop(spark):
+    """The query path (`embed_text`, float64) and the hash-embedder UDF
+    (float32) share one batch function; both equal the per-token loop
+    (kept here as the reference) bit for bit, on ASCII and non-ASCII
+    texts of 0-400 tokens."""
+    import random
+
+    import numpy as np
+
+    from githubrepostorag_spark.functions.embed import _token_vector, embed_text
+
+    def reference(text, dim=384):
+        acc = np.zeros(dim)
+        for tok in (text or "").lower().split():
+            acc += _token_vector(tok, dim)
+        n = np.linalg.norm(acc)
+        return acc / n if n > 0 else acc
+
+    rng = random.Random(7)
+    alpha = "abcdefghijklmnopqrstuvwxyz_.:()ÄöüßÉ日本語🙂"
+    texts = [
+        " ".join(
+            "".join(rng.choice(alpha) for _ in range(rng.randint(1, 8)))
+            for _ in range(rng.randint(0, 400))
+        )
+        for _ in range(500)
+    ] + ["", None, "  \n "]
+    for t in texts:
+        want, got = reference(t), embed_text(t)
+        assert got.dtype == np.float64 and got.tobytes() == want.tobytes()
+        assert np.float32(got).tobytes() == np.float32(want).tobytes()
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts[:40] + texts[-3:])],
+                               "i int, text string")
+    for r in with_embedding(df).collect():
+        want = np.float32(reference(r.text))
+        assert np.asarray(r.vector, dtype=np.float32).tobytes() == want.tobytes()

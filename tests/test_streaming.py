@@ -120,6 +120,65 @@ def test_job_stream_burst(spark, store, tmp_path):
     assert answers.filter(F.length("answer") > 0).count() == 1000
 
 
+def _job_stream(spark, store, tmp_path, jobs, queue="queries", ckpt="ckpt"):
+    """Queue `jobs` (one file each) and answer them in one available-now
+    run of the job stream into `answers`/`events`; returns the stopped
+    query."""
+    qdir = tmp_path / queue
+    qdir.mkdir(exist_ok=True)
+    for j in jobs:
+        (qdir / f"{j['job_id']}.json").write_text(json.dumps({**j, "namespace": "default"}))
+    q = run_job_stream(
+        read_query_stream(spark, str(qdir)),
+        store,
+        DeterministicLLM,
+        answers_path=str(tmp_path / "answers"),
+        events_path=str(tmp_path / "events"),
+        checkpoint_path=str(tmp_path / ckpt),
+        available_now=True,
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    return q
+
+
+def test_job_stream_replayed_epoch_replaces_its_answers(spark, store, tmp_path):
+    """An epoch re-run after a restart (its sink files written, its
+    checkpoint commit lost) replaces its answers and events instead of
+    adding a second copy; a torn temp file is invisible to readers."""
+    jobs = [{"job_id": "r1", "query": "tell me about the projects"},
+            {"job_id": "r2", "query": "how does the core run method work"}]
+    _job_stream(spark, store, tmp_path, jobs)
+    for name in ("0", ".0.crc"):
+        os.remove(tmp_path / "ckpt" / "commits" / name)
+    _job_stream(spark, store, tmp_path, [])  # epoch 0 replays
+    (tmp_path / "answers" / ".part-00001-0000.parquet.tmp").write_bytes(b"PAR1")  # a torn write
+    answers = spark.read.parquet(str(tmp_path / "answers"))
+    assert sorted(r.job_id for r in answers.collect()) == ["r1", "r2"]
+    finals = spark.read.parquet(str(tmp_path / "events")).filter(F.col("event") == "final")
+    assert sorted(r.job_id for r in finals.collect()) == ["r1", "r2"]
+
+
+def test_job_streams_share_a_sink(spark, store, tmp_path):
+    """Two job streams with their own checkpoints write epoch 0 into one
+    answers path; both triggers' rows survive."""
+    for s in "ab":
+        _job_stream(spark, store, tmp_path, [{"job_id": f"{s}1", "query": "tell me about the projects"}],
+                    queue=f"queries-{s}", ckpt=f"ckpt-{s}")
+    got = spark.read.parquet(str(tmp_path / "answers")).collect()
+    assert sorted(r.job_id for r in got) == ["a1", "b1"]
+
+
+def test_warmed_trigger_runs_one_spark_job(spark, store, tmp_path):
+    """Once the agent is warm, a trigger runs one Spark job: the dequeue
+    `collect`. The sink writes run none."""
+    _job_stream(spark, store, tmp_path, [{"job_id": "w0", "query": "tell me about the projects"}])
+    q = _job_stream(spark, store, tmp_path, [{"job_id": "w1", "query": "how does the core run method work"}])
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [1]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 1
+
+
 def test_stream_dedup_exact_keeps_one_per_fingerprint(spark, tmp_path):
     from pyspark.sql import functions as F
 
