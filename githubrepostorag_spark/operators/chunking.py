@@ -1,4 +1,4 @@
-"""Chunking / splitting operators (SURVEY C1-C6).
+"""Chunking / splitting rules (SURVEY C1-C6).
 
 The reference dispatches per-document to a tree-sitter CodeSplitter
 (chunk_lines=200, overlap=10, max_chars=4000) with a SentenceSplitter
@@ -6,22 +6,23 @@ fallback (chunk_size=4000, overlap=200), and a smaller splitter for
 summary/catalog docs (1500/100) — code_pipeline.py:14-54,
 langauge_detector.py:76-136, catalog_pipeline.py:15-22.
 
-This engine's equivalents:
-- code path: line-window splitter (200 lines, 10 overlap, 4000-char
-  cap) expressed entirely with built-in array functions — a narrow
-  flatMap stage, no shuffle, whole-stage codegen. tree-sitter is not in
-  this container; the line-window splitter is the language-agnostic
-  fallback the reference itself uses whenever tree-sitter is missing
-  (ImportError path) — semantics preserved, and a real tree-sitter
-  callable can be slotted into the same explode shape as a pandas UDF.
-- text fallback: char-window splitter (4000/200), same built-in shape.
+This engine's equivalents are plain functions over `str`, run inside
+the ingest's per-document pass (`plans.ingest`):
+- code path (`line_windows`): 200-line windows, 10 lines of overlap,
+  each cut to 4000 chars. tree-sitter is not in this container; the
+  line-window splitter is the language-agnostic fallback the reference
+  itself uses whenever tree-sitter is missing (ImportError path).
+- text fallback (`char_windows`): 4000-char windows, 200 of overlap.
   The reference's catalog splitter (C4, 1500/100) has no counterpart:
   summary and catalog docs are one row each, built whole by
   `operators.hierarchy`.
-- notebook normalizer (C5): pure function of the .ipynb JSON, ported
-  rule-for-rule (setup-cell regexes, markdown keep, fenced code,
-  output-heavy detection) as a scalar pandas UDF (Arrow-batched).
-- kernel language detection (C6): a pure function of the .ipynb JSON.
+- notebook normalizer (C5): .ipynb JSON → markdown + fenced code, ported
+  rule-for-rule (setup-cell regexes, markdown keep, output-heavy
+  detection).
+- kernel language detection (C6): the notebook's kernelspec language.
+
+`split_code_documents` applies the window rule to a DataFrame of
+documents in one `mapInArrow` (the stream tick and the parity plans).
 """
 
 from __future__ import annotations
@@ -29,10 +30,10 @@ from __future__ import annotations
 import json
 import re
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql import DataFrame
+
+from githubrepostorag_spark.functions.rows import extended, map_rows
 
 CODE_CHUNK_LINES = 200
 CODE_CHUNK_LINES_OVERLAP = 10
@@ -40,81 +41,62 @@ CODE_MAX_CHARS = 4000
 TEXT_CHUNK_SIZE = 4000
 TEXT_CHUNK_OVERLAP = 200
 
+# languages chunked by lines; every other language by chars
+CODE_LANGUAGES = frozenset((
+    "python", "java", "kotlin", "go", "javascript", "typescript", "ruby", "rust",
+    "c", "cpp", "csharp", "php", "scala", "swift", "bash", "zsh", "notebook",
+))
 
-def _line_chunks(text: Column) -> Column:
-    """array<struct<chunk_idx,chunk_text,start_line,end_line>> of
-    200-line windows with 10-line overlap, 4000-char cap per chunk.
 
-    The split-lines array is bound once per row by routing it through
-    a single-element array into a nested transform: a chunk lambda
-    that referenced the split EXPRESSION would re-split the whole
-    document per chunk (interpreted higher-order lambdas re-evaluate
-    their captures)."""
+def _n_windows(n: int, size: int, stride: int) -> int:
+    return 1 if n <= size else 1 + (n - size + stride - 1) // stride
+
+
+def line_windows(text: str) -> list[tuple[str, int, int]]:
+    """(chunk text, start_line, end_line) of 200-line windows that
+    overlap by 10 lines, each cut to 4000 chars; end_line stops at the
+    last line."""
+    lines = text.split("\n")
     stride = CODE_CHUNK_LINES - CODE_CHUNK_LINES_OVERLAP
-
-    def per_doc(ls: Column) -> Column:
-        n_lines = F.size(ls)
-        n_chunks = F.when(n_lines <= CODE_CHUNK_LINES, F.lit(1)).otherwise(
-            F.lit(1)
-            + F.floor(
-                (n_lines - F.lit(CODE_CHUNK_LINES) + F.lit(stride - 1)) / F.lit(stride)
-            ).cast("int")
-        )
-        return F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.struct(
-                i.cast("long").alias("chunk_idx"),
-                F.substring(
-                    F.array_join(F.slice(ls, i * stride + 1, F.lit(CODE_CHUNK_LINES)), "\n"),
-                    1,
-                    CODE_MAX_CHARS,
-                ).alias("chunk_text"),
-                (i * stride).cast("long").alias("start_line"),
-                F.least(i * stride + CODE_CHUNK_LINES, F.size(ls)).cast("long").alias("end_line"),
-            ),
-        )
-
-    return F.get(F.transform(F.array(F.split(text, "\n")), per_doc), 0)
+    out = []
+    for i in range(_n_windows(len(lines), CODE_CHUNK_LINES, stride)):
+        start = i * stride
+        window = "\n".join(lines[start:start + CODE_CHUNK_LINES])
+        out.append((window[:CODE_MAX_CHARS], start, min(start + CODE_CHUNK_LINES, len(lines))))
+    return out
 
 
-def _char_chunks(text: Column, size: int, overlap: int) -> Column:
-    stride = size - overlap
-    n = F.length(text)
-    n_chunks = F.when(n <= size, F.lit(1)).otherwise(
-        F.lit(1) + F.floor((n - F.lit(size) + F.lit(stride - 1)) / F.lit(stride)).cast("int")
-    )
-    return F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.struct(
-            i.cast("long").alias("chunk_idx"),
-            F.substring(text, i * stride + 1, F.lit(size)).alias("chunk_text"),
-            (i * stride).cast("long").alias("start_line"),
-            (i * stride + size).cast("long").alias("end_line"),
-        ),
-    )
+def char_windows(text: str) -> list[tuple[str, int, int]]:
+    """(chunk text, start offset, start + 4000) of 4000-char windows
+    that overlap by 200 chars."""
+    size, stride = TEXT_CHUNK_SIZE, TEXT_CHUNK_SIZE - TEXT_CHUNK_OVERLAP
+    return [
+        (text[i * stride:i * stride + size], i * stride, i * stride + size)
+        for i in range(_n_windows(len(text), size, stride))
+    ]
+
+
+def chunk_windows(text: str, language) -> list[tuple[str, int, int]]:
+    """C1-C3 dispatch: line windows for code languages, char windows
+    otherwise. Every document yields at least one window."""
+    return line_windows(text) if language in CODE_LANGUAGES else char_windows(text)
 
 
 def split_code_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """C1-C3 dispatch: line-window chunker for known code languages,
-    char-window fallback otherwise — one explode, no shuffle. The chunk
-    struct unpacks in one projection (withColumn chains re-analyze the
-    plan per call — measurable across the ingest lineage)."""
-    known_code = F.col("language").isin(
-        "python", "java", "kotlin", "go", "javascript", "typescript", "ruby", "rust",
-        "c", "cpp", "csharp", "php", "scala", "swift", "bash", "zsh", "notebook",
-    )
-    chunks = F.when(known_code, _line_chunks(F.col(text_col))).otherwise(
-        _char_chunks(F.col(text_col), TEXT_CHUNK_SIZE, TEXT_CHUNK_OVERLAP)
-    )
-    out = docs.withColumn("c", F.explode(chunks)).drop(text_col)
-    return out.withColumns(
-        {
-            "chunk_idx": F.col("c.chunk_idx"),
-            "text": F.col("c.chunk_text"),
-            "start_line": F.col("c.start_line"),
-            "end_line": F.col("c.end_line"),
-        }
-    ).drop("c")
+    """docs(…, language, text) → one row per window: the document's
+    columns with `text_col` replaced by the window, plus chunk_idx,
+    start_line and end_line."""
+    spans = [pa.field(c, pa.int64()) for c in ("chunk_idx", "start_line", "end_line")]
+
+    def split(rows):
+        return [
+            dict(r, **{text_col: chunk}, chunk_idx=i, start_line=start, end_line=end)
+            for r in rows
+            if r[text_col] is not None
+            for i, (chunk, start, end) in enumerate(chunk_windows(r[text_col], r["language"]))
+        ]
+
+    return map_rows(docs, split, extended(docs, *spans))
 
 
 # --------------------------------------------------------------------------
@@ -223,24 +205,3 @@ def detect_kernel_language(raw: str) -> str:
         return (ks.get("language") or ks.get("name") or "python").lower()
     except Exception:
         return "python"
-
-
-def normalize_notebook_udf():
-    """Built lazily — pandas_udf type parsing needs an active session."""
-
-    @pandas_udf("string")
-    def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(normalize_notebook_text)
-
-    return _udf
-
-
-def transform_special_files(docs: DataFrame, path_col: str = "file_path") -> DataFrame:
-    """Apply the notebook normalizer to .ipynb rows (other rows pass
-    through untouched) — the engine form of transform_special_files
-    (transform_service.py:83-109)."""
-    is_nb = F.lower(F.col(path_col)).endswith(".ipynb")
-    return docs.withColumn(
-        "text",
-        F.when(is_nb, normalize_notebook_udf()(F.col("text"))).otherwise(F.col("text")),
-    )

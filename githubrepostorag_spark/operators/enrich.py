@@ -3,23 +3,25 @@
 The reference runs three llama-index extractors over every code chunk
 (code_pipeline_service.py:26-51): SummaryExtractor → `section_summary`,
 TitleExtractor → `document_title`, KeywordExtractor(keywords=10) →
-`excerpt_keywords`. Each becomes one batched Arrow pandas UDF adding a
-metadata column; the LLM client is pluggable (DeterministicLLM in
-tests/oracles, HTTP backend in production) and every response passes
-the L12 sanitizer.
+`excerpt_keywords`. Here that is `enrich`, a plain function of one
+chunk's text: three prompts to a pluggable LLM client
+(DeterministicLLM in tests/oracles, HTTP backend in production), each
+response passed through the L12 sanitizer. The ingest's per-document
+pass (`plans.ingest`) calls it for every chunk it cuts.
 
-Scale shape: three narrow map-side stages, no shuffle; batching is the
-Arrow batch size. At 100 TB the LLM endpoint is the bottleneck, not
-Spark — parallelism is executor-count × endpoint replicas.
+At 100 TB the LLM endpoint is the bottleneck, not Spark — parallelism
+is executor-count × endpoint replicas.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from githubrepostorag_spark.functions.rows import extended, map_rows
+from githubrepostorag_spark.llm.stub import sanitize_llm_output
 
 SECTION_SUMMARY_PROMPT = (
     "Write a 2-3 sentence section summary of this code chunk for a "
@@ -33,43 +35,29 @@ EXCERPT_KEYWORDS_PROMPT = (
     "\nContent:{text}"
 )
 
+ENRICH_FIELDS = {
+    "section_summary": SECTION_SUMMARY_PROMPT,
+    "document_title": DOCUMENT_TITLE_PROMPT,
+    "excerpt_keywords": EXCERPT_KEYWORDS_PROMPT,
+}
+
+
+def enrich(llm, text: str) -> dict:
+    """section_summary / document_title / excerpt_keywords of one chunk."""
+    return {
+        field: sanitize_llm_output(llm.complete(prompt.format(text=text)))
+        for field, prompt in ENRICH_FIELDS.items()
+    }
+
 
 def enrich_chunks(
     chunks: DataFrame, llm_factory: Callable, text_col: str = "text"
 ) -> DataFrame:
-    """Attach section_summary / document_title / excerpt_keywords.
+    """`chunks` with the three enrichment columns, in one `mapInArrow`."""
 
-    ONE struct-returning Arrow UDF, not three scalar UDFs: Spark fuses
-    adjacent Python UDFs into a single ArrowEvalPython node but still
-    serializes the shared input column once PER UDF — the combined
-    form ships the chunk text to Python once and makes one call per
-    batch (measured ~15% off the whole ingest pipeline, which is
-    enrichment-dominated).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    from githubrepostorag_spark.llm.stub import sanitize_llm_output
-
-    @pandas_udf("section_summary string, document_title string, excerpt_keywords string")
-    def enrich_all(texts: pd.Series) -> pd.DataFrame:
+    def enriched(rows):
         llm = llm_factory()
+        return [dict(r, **enrich(llm, r[text_col])) for r in rows]
 
-        def one(t):
-            return (
-                sanitize_llm_output(llm.complete(SECTION_SUMMARY_PROMPT.format(text=t))),
-                sanitize_llm_output(llm.complete(DOCUMENT_TITLE_PROMPT.format(text=t))),
-                sanitize_llm_output(llm.complete(EXCERPT_KEYWORDS_PROMPT.format(text=t))),
-            )
-
-        rows = [one(t) for t in texts]
-        return pd.DataFrame(
-            rows, columns=["section_summary", "document_title", "excerpt_keywords"]
-        )
-
-    return (
-        chunks.withColumn("_enriched", enrich_all(F.col(text_col)))
-        .withColumn("section_summary", F.col("_enriched.section_summary"))
-        .withColumn("document_title", F.col("_enriched.document_title"))
-        .withColumn("excerpt_keywords", F.col("_enriched.excerpt_keywords"))
-        .drop("_enriched")
-    )
+    fields = [pa.field(f, pa.string()) for f in ENRICH_FIELDS]
+    return map_rows(chunks, enriched, extended(chunks, *fields))

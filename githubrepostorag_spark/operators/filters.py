@@ -1,25 +1,23 @@
 """Document filtering / language tagging / component-kind inference.
 
-Engine form of the reference's preprocess stage (SURVEY F1-F4):
-- F1 document filter: extension blacklist, filename blacklist, JSON
-  data-file patterns (reference: ingest/src/app/services/
+The reference's preprocess rules (SURVEY F1-F3) as plain functions over
+a file path:
+- F1 `keep`: extension blacklist, filename blacklist, JSON data-file
+  patterns (reference: ingest/src/app/services/
   transform_service.py:10-37,56-80).
-- F2 language tagging: extension → language map + special cases
-  (reference: preprocess_service.py:11-55, config.py:51-84).
-- F3 component-kind inference: standalone iff repo has a notebook and
-  no manifest/openapi (reference: transform_service.py:112-127).
-- F4 metadata attach: constant + derived columns incl. scope from
-  doc_type (reference: ingest_controller.py:164-189).
+- F2 `language`: filename special cases, then the extension map, then
+  the reference's fallback ladder (preprocess_service.py:11-55,
+  config.py:51-84).
+- A2 `module`: the first path segment (scope_utils.py:8-11).
+- F3 `component_kind`: standalone iff the repo has a notebook and no
+  manifest/openapi (transform_service.py:112-127), from its kept paths.
 
-All pure column expressions — whole-stage codegen, predicate pushdown
-(the F1 filter lands in the parquet scan when file metadata columns are
-stored), zero Python in the row path.
+The ingest's per-document pass (`plans.ingest`) and the parity plans
+call these same functions; F4's constant metadata is attached by that
+pass and by the storage projection.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 # F1 blacklists — same observable sets as the reference
 # (transform_service.py:10-37). Note the reference's skip-set contains a
@@ -72,128 +70,54 @@ MANIFEST_NAMES = ("package.json", "pyproject.toml", "pom.xml")
 OPENAPI_HINTS = ("openapi", "swagger")
 
 
-def file_name(path: Column) -> Column:
-    return F.lower(F.element_at(F.split(path, "/"), -1))
+def file_name(path: str) -> str:
+    return path.rsplit("/", 1)[-1].lower()
 
 
-def file_ext(path: Column) -> Column:
-    # os.path.splitext semantics (the reference's rule): a leading dot
-    # alone (".gitignore") is NOT an extension — require a '.' after
-    # position 1 of the filename.
-    name = F.element_at(F.split(path, "/"), -1)
-    has_ext = F.instr(F.substring(name, 2, 1_000_000), ".") > 0
-    return F.when(
-        has_ext, F.concat(F.lit("."), F.lower(F.element_at(F.split(name, r"\."), -1)))
-    ).otherwise(F.lit(""))
+def file_ext(path: str) -> str:
+    """os.path.splitext semantics (the reference's rule): a leading dot
+    alone (".gitignore") is NOT an extension."""
+    name = path.rsplit("/", 1)[-1]
+    return "." + name.rsplit(".", 1)[-1].lower() if "." in name[1:] else ""
 
 
-def keep_document(path: Column) -> Column:
+def keep(path: str) -> bool:
     """F1: True for documents that survive the skip-list filter."""
-    ext = file_ext(path)
-    name = file_name(path)
-    json_data = (ext == ".json") & name.isin(*SKIP_JSON_PATTERNS)
-    return ~(json_data | ext.isin(*SKIP_EXT) | name.isin(*SKIP_NAMES))
+    ext, name = file_ext(path), file_name(path)
+    json_data = ext == ".json" and name in SKIP_JSON_PATTERNS
+    return not (json_data or ext in SKIP_EXT or name in SKIP_NAMES)
 
 
-def filter_documents(docs: DataFrame, path_col: str = "file_path") -> DataFrame:
-    return docs.filter(keep_document(F.col(path_col)))
+def language(path: str) -> str:
+    """F2: special names, then the extension map, then the bare
+    extension, then the lowercased filename."""
+    name, ext = file_name(path), file_ext(path)
+    if name == "dockerfile":
+        return "dockerfile"
+    if "docker-compose" in name and name.endswith((".yml", ".yaml")):
+        return "yaml"
+    return EXTENSION_TO_LANGUAGE.get(ext, ext[1:] if ext else name)
 
 
-def language_of(path: Column) -> Column:
-    """F2: language from filename special cases, then the extension map,
-    then the reference's fallback ladder."""
-    name = file_name(path)
-    ext = file_ext(path)
-    expr = None
-    for e, lang in EXTENSION_TO_LANGUAGE.items():
-        clause = F.when(ext == e, F.lit(lang))
-        expr = clause if expr is None else expr.when(ext == e, F.lit(lang))
-    mapped = expr.otherwise(
-        F.when(ext != "", F.regexp_replace(ext, r"^\.", "")).otherwise(name)
-    )
-    return (
-        F.when(name == "dockerfile", F.lit("dockerfile"))
-        .when(
-            name.contains("docker-compose") & (name.endswith(".yml") | name.endswith(".yaml")),
-            F.lit("yaml"),
+def module(path: str, depth: int = 1) -> str:
+    """A2: the first `depth` path segments, '.'/'' parts dropped."""
+    return "/".join([p for p in path.split("/") if p not in ("", ".")][:depth])
+
+
+def kind_flags(paths) -> dict:
+    """F3 flags over a repo's kept file paths."""
+    flags = dict(has_notebook=False, has_manifest=False, has_openapi=False)
+    for path in paths:
+        name, ext = file_name(path), file_ext(path)
+        flags["has_notebook"] |= ext == ".ipynb"
+        flags["has_manifest"] |= name in MANIFEST_NAMES
+        flags["has_openapi"] |= ext in (".yaml", ".yml", ".json") and any(
+            h in name for h in OPENAPI_HINTS
         )
-        .otherwise(mapped)
-    )
+    return flags
 
 
-def tag_language(docs: DataFrame, path_col: str = "file_path") -> DataFrame:
-    return docs.withColumn("language", language_of(F.col(path_col)))
-
-
-def top_directory(path: Column, depth: int = 1) -> Column:
-    """A2: first `depth` path segments = module (reference
-    scope_utils.py:8-11 — '.'/'' parts dropped, '' for empty paths)."""
-    parts = F.filter(F.split(path, "/"), lambda x: (x != "") & (x != "."))
-    return F.array_join(F.slice(parts, 1, depth), "/")
-
-
-def with_module(docs: DataFrame, path_col: str = "file_path", depth: int = 1) -> DataFrame:
-    """A2/A3 prep: derive the `module` rollup key from the file path."""
-    return docs.withColumn("module", top_directory(F.col(path_col), depth))
-
-
-def infer_component_kind(docs: DataFrame, repo_col: str = "repo") -> DataFrame:
-    """F3: per-repo 'standalone' vs 'service' flags aggregate.
-
-    standalone iff the repo has an .ipynb and neither a manifest nor an
-    openapi spec (transform_service.py:112-127). One groupBy on repo —
-    at scale this is a tiny aggregate keyed by repo.
-    """
-    path = F.col("file_path")
-    name = file_name(path)
-    ext = file_ext(path)
-    flags = docs.groupBy(repo_col).agg(
-        F.max(ext == ".ipynb").alias("has_notebook"),
-        F.max(name.isin(*MANIFEST_NAMES)).alias("has_manifest"),
-        F.max(
-            name.rlike("|".join(OPENAPI_HINTS))
-            & (ext.isin(".yaml", ".yml", ".json"))
-        ).alias("has_openapi"),
-    )
-    return flags.withColumn(
-        "component_kind",
-        F.when(
-            F.col("has_notebook") & ~F.col("has_manifest") & ~F.col("has_openapi"),
-            F.lit("standalone"),
-        ).otherwise(F.lit("service")),
-    )
-
-
-def attach_common_metadata(
-    nodes: DataFrame,
-    *,
-    namespace: str,
-    branch: str = "main",
-    collection: str = "misc",
-    ingest_run_id: str,
-    dev_forced: bool = False,
-) -> DataFrame:
-    """F4: constant/derived metadata incl. scope from doc_type
-    (ingest_controller.py:164-189). `component_kind` must already be a
-    column (joined from infer_component_kind)."""
-    scope = (
-        F.when(F.col("doc_type") == "catalog", "catalog")
-        .when(F.col("doc_type") == "repo", "repo")
-        .when(F.col("doc_type") == "module", "module")
-        .when(F.col("doc_type") == "file", "file")
-        .otherwise("chunk")
-    )
-    # one projection, not seven: each withColumn re-analyzes the whole
-    # plan, which adds up across the ~15-stage ingest lineage
-    return nodes.withColumns(
-        {
-            "namespace": F.lit(namespace),
-            "branch": F.lit(branch),
-            "collection": F.lit(collection),
-            "is_standalone": F.col("component_kind") == "standalone",
-            "dev_forced_standalone": F.lit(dev_forced),
-            "ingest_run_id": F.lit(ingest_run_id),
-            "scope": scope,
-        }
-    )
-
+def component_kind(flags: dict) -> str:
+    """F3: 'standalone' iff a notebook and neither manifest nor openapi."""
+    standalone = flags["has_notebook"] and not (flags["has_manifest"] or flags["has_openapi"])
+    return "standalone" if standalone else "service"

@@ -17,10 +17,12 @@ sends each repo's enriched chunk rows and READMEs to ONE Python call
 for all four levels, no window, join or per-level UDF), which runs the
 per-level rules below in memory and returns the repo's chunk rows with
 its file, module, repo and catalog rows — every scope of the repo, for
-one storage projection and one embedding pass. The rules are plain
-Python over row dicts (`file_summaries`, `module_summaries`,
-`repo_overviews`, `catalog_docs`), so the parity plans (q37/q38/q46)
-run the same code against the DuckDB oracle. Member order is Spark's
+one storage projection and one embedding pass, each stamped with the
+repo's F3 component kind, inferred from its chunks' file paths
+(`filters.kind_flags`). The rules are plain Python over row dicts
+(`file_summaries`, `module_summaries`, `repo_overviews`,
+`catalog_docs`), so the parity plans (q37/q38/q46) run the same code
+against the DuckDB oracle. Member order is Spark's
 ascending order (NULLs first); ids follow `metadata.stable_node_id`.
 The price of one pass: all of a repo's rows sit in one Python worker.
 """
@@ -37,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from githubrepostorag_spark.llm.stub import sanitize_llm_output
+from githubrepostorag_spark.operators import filters as FL
 
 ROLLUP_TRUNCATE = 25_000  # hierarchy_summary_service.py:31,81,157
 MAX_FILES_PER_MODULE = 40  # :107
@@ -77,11 +80,12 @@ NODE_SCHEMA = pa.schema(
 )
 
 
-def node_id(scope: str, namespace, repo, module=None, file_path=None) -> str:
-    """F6 `metadata.stable_node_id` for a node without line span: sha1
-    over the '|'-joined identity fields, NULL joined as ''."""
-    parts = (scope, namespace, repo, module, file_path, None, None)
-    return hashlib.sha1("|".join(p or "" for p in parts).encode()).hexdigest()
+def node_id(scope: str, namespace, repo, module=None, file_path=None, start=None, end=None):
+    """F6 `metadata.stable_node_id`: sha1 over the '|'-joined identity
+    fields, NULL joined as ''."""
+    parts = (scope, namespace, repo, module, file_path, start, end)
+    ident = "|".join("" if p is None else str(p) for p in parts)
+    return hashlib.sha1(ident.encode()).hexdigest()
 
 
 def _order(values) -> tuple:
@@ -190,9 +194,11 @@ def catalog_docs(readmes, chunks, llm=None) -> list[dict]:
 
 
 def rollup_repo(llm_factory, table):
-    """applyInArrow kernel: one repo's enriched chunk rows and READMEs
-    (flagged `readme`) → its chunk rows as they came, then its file,
-    module, repo and catalog rows."""
+    """applyInArrow kernel: one repo's chunk rows and READMEs (flagged
+    `readme`) → its chunk rows as they came, then its file, module, repo
+    and catalog rows, all of the repo's F3 component kind. Every kept
+    document yields at least one chunk, so the chunks' paths are the
+    repo's kept files."""
     rows = table.to_pylist()
     chunks = [r for r in rows if not r["readme"]]
     if not chunks:
@@ -202,27 +208,24 @@ def rollup_repo(llm_factory, table):
     files = file_summaries(chunks, llm)
     modules = module_summaries(files, llm)
     nodes = [
+        *(dict(c, scope="chunk") for c in chunks),
         *files, *modules, *repo_overviews(modules, readmes, llm),
         *catalog_docs(readmes, chunks, llm),
     ]
+    kind = FL.component_kind(FL.kind_flags(c["file_path"] for c in chunks))
     for n in nodes:
-        n["component_kind"] = chunks[0]["component_kind"]
-    chunk_rows = (dict(c, scope="chunk") for c in chunks)
-    return pa.Table.from_pylist([*chunk_rows, *nodes], schema=NODE_SCHEMA)
+        n["component_kind"] = kind
+    return pa.Table.from_pylist(nodes, schema=NODE_SCHEMA)
 
 
-def rollup_hierarchy(chunks: DataFrame, readmes: DataFrame, llm_factory) -> DataFrame:
+def rollup_hierarchy(nodes: DataFrame, llm_factory) -> DataFrame:
     """A4-A7 for every repo in one grouped Arrow pass: `NODE_SCHEMA`
-    rows of all five scopes from the enriched chunks (FILE_KEYS,
-    component_kind, chunk_idx, node_id, text, section_summary) and the
-    READMEs (namespace, repo, file_path, text). Only repos with chunks
-    get rows."""
-    members = chunks.select(
-        *FILE_KEYS, "component_kind", "chunk_idx", "node_id", "text", "section_summary",
-        F.lit(False).alias("readme"),
-    ).unionByName(
-        readmes.select(*REPO_KEYS, "file_path", "text", F.lit(True).alias("readme")),
-        allowMissingColumns=True,
+    rows of all five scopes from the per-document pass's output — chunk
+    rows (FILE_KEYS, chunk_idx, node_id, text, section_summary) and
+    README rows, told apart by `readme`. Only repos with chunks get
+    rows."""
+    members = nodes.select(
+        *FILE_KEYS, "chunk_idx", "node_id", "text", "section_summary", "readme"
     )
     return members.groupBy(*REPO_KEYS).applyInArrow(
         partial(rollup_repo, llm_factory), from_arrow_schema(NODE_SCHEMA)

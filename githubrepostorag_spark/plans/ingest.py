@@ -1,23 +1,25 @@
 """Composed ingest pipeline (reference: ingest_controller.py:192-487).
 
-One DataFrame chain replacing the reference's six serial stages —
-preprocess → code_nodes (+L1-L3 enrichment) → file/module/repo
-summaries → catalog → vector rows per scope → audit:
+The reference's six serial stages — preprocess → code_nodes (+L1-L3
+enrichment) → file/module/repo summaries → catalog → vector rows per
+scope → audit — as two Python passes and one write:
 
     docs(repo, file_path, text)
-      → F1 filter → C5 notebook normalize → F2 language → F3 kind
-      → A2 module → C1-C3 chunk → F4 metadata → F6 node ids
-      → L1-L3 enrich → A4-A7 rollups → F5/S4 vector rows → S6 audit
+      → per document, in one mapInArrow: F1 keep → C5 notebook
+        normalize → F2 language → A2 module → C1-C3 chunk windows →
+        F6 node ids → L1-L3 enrich  (`document_nodes`)
+      → per repo, in one grouped Arrow pass: F3 component kind and
+        the A4-A7 rollups  (`operators.hierarchy.rollup_hierarchy`)
+      → F5/S4 vector rows of all five scopes → S6 audit
 
-The per-document stages are the shared Spark operators (the stream
-tick and the parity plans run them too). The four rollup levels are
-ONE grouped Arrow pass (`operators.hierarchy.rollup_hierarchy`): each
-repo's enriched chunks and READMEs go to one Python call that returns
-the repo's chunk rows with its file, module, repo and catalog rows —
-the reference's per-repo loop (SURVEY §3.2) as one shuffle keyed on
-(namespace, repo). All five scopes then share one storage projection,
-one embedding pass and one write. The chain has no branch that
-re-reads the chunks, so nothing is persisted and nothing runs twice.
+The per-document rules are plain functions over `str`
+(`operators.filters`, `operators.chunking`, `operators.enrich`), which
+the parity plans call too. The document pass emits each kept
+document's enriched chunk rows and, for a README, one row flagged
+`readme`; that output is the rollup pass's only input, so the chain
+has no branch, join or aggregate ahead of it, and nothing is persisted
+or runs twice. The rollup pass infers each repo's component kind from
+its chunks' paths, which are exactly its kept files.
 
 Everything is lazily-composed DataFrames: the driver never collects.
 The LLM factory is pluggable (DeterministicLLM for tests/oracles).
@@ -28,29 +30,44 @@ from __future__ import annotations
 import datetime as _dt
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from githubrepostorag_spark.functions import metadata as MD
+from githubrepostorag_spark.functions.rows import map_rows
 from githubrepostorag_spark.operators import filters as FL
-from githubrepostorag_spark.operators.chunking import (
+from githubrepostorag_spark.operators.chunking import (  # noqa: F401 — a stage name
+    chunk_windows,
+    normalize_notebook_text,
     split_code_documents,
-    transform_special_files,
 )
-from githubrepostorag_spark.operators.enrich import enrich_chunks
+from githubrepostorag_spark.operators.enrich import enrich, enrich_chunks  # noqa: F401 — ditto
 from githubrepostorag_spark.operators.hierarchy import (  # noqa: F401 — the rollup levels
+    FILE_KEYS,
     catalog_docs,
     file_summaries,
     module_summaries,
+    node_id,
     repo_overviews,
     rollup_hierarchy,
 )
 from githubrepostorag_spark.plans.timing import StageTimer
+from githubrepostorag_spark.session import scale_out
 from githubrepostorag_spark.operators.vector_write import (
     finalize_vectors,
     storage_projection,
     write_vector_tables,
+)
+
+# the per-document pass's rows: chunks, and READMEs flagged `readme`
+DOC_NODE_SCHEMA = pa.schema(
+    [(c, pa.string()) for c in FILE_KEYS]
+    + [(c, pa.int64()) for c in ("chunk_idx", "start_line", "end_line")]
+    + [(c, pa.string()) for c in (
+        "node_id", "text", "section_summary", "document_title", "excerpt_keywords")]
+    + [("readme", pa.bool_())]
 )
 
 
@@ -72,24 +89,39 @@ class IngestResult:
             df.unpersist()
 
 
-def preprocess(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """F1 → C5 → F2 → A2, plus the per-repo F3 kind flags.
+def preprocess(path: str, text: str):
+    """F1 → C5 → F2 → A2 for one document: None when F1 drops it, else
+    (text, language, module) with a notebook's JSON normalized."""
+    if path is None or text is None or not FL.keep(path):
+        return None
+    if path.lower().endswith(".ipynb"):
+        text = normalize_notebook_text(text)
+    return text, FL.language(path), FL.module(path)
 
-    The corpus is spread across the cluster up front: everything
-    downstream (notebook normalize, chunk explode, enrichment and
-    embedding UDFs) is per-row work that would otherwise inherit the
-    source's split count."""
-    from githubrepostorag_spark.session import scale_out
 
-    docs = scale_out(docs, "file_path")
-    kept = FL.filter_documents(docs)
-    normalized = transform_special_files(kept)
-    tagged = FL.tag_language(normalized)
-    kinds = FL.infer_component_kind(kept).select("repo", "component_kind")
-    prepped = FL.with_module(
-        tagged.join(F.broadcast(kinds), "repo", "left")
-    )
-    return prepped, kinds
+def document_nodes(doc: dict, llm, namespace: str) -> list[dict]:
+    """One document → its enriched chunk rows, and a `readme` row for a
+    README, as `DOC_NODE_SCHEMA` dicts. A dropped document → []."""
+    path = doc["file_path"]
+    prepped = preprocess(path, doc["text"])
+    if prepped is None:
+        return []
+    text, language, module = prepped
+    key = dict(namespace=namespace, repo=doc["repo"], module=module, file_path=path,
+               language=language)
+    out = [dict(key, text=text, readme=True)] if FL.file_name(path).startswith("readme") else []
+    for i, (chunk, start, end) in enumerate(chunk_windows(text, language)):
+        out.append(dict(
+            key, chunk_idx=i, start_line=start, end_line=end, text=chunk, readme=False,
+            node_id=node_id("chunk", namespace, doc["repo"], module, path, start, end),
+            **enrich(llm, chunk),
+        ))
+    return out
+
+
+def _documents(llm_factory, namespace: str, docs: list[dict]) -> list[dict]:
+    llm = llm_factory()
+    return [n for d in docs for n in document_nodes(d, llm, namespace)]
 
 
 def ingest_pipeline(
@@ -116,45 +148,36 @@ def ingest_pipeline(
     The result's frames are lazy and persist nothing: the pipeline is
     one chain, which the caller's write (`output_path`) runs once. A
     caller reading several of them should persist what it reads twice.
+    `collection` lands in the audit; `dev_forced` (the reference's
+    dev_forced_standalone flag) reaches no stored row or audit column.
 
     `collect_stage_times` is a DIAGNOSTIC mode (EXPLAIN ANALYZE-style):
-    it persists the enriched chunks and forces them, then the rollup
-    pass over them, to attribute per-stage wall seconds
+    it persists the per-document pass's rows and forces them, then the
+    rollup pass over them, to attribute per-stage wall seconds
     (`timed_stages`). Unlike curation/release — whose timers wrap audit
     counts that run anyway, so timing is free — ingest's stages fuse
     into the caller's single write action, and forcing boundaries
-    costs ~2 s of lost pipelining at sf0.1 (measured), so it is off on
-    the production path.
+    costs lost pipelining, so it is off on the production path.
     """
-    prepped, kinds = preprocess(docs)
     if raw_dump_path is not None:
         # S3 raw-doc debug dump (ingest_controller.py:154-161)
         docs.write.mode("overwrite").json(raw_dump_path)
 
-    # code_nodes stage: chunk + metadata + ids + L1-L3 enrichment
-    nodes = FL.attach_common_metadata(
-        split_code_documents(prepped).withColumn("doc_type", F.lit("code")),
-        namespace=namespace,
-        branch=branch,
-        collection=collection,
-        ingest_run_id=ingest_run_id,
-        dev_forced=dev_forced,
-    )
-    ids = ("namespace", "repo", "module", "file_path", "start_line", "end_line")
-    chunks = enrich_chunks(
-        nodes.withColumn("node_id", MD.stable_node_id(F.lit("chunk"), *map(F.col, ids))),
-        llm_factory,
+    # the corpus is spread across the cluster first: a single-split
+    # source would otherwise run the whole pass, LLM calls included,
+    # in one task
+    nodes = map_rows(
+        scale_out(docs, "file_path").select("repo", "file_path", "text"),
+        partial(_documents, llm_factory, namespace),
+        DOC_NODE_SCHEMA,
     )
     if collect_stage_times:
-        chunks = chunks.persist()  # a stage boundary to time (see docstring)
+        nodes = nodes.persist()  # a stage boundary to time (see docstring)
 
-    # A4-A7: each repo's chunks and READMEs → its chunk, file, module,
-    # repo and catalog rows, in one grouped pass; then one storage
-    # projection and one embedding pass for all five scopes
-    readmes = prepped.filter(
-        FL.file_name(F.col("file_path")).startswith("readme")
-    ).withColumn("namespace", F.lit(namespace))
-    scoped = rollup_hierarchy(chunks, readmes, llm_factory)
+    # A4-A7 + F3: each repo's chunks and READMEs → its rows of all five
+    # scopes in one grouped pass; then one storage projection and one
+    # embedding pass
+    scoped = rollup_hierarchy(nodes, llm_factory)
     rows = finalize_vectors(
         storage_projection(scoped.withColumn("branch", F.lit(branch))),
         embedder=embedder,
@@ -164,9 +187,9 @@ def ingest_pipeline(
     # S6/A8 audit: one ingest_runs row per repo with the chunk node count
     started = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
     audit = (
-        chunks.groupBy("repo")
+        scoped.filter(F.col("scope") == "chunk")
+        .groupBy("repo", "component_kind")
         .agg(F.count(F.lit(1)).alias("node_count"))
-        .join(F.broadcast(kinds), "repo", "left")
         .select(
             F.lit(ingest_run_id).alias("run_id"),
             F.lit(namespace).alias("namespace"),
@@ -184,14 +207,14 @@ def ingest_pipeline(
         write_vector_tables(rows, output_path)
 
     # Stage timer (the reference's stage_timer analog, plans/timing.py):
-    # fill the chunk cache, then run the rollup pass over it, and record
-    # their wall seconds. Forcing serializes stage boundaries the fused
-    # write would otherwise pipeline, so this runs only in diagnostic
-    # mode (see docstring).
+    # fill the document-pass cache, then run the rollup pass over it,
+    # and record their wall seconds. Forcing serializes stage boundaries
+    # the fused write would otherwise pipeline, so this runs only in
+    # diagnostic mode (see docstring).
     timed = None
     if collect_stage_times:
         timer = StageTimer()
-        timer.time("chunk_enrich", chunks.count)
+        timer.time("chunk_enrich", nodes.count)
         timer.time("hierarchy", scoped.count)
         timed = timer.frame(docs.sparkSession, ingest_run_id, "run_id")
 
@@ -199,7 +222,7 @@ def ingest_pipeline(
         return scoped.filter(F.col("scope") == scope)
 
     return IngestResult(
-        chunks=chunks,
+        chunks=nodes.filter(~F.col("readme")).drop("readme"),
         file_sums=level("file"),
         module_sums=level("module"),
         repo_sums=level("repo"),
@@ -207,5 +230,5 @@ def ingest_pipeline(
         rows=rows,
         audit=audit,
         timed_stages=timed,
-        _cached=(chunks,) if collect_stage_times else (),
+        _cached=(nodes,) if collect_stage_times else (),
     )

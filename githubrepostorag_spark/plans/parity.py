@@ -30,6 +30,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 from githubrepostorag_spark.functions import metadata as MD
 from githubrepostorag_spark.functions import text as TXT
 from githubrepostorag_spark.functions import vectors as V
+from githubrepostorag_spark.functions.rows import extended, map_rows
 from githubrepostorag_spark.llm.stub import DeterministicLLM
 from githubrepostorag_spark.operators import filters as FL
 from githubrepostorag_spark.operators import hierarchy as H
@@ -56,38 +57,66 @@ def code_docs_fixture(documents: DataFrame) -> DataFrame:
     )
 
 
+_FLAGS = (
+    pa.field("keep", pa.bool_()), *(pa.field(c, pa.string()) for c in ("ext", "language", "module"))
+)
+
+
+def _flagged(rows):
+    """F1 keep, ext, F2 language and A2 module per row, by the ingest's
+    own rules."""
+    return [
+        dict(r, keep=FL.keep(p), ext=FL.file_ext(p), language=FL.language(p), module=FL.module(p))
+        for r in rows
+        for p in [r["file_path"]]
+    ]
+
+
+def _flags(cd: DataFrame) -> DataFrame:
+    return map_rows(cd, _flagged, extended(cd, *_FLAGS))
+
+
 def preprocess_flags(documents: DataFrame) -> DataFrame:
     """F1 keep-filter + F2 language + A2 module per document (incl. the
     dotfile / special-name edge cases)."""
-    cd = code_docs_fixture(documents)
-    return cd.select(
-        "doc_id",
-        "file_path",
-        FL.keep_document(F.col("file_path")).alias("keep"),
-        FL.file_ext(F.col("file_path")).alias("ext"),
-        FL.language_of(F.col("file_path")).alias("language"),
-        FL.top_directory(F.col("file_path")).alias("module"),
-    )
+    return _flags(code_docs_fixture(documents).select("doc_id", "file_path"))
+
+
+def kept_documents(documents: DataFrame) -> DataFrame:
+    """The fixture's documents that F1 keeps, with language and module."""
+    cd = code_docs_fixture(documents).select("doc_id", "repo", "file_path", "text")
+    return _flags(cd).filter("keep").drop("keep", "ext")
+
+
+_KINDS = pa.schema([
+    ("repo", pa.string()), ("has_notebook", pa.bool_()), ("has_manifest", pa.bool_()),
+    ("has_openapi", pa.bool_()), ("component_kind", pa.string()),
+])
+
+
+def _kinds(table):
+    """applyInArrow body: one repo's kept paths → its F3 flags and kind."""
+    rows = table.to_pylist()
+    flags = FL.kind_flags(r["file_path"] for r in rows)
+    row = dict(flags, repo=rows[0]["repo"], component_kind=FL.component_kind(flags))
+    return pa.Table.from_pylist([row], schema=_KINDS)
 
 
 def component_kinds(documents: DataFrame) -> DataFrame:
     """F3: standalone iff notebook present and no manifest/openapi."""
-    cd = code_docs_fixture(documents)
-    return FL.infer_component_kind(FL.filter_documents(cd)).select(
-        "repo", "has_notebook", "has_manifest", "has_openapi", "component_kind"
-    )
+    kept = kept_documents(documents).select("repo", "file_path")
+    return kept.groupBy("repo").applyInArrow(_kinds, from_arrow_schema(_KINDS))
 
 
 def chunk_fixture(documents: DataFrame) -> DataFrame:
     """Kept docs with multi-line/long text (so both chunkers produce
     multiple chunks) + language + module."""
-    cd = code_docs_fixture(scale_out(documents, "doc_id"))
-    kept = FL.tag_language(FL.filter_documents(cd))
+    kept = kept_documents(scale_out(documents, "doc_id"))
     text2 = F.when(
         F.col("language") == "python",
         F.translate(F.repeat(F.concat(F.col("text"), F.lit(" ")), 10), " ", "\n"),
     ).otherwise(F.repeat(F.col("text"), 12))
-    return FL.with_module(kept.withColumn("text", text2))
+    return kept.withColumn("text", text2)
 
 
 def code_chunks(documents: DataFrame) -> DataFrame:
@@ -164,8 +193,7 @@ def file_rollups(documents: DataFrame) -> DataFrame:
 def module_rollups(documents: DataFrame) -> DataFrame:
     """A5: docs as file-summary rows → per-module ≤40 concat, by the
     ingest kernel's `module_summaries`."""
-    cd = FL.with_module(FL.tag_language(FL.filter_documents(code_docs_fixture(documents))))
-    fd = cd.withColumn("namespace", F.lit("default")).withColumn(
+    fd = kept_documents(documents).withColumn("namespace", F.lit("default")).withColumn(
         "node_id", F.md5(F.col("file_path"))
     )
     grouped = _rollup_inputs(fd, H.module_summaries, H.MODULE_KEYS)
@@ -286,7 +314,7 @@ def drilldown(documents: DataFrame) -> DataFrame:
 def enriched(documents: DataFrame) -> DataFrame:
     """L1-L3 enrichment with the DeterministicLLM (stable-words
     contract — reproduced token-for-token by the DuckDB oracle)."""
-    out = enrich_chunks(documents, DeterministicLLM)
+    out = enrich_chunks(documents.select("doc_id", "text"), DeterministicLLM)
     return out.select("doc_id", "section_summary", "document_title", "excerpt_keywords")
 
 

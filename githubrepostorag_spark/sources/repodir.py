@@ -31,7 +31,9 @@ def _read_roots(
 ) -> DataFrame:
     """Sibling repo trees → documents(repo, branch, file_path, text) in
     one binaryFile scan. A file's repo is its root's directory name
-    (`repo` overrides it) and its file_path the rest of its path."""
+    (`repo` overrides it) and its file_path the rest of its path. A file
+    that is not valid UTF-8 (a font, a class file) is skipped, as the
+    reference's GitHub reader skips a blob that fails to decode."""
     reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
     if glob:
         reader = reader.option("pathGlobFilter", glob)
@@ -43,7 +45,7 @@ def _read_roots(
         F.lit(branch).alias("branch"),
         F.regexp_extract("path", path, 2).alias("file_path"),
         F.col("content").cast("string").alias("text"),
-    )
+    ).filter(F.is_valid_utf8("text"))
 
 
 def read_repo_directory(

@@ -40,9 +40,10 @@ from githubrepostorag_spark.operators.vector_write import (
 
 
 def _batch_rows(batch: DataFrame, embedder=None, dim: int | None = None) -> DataFrame:
-    """docs(repo, file_path, text) -> chunk-scope vector rows (the
+    """docs(repo, file_path, text) -> chunk-scope vector rows, cut by the
+    batch ingest's window rule (no language, so char windows). The
     incremental path embeds chunks only; hierarchy rollups stay batch
-    jobs over the accumulated store)."""
+    jobs over the accumulated store."""
     chunks = split_code_documents(
         batch.withColumn("language", F.lit(None).cast("string"))
         .withColumn("module", F.split("file_path", "/")[0])

@@ -138,6 +138,23 @@ def test_repodir_workspace_is_one_scan(spark, tmp_path):
         read_repo_directories(spark, str(empty))
 
 
+def test_repodir_skips_files_that_are_not_utf8(spark, tmp_path):
+    """A binary file the skip lists miss (a font) yields no document,
+    and the workspace around it still ingests."""
+    src = tmp_path / "ws" / "r1" / "src"
+    src.mkdir(parents=True)
+    (src / "font.woff").write_bytes(bytes.fromhex("fffe006162638081"))
+    (src / "app.py").write_text("def app():\n    return 1\n")
+
+    docs = read_repo_directories(spark, str(tmp_path / "ws"))
+    res = ingest_pipeline(
+        docs.drop("branch"), ingest_run_id="run-utf8", llm_factory=DeterministicLLM
+    )
+    stored = {(r.scope, r.file_path) for r in res.rows.select("scope", "file_path").collect()}
+    assert ("chunk", "src/app.py") in stored
+    assert [r.file_path for r in docs.collect()] == ["src/app.py"]
+
+
 # ---------------- MMR re-rank + notebook helpers ----------------
 
 

@@ -102,9 +102,14 @@ def test_queries_run_and_match_oracle_sample(spark, duck):
         "q26_simhash",
         "q28_knn_bruteforce",
         "q33_graph_2hop",
+        "q36_code_chunks",
         "q37_file_rollup",
         "q38_module_rollup",
+        "q39_vector_rows",
         "q40_retrieve_chunk",
+        "q41_enrich_chunks",
+        "q42_preprocess_flags",
+        "q43_component_kind",
     ]
     for name in sample:
         sdf = qs[name](spark, "/root/testdata/sf0.001").toPandas()

@@ -165,6 +165,27 @@ def test_whole_output_digest_pinned(result):
     assert _rows_digest(result.rows) == PINNED_ROWS_DIGEST
 
 
+def test_pass_is_one_document_pass_then_one_rollup_pass(spark, tmp_path):
+    """A pass with its write runs at most 4 Spark jobs, and below the
+    rollup's shuffle the plan holds one Python node: the per-document
+    mapInArrow (no F3 aggregate, join or second README branch)."""
+    sc = spark.sparkContext
+    group = "test-ingest-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        res = ingest_pipeline(
+            corpus_df(spark), ingest_run_id="run-jobs", llm_factory=DeterministicLLM,
+            namespace="test", output_path=str(tmp_path / "store"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    plan = res.rows._jdf.queryExecution().executedPlan().toString()
+    below = plan.split("Exchange hashpartitioning(namespace", 1)[1]
+    assert below.count("MapInArrow") == 1
+    assert "ArrowEvalPython" not in below and "Join" not in below
+
+
 def test_row_ids_stable_across_runs(spark, result):
     res2 = ingest_pipeline(
         corpus_df(spark), ingest_run_id="run-2", llm_factory=DeterministicLLM, namespace="test"
