@@ -22,11 +22,16 @@ desc NULLS LAST, then row_id asc. Queries score with their `qvec` as
 given.
 
 - Snapshot (serving stores up to a driver bound): `store_snapshot`
-  loads the slim store — vectors as float64, edge keys, topics, doc
-  columns — into the driver ONCE per store DataFrame with one job, and
-  `StoreSnapshot.retrieve` ranks a whole mixed-scope batch and fetches
-  its docs by position in numpy. No Spark job runs per call. The bound
-  is `session.driver_bound_rows` at the measured peak bytes per
+  holds the slim store in the driver — doc columns as one Arrow table,
+  vectors as one float32 (rows × dim) array, edge-key codes, row_id
+  ranks — and `StoreSnapshot.retrieve` ranks a whole mixed-scope batch
+  in numpy, taking only the hit rows out of the Arrow table. No Spark
+  job runs per call. A store that is one parquet scan of local files
+  (`read_vector_tables`, `read_latest_store`) loads with no Spark job
+  at all: pyarrow reads its files on the driver, the snapshot is keyed
+  on its files, and a new store version reads only the files it
+  changed. Any other frame loads once per DataFrame with one job. The
+  bound is `session.driver_bound_rows` at the measured peak bytes per
   snapshot row (`snapshot_bound`). A store above it stays on the Spark
   path, and is found above it before any body ships: by its parquet
   footers, else by a count of row_ids. A DataFrame's file list is
@@ -42,6 +47,7 @@ given.
 from __future__ import annotations
 
 import math
+import os
 import threading
 import weakref
 from dataclasses import dataclass
@@ -54,6 +60,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from githubrepostorag_spark.session import driver_bound_rows
 
@@ -145,30 +153,34 @@ def _query_block(qvecs: list) -> np.ndarray:
     return np.asarray(qvecs, dtype=np.float64).reshape(len(qvecs), dim)
 
 
-def _vector_block(vecs: pa.Array | pa.ChunkedArray, dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """(valid, M) for an Arrow column of store vectors: `valid` marks
+def _vector_block(vecs: pa.Array, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """(valid, M) for an Arrow array of store vectors: `valid` marks
     the rows `V.dot` scores non-NULL — vector non-NULL, `dim` long, no NULL
     element (zip_with pads a short side with NULL, and a NULL product
-    poisons the aggregate) — and M holds those rows as (n_valid × dim)
-    float64. Every other row scores NULL."""
-    if isinstance(vecs, pa.ChunkedArray):
-        vecs = vecs.combine_chunks()
+    poisons the aggregate) — and M holds every row's vector as (n × dim)
+    in the array's own float type, zeros on the rows not valid (a view
+    of the Arrow buffer when every row is). Every other row scores NULL."""
+    n = len(vecs)
     lens = pc.list_value_length(vecs).fill_null(0).to_numpy(zero_copy_only=False)
-    lens = lens.astype(np.int64)
     valid = ~vecs.is_null().to_numpy(zero_copy_only=False) & (lens == dim)
     flat = vecs.flatten()  # elements of the non-NULL rows, in row order
-    owner = np.repeat(np.arange(len(vecs)), lens)
-    valid[owner[flat.is_null().to_numpy(zero_copy_only=False)]] = False
-    vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
-    return valid, vals[valid[owner]].reshape(int(valid.sum()), dim)
+    if flat.null_count:
+        owner = np.repeat(np.arange(n), lens.astype(np.int64))
+        valid[owner[flat.is_null().to_numpy(zero_copy_only=False)]] = False
+    if valid.all():
+        return valid, flat.to_numpy(zero_copy_only=False).reshape(n, dim)
+    M = np.zeros((n, dim), dtype=vecs.type.value_type.to_pandas_dtype())
+    kept = vecs.filter(pa.array(valid)).flatten().to_numpy(zero_copy_only=False)
+    M[valid] = kept.reshape(int(valid.sum()), dim)
+    return valid, M
 
 
 def _dot_dimseq(M: np.ndarray, Q: np.ndarray) -> np.ndarray:
     """(rows × queries) dot products, accumulated dim-sequentially in
     float64 (acc += v[:, i] * q[i], no fused multiply-add): per element
     the exact left-to-right order of `V.dot`'s JVM fold, so scores are
-    bit-identical to it. A Fortran-ordered M makes each column read
-    contiguous."""
+    bit-identical to it. A float32 M widens one column at a time, which
+    is exact. A Fortran-ordered M makes each column read contiguous."""
     S = np.zeros((M.shape[0], Q.shape[0]), dtype=np.float64)
     for i in range(Q.shape[1]):
         S += M[:, i : i + 1] * Q[:, i]
@@ -210,40 +222,49 @@ def _round6(x: np.ndarray) -> np.ndarray:
 
 def _scores(valid: np.ndarray, M: np.ndarray, Q: np.ndarray) -> np.ndarray:
     """(rows × queries) scores, each `F.round(V.dot(vector, qvec), 6)`:
-    M holds the `valid` rows' vectors; every other row scores 0 here
-    and NULL to its caller."""
+    M holds every row's vector (`_vector_block`); the rows not `valid`
+    score 0 here and NULL to their caller."""
     S = np.zeros((len(valid), len(Q)))
     if valid.any():
-        S[valid] = _round6(_dot_dimseq(M, Q))
+        S = _round6(_dot_dimseq(M, Q))
+        S[~valid] = 0.0
     return S
 
 
 # ------------------------------------------------------------ ranker
 
 
-def _codes(values: list) -> tuple[np.ndarray, dict]:
-    """Integer codes of a string column (NULL → -1) and its value → code map."""
-    index: dict = {}
-    codes = np.fromiter(
-        (-1 if v is None else index.setdefault(v, len(index)) for v in values),
-        dtype=np.int64,
-        count=len(values),
-    )
-    return codes, index
+def _codes(col: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, dict]:
+    """Integer codes of an Arrow column (NULL → -1) and its value → code map."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    enc = pc.dictionary_encode(col)
+    codes = pc.fill_null(enc.indices, -1).to_numpy().astype(np.int64)
+    return codes, {v: i for i, v in enumerate(enc.dictionary.to_pylist())}
 
 
-def _ranks(row_ids: list) -> np.ndarray:
-    """Sort rank of each row_id (equal ids share a rank)."""
-    return np.unique(np.asarray(row_ids, dtype=object), return_inverse=True)[1].reshape(-1)
+def _ranks(row_ids: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """Sort rank of each row_id (equal ids share a rank; UTF-8 byte order
+    is code point order, so ranks sort as Python strings do)."""
+    ranks = pc.rank(row_ids, sort_keys="ascending", tiebreaker="dense")
+    return ranks.to_numpy().astype(np.int64)
+
+
+def _topic_mask(topics: pa.Array, topic: str) -> np.ndarray:
+    """Rows of an Arrow `array<string>` column whose list holds `topic`."""
+    hit = pc.equal(pc.list_flatten(topics), topic).fill_null(False)
+    mask = np.zeros(len(topics), dtype=bool)
+    mask[pc.list_parent_indices(topics).to_numpy()[hit.to_numpy(zero_copy_only=False)]] = True
+    return mask
 
 
 def _candidates(m: dict, codes: dict[str, np.ndarray], index: dict[str, dict],
-                topics: list, topic_masks: dict[str, np.ndarray]) -> np.ndarray:
+                topics: pa.Array, topic_masks: dict[str, np.ndarray]) -> np.ndarray:
     """The rows of a block that pass query `m`'s filters: each non-NULL
     flt_namespace/flt_repo/flt_module equals the row's key (`codes`
     and their value → code `index`), and a non-NULL flt_topics is in
-    the row's topics. `topic_masks` caches one mask per topic for the
-    block."""
+    the row's `topics` (an Arrow list column). `topic_masks` caches one
+    mask per topic for the block."""
     cand = np.ones(len(topics), dtype=bool)
     for k in FILTER_KEYS:
         v = m[f"flt_{k}"]
@@ -252,9 +273,7 @@ def _candidates(m: dict, codes: dict[str, np.ndarray], index: dict[str, dict],
     topic = m["flt_topics"]
     if topic is not None:
         if topic not in topic_masks:
-            topic_masks[topic] = np.fromiter(
-                (topic in (t or []) for t in topics), dtype=bool, count=len(topics)
-            )
+            topic_masks[topic] = _topic_mask(topics, topic)
         cand &= topic_masks[topic]
     return cand
 
@@ -328,12 +347,14 @@ def _scored_np(store: DataFrame, meta_rows: list[dict]) -> DataFrame:
                 continue
             valid, M = _vector_block(batch.column("vector"), Q.shape[1])
             S = _scores(valid, np.asfortranarray(M), Q)
-            keys = {k: _codes(batch.column(k).to_pylist()) for k in FILTER_KEYS}
+            keys = {k: _codes(batch.column(k)) for k in FILTER_KEYS}
             codes = {k: c for k, (c, _) in keys.items()}
             index = {k: i for k, (_, i) in keys.items()}
-            topics = batch.column("topics").to_pylist()
-            scope = np.asarray(batch.column("scope").to_pylist(), dtype=object)
-            in_scope = {s: scope == s for s in scopes}
+            topics = batch.column("topics")
+            in_scope = {
+                s: pc.equal(batch.column("scope"), s).fill_null(False).to_numpy(zero_copy_only=False)
+                for s in scopes
+            }
             topic_masks: dict[str, np.ndarray] = {}
             rows, cols = [], []
             for qi, m in enumerate(meta):
@@ -390,8 +411,8 @@ def retrieve_batch_multi(
             params[table.column("query_id")[0].as_py()],
             score.fill_null(0.0).to_numpy(),
             score.is_null().to_numpy(),
-            {k: _codes(table.column(k).to_pylist())[0] for k in EDGE_KEYS},
-            _ranks(table.column("row_id").to_pylist()),
+            {k: _codes(table.column(k))[0] for k in EDGE_KEYS},
+            _ranks(table.column("row_id")),
             np.ones(table.num_rows, dtype=bool),
         )
         return table.select(["query_id", "row_id", "score"]).take(idx).append_column(
@@ -433,13 +454,14 @@ def _fetch_docs(store: DataFrame, ids: DataFrame, scopes: list[str] | None = Non
 # the columns a snapshot holds: doc columns plus the vector
 _SNAPSHOT_COLS = (*_DOC_COLS, "vector")
 
-# driver bytes per snapshot row at the peak of its load: the Arrow
-# table (1,865 B/row) beside the snapshot being built from it (10,455
-# B/row at peak, 3,991 B/row resident once built: 384 float64s plus the
-# doc columns as Python objects), measured on the 9,443-row sf0.1
-# ingest store. No floor: the bound is 3,486 rows on a 2g driver and
-# 27,889 on the default 16g.
-_SNAPSHOT_ROW_BYTES = 12_320
+# driver bytes per snapshot row at the peak of its load, measured on the
+# 9,443-row sf0.1 ingest store (Arrow pool peak + tracemalloc peak):
+# 3,499 B/row through the file reader (1,775 Arrow while the largest
+# file reads, 1,724 numpy) and 4,068 through `toArrow` (its received
+# batches beside the float32 array); 2,003-2,009 B/row resident once
+# built. Priced at the larger: 10,475 rows on a 2g driver, 83,804 on
+# the default 16g. No floor.
+_SNAPSHOT_ROW_BYTES = 4_100
 
 
 def snapshot_bound(spark: SparkSession) -> int:
@@ -447,126 +469,345 @@ def snapshot_bound(spark: SparkSession) -> int:
     return driver_bound_rows(spark, bytes_per_row=_SNAPSHOT_ROW_BYTES, floor=0)
 
 
+class _Rows:
+    """The snapshot rows of one parquet file, or of one `toArrow` load:
+    the doc columns as an Arrow table, which vectors score (`valid`),
+    the lengths of its non-NULL vectors (`dims`), and its vectors as
+    (rows × dim) blocks: views of the Arrow buffers, one per chunk,
+    until a snapshot copies them, then one view into that snapshot's
+    array, so rows shared by two snapshots are held once the older one
+    is gone."""
+
+    def __init__(self, table: pa.Table):
+        self.docs = table.select(list(_DOC_COLS))
+        vecs = table.column("vector")
+        self.dims = set(pc.unique(pc.list_value_length(vecs).drop_null()).to_pylist())
+        dim = min(self.dims) if len(self.dims) == 1 else 0
+        blocks = [_vector_block(c, dim) for c in vecs.chunks]
+        self.valid = np.concatenate([v for v, _ in blocks] or [np.zeros(0, dtype=bool)])
+        self.vecs = [M for _, M in blocks]
+
+
+def _built(parts, n: int) -> "StoreSnapshot | None":
+    """The snapshot of `n` rows from `parts`, an iterable of (first row,
+    `_Rows`) read as it goes, or None when their vectors differ in
+    length. Each part's vectors are copied into the one array as the
+    part comes, which releases its Arrow buffers: no more than one
+    part's Arrow vectors are held beside the array."""
+    held: list[tuple[int, _Rows]] = []
+    M, dim = np.zeros((n, 0), dtype=np.float32), None
+    for off, p in parts:
+        if p.dims:
+            if dim is None:
+                dim = min(p.dims)
+                M = np.zeros((n, dim), dtype=p.vecs[0].dtype, order="F")
+            if p.dims != {dim}:
+                return None
+            at = off
+            for block in p.vecs:
+                M[at : at + len(block)] = block
+                at += len(block)
+            p.vecs = [M[off:at]]
+        held.append((off, p))
+    held.sort(key=lambda h: h[0])
+    return StoreSnapshot([p for _, p in held], M, dim)
+
+
 @dataclass
 class _ScopeBlock:
-    """One scope's rows: store positions, NULL-score mask, float64
-    vectors of the scored rows (Fortran order), edge-key codes, row_id
-    sort ranks, and topics."""
+    """One scope's rows: store positions, the rows of the snapshot's
+    vector array (a slice when they are contiguous), NULL-score mask,
+    edge-key codes, row_id sort ranks, and topics."""
 
     pos: np.ndarray
+    rows: "slice | np.ndarray"
     null: np.ndarray
-    M: np.ndarray
     codes: dict[str, np.ndarray]
     rid: np.ndarray
-    topics: list
+    topics: pa.Array
 
 
 class StoreSnapshot:
-    """The slim serving store held in the driver. `retrieve` answers a
+    """The slim serving store held in the driver: the doc columns stay
+    one Arrow table and the vectors one (rows × dim) array in their
+    stored float type (float32 for every store vector), widened to
+    float64 one column at a time as they score. `retrieve` answers a
     mixed-scope query batch with the rows `retrieve_batch_multi` would
-    return, in numpy, with no Spark job; it is read-only after load, so
+    return, in numpy, with no Spark job; it is read-only once built, so
     threads may share it."""
 
-    def __init__(self, table: pa.Table, dim: int | None):
-        docs = {c: table.column(c).to_pylist() for c in _DOC_COLS}
-        self.docs = docs
+    def __init__(self, parts: list[_Rows], M: np.ndarray, dim: int | None):
+        self.parts = parts  # holds each file's cached rows alive
+        self.docs = pa.concat_tables([p.docs for p in parts])
+        self.M = M  # every row's vector, zeros where not valid
         self.dim = dim  # the length of every non-NULL store vector
-        valid, M = _vector_block(table.column("vector"), dim or 0)
-        m_row = np.cumsum(valid) - 1
-        keys = {k: _codes(docs[k]) for k in EDGE_KEYS}
+        valid = np.concatenate([p.valid for p in parts])
+        keys = {k: _codes(self.docs.column(k)) for k in EDGE_KEYS}
         self.index = {k: index for k, (_, index) in keys.items()}  # value → code
-        rid = _ranks(docs["row_id"])
-        scopes = np.asarray(docs["scope"], dtype=object)
+        rid = _ranks(self.docs.column("row_id"))
+        scopes, scope_index = _codes(self.docs.column("scope"))
+        topics = self.docs.column("topics")
         self.blocks: dict[str, _ScopeBlock] = {}
-        for scope in {s for s in docs["scope"] if s is not None}:
-            p = np.flatnonzero(scopes == scope)
+        for scope, code in scope_index.items():
+            p = np.flatnonzero(scopes == code)
             self.blocks[scope] = _ScopeBlock(
                 pos=p,
+                rows=slice(p[0], p[-1] + 1) if p[-1] - p[0] + 1 == len(p) else p,
                 null=~valid[p],
-                M=np.asfortranarray(M[m_row[p[valid[p]]]]),
                 codes={k: c[p] for k, (c, _) in keys.items()},
                 rid=rid[p],
-                topics=[docs["topics"][g] for g in p],
+                topics=topics.take(p).combine_chunks(),
             )
 
     def retrieve(self, meta: list[dict]) -> list[dict]:
         """`retrieve_batch_multi(..., query_meta=meta)` as plain row
         dicts (query_id, doc columns, score, hop), ≤p_k per query, each
-        query's rows score-desc."""
-        out: list[dict] = []
+        query's rows score-desc. Only the hit rows leave the Arrow
+        table."""
         if not meta:
-            return out
+            return []
         Q = _query_block([m["qvec"] for m in meta])
         by_scope: dict[str, list[int]] = {}
         for j, m in enumerate(meta):
             by_scope.setdefault(m["q_scope"], []).append(j)
+        hits: list[tuple] = []  # (query_id, score or None, hop) per hit
+        pos: list[np.ndarray] = []
         for scope, js in by_scope.items():
             b = self.blocks.get(scope)
             if b is None:
                 continue
             # an off-dimension query finds every store vector off-dimension
             null = b.null if Q.shape[1] == self.dim else np.ones(len(b.pos), dtype=bool)
-            S = _scores(~null, b.M, Q[js])
+            S = _scores(~null, self.M[b.rows], Q[js])
             topic_masks: dict[str, np.ndarray] = {}  # this batch's topics only
             for col, j in enumerate(js):
                 m = meta[j]
                 cand = _candidates(m, b.codes, self.index, b.topics, topic_masks)
                 idx, hop = _walk(m, S[:, col], null, b.codes, b.rid, cand)
-                for i, h in zip(idx, hop):
-                    g = b.pos[i]
-                    row = {"query_id": m["query_id"]}
-                    row.update((c, self.docs[c][g]) for c in _DOC_COLS)
-                    row["score"] = None if null[i] else float(S[i, col])
-                    row["hop"] = int(h)
-                    out.append(row)
-        return out
+                pos.append(b.pos[idx])
+                hits += [
+                    (m["query_id"], None if null[i] else float(S[i, col]), int(h))
+                    for i, h in zip(idx, hop)
+                ]
+        if not hits:
+            return []
+        docs = self.docs.take(np.concatenate(pos)).to_pylist()
+        return [
+            {"query_id": q, **d, "score": score, "hop": hop}
+            for (q, score, hop), d in zip(hits, docs)
+        ]
 
 
+_LOCK = threading.Lock()
+_MISSING = object()
+_LOADING: dict = {}  # key → the lock its one running load holds
+# per DataFrame instance: its snapshot, or None for the Spark path
 _SNAPSHOTS: "weakref.WeakKeyDictionary[DataFrame, StoreSnapshot | None]" = (
     weakref.WeakKeyDictionary()
 )
-_SNAPSHOTS_LOCK = threading.Lock()
+# per parquet file set (and Arrow schema): its live snapshot, and per
+# file its rows while a live snapshot holds them
+_BY_FILES: "weakref.WeakValueDictionary[tuple, StoreSnapshot]" = weakref.WeakValueDictionary()
+_FILES: "weakref.WeakValueDictionary[tuple, _Rows]" = weakref.WeakValueDictionary()
+_RECENT: "StoreSnapshot | None" = None  # the newest file-keyed snapshot, kept past its views
+
+
+def _once(cache, key, load):
+    """`cache[key]`, loaded by `load()` once: a thread that asks while
+    another loads `key` waits for that load instead of running its own.
+    A weak-valued cache holds no None."""
+    with _LOCK:
+        value = cache.get(key, _MISSING)
+        if value is not _MISSING:
+            return value
+        lock = _LOADING.setdefault(key, threading.Lock())
+    try:
+        with lock:
+            with _LOCK:
+                value = cache.get(key, _MISSING)
+            if value is _MISSING:
+                value = load()
+                if value is not None or not isinstance(cache, weakref.WeakValueDictionary):
+                    with _LOCK:
+                        cache[key] = value
+            return value
+    finally:
+        with _LOCK:
+            if _LOADING.get(key) is lock:
+                del _LOADING[key]
 
 
 def store_snapshot(store: DataFrame) -> StoreSnapshot | None:
-    """The driver snapshot of `store`, loaded by the first call for this
-    DataFrame instance with one job (`limit(bound + 1).toArrow()`) and
-    reused by every later call. None — also cached — when the store
-    holds more than `snapshot_bound` rows, or vectors of more than one
-    length; the caller then retrieves through `retrieve_batch_multi`.
-    `_fits` vets the row count first, so a store above the bound ships
-    no body or vector to the driver.
+    """The driver snapshot of `store`, or None — the caller then
+    retrieves through `retrieve_batch_multi` — when the store holds
+    more than `snapshot_bound` rows or vectors of more than one length.
+    The verdict is cached per DataFrame instance.
 
-    Keying on the instance keeps what a reader sees unchanged: the
-    DataFrame's file list was fixed when it was created, and the
-    snapshot holds its rows in memory. `compact_store` deletes only
+    A store whose plan is one parquet scan of local files (what
+    `read_vector_tables` and `read_latest_store` return) loads with no
+    Spark job: pyarrow reads each file on the driver (`_read_file`). Its
+    snapshot is keyed on its files — (path, size, mtime) each — so a
+    fresh view of an unchanged store version reuses the snapshot with
+    no read, and a new version reads only its new files and splices
+    them beside the cached rows of the files it kept. A file's rows
+    stay cached while a live snapshot holds them; the newest such
+    snapshot is kept past its views. The footers count the files'
+    rows first, so a store above the bound reads no body or vector.
+
+    Any other frame (filtered, unioned, in memory, not local) loads
+    once per instance with one job (`limit(bound + 1).toArrow()`), its
+    row count vetted first by `_fits`.
+
+    Either way the snapshot holds its rows in memory, and the files
+    were fixed when the DataFrame was created, so a reader sees what a
+    scan of the same DataFrame would. `compact_store` deletes only
     superseded versions, so a latest view resolved before it still
     reads; a snapshot also outlives a version that a later batch
     superseded and compaction then deleted."""
-    with _SNAPSHOTS_LOCK:
-        if store in _SNAPSHOTS:
-            return _SNAPSHOTS[store]
+    return _once(_SNAPSHOTS, store, lambda: _load(store))
+
+
+def _load(store: DataFrame) -> StoreSnapshot | None:
     bound = snapshot_bound(store.sparkSession)
-    snap = None
-    if _fits(store, bound):
-        table = store.select(*_SNAPSHOT_COLS).limit(bound + 1).toArrow()
-        lens = pc.list_value_length(table.column("vector")).drop_null()
-        dims = pc.unique(lens).to_pylist()
-        if table.num_rows <= bound and len(dims) <= 1:
-            snap = StoreSnapshot(table, dims[0] if dims else None)
-    with _SNAPSHOTS_LOCK:
-        return _SNAPSHOTS.setdefault(store, snap)
+    scan = _parquet_scan(store)
+    if scan is not None:
+        try:
+            return _file_snapshot(store, *scan, bound)
+        except (OSError, ValueError, pa.ArrowException):
+            pass  # a file gone or not as its path says: Spark decides
+    if not _fits(store, bound):
+        return None
+    table = store.select(*_SNAPSHOT_COLS).limit(bound + 1).toArrow()
+    if table.num_rows > bound:
+        return None
+    rows = _Rows(table)
+    # the doc columns are slices of the received batches, vectors and
+    # all: a copy of them lets the vectors go once the array holds them
+    rows.docs = rows.docs.take(np.arange(table.num_rows))
+    del table
+    return _built([(0, rows)], len(rows.valid))
+
+
+def _local_paths(files: list[str]) -> list[str] | None:
+    """The local paths of file URIs; None unless all are local."""
+    if not files or not all(f.startswith("file:") for f in files):
+        return None
+    return [unquote(urlparse(f).path) for f in files]
+
+
+def _parquet_scan(store: DataFrame) -> tuple[list[str], list[str]] | None:
+    """(local file paths, partition column names) when `store`'s
+    analyzed plan is one parquet relation over local files holding the
+    snapshot columns; else None."""
+    if not set(_SNAPSHOT_COLS) <= set(store.columns):
+        return None
+    plan = store._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+    ):
+        return None
+    # the relation's own file list: a persisted store's `inputFiles()`
+    # names the cache, not the files
+    files = _local_paths(list(rel.location().inputFiles()))
+    return None if files is None else (files, list(rel.partitionSchema().fieldNames()))
+
+
+def _file_snapshot(store: DataFrame, paths: list[str], names: list[str],
+                   bound: int) -> StoreSnapshot | None:
+    """The snapshot of a local parquet scan, keyed on its files. Files
+    are taken in path order, so each partition directory's rows — each
+    scope's, in both store layouts — are contiguous."""
+    files = tuple((p, (st := os.stat(p)).st_size, st.st_mtime_ns) for p in sorted(paths))
+    schema = _arrow_schema(store)
+    snap = _once(_BY_FILES, (files, schema), lambda: _splice(files, names, schema, bound))
+    if snap is None or snap.docs.num_rows > bound:
+        return None
+    global _RECENT
+    _RECENT = snap
+    return snap
+
+
+def _arrow_schema(store: DataFrame) -> pa.Schema:
+    """The Arrow schema `store.select(*_SNAPSHOT_COLS).toArrow()` has."""
+    return to_arrow_schema(
+        StructType([store.schema[c] for c in _SNAPSHOT_COLS]),
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=store.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
+
+
+def _splice(files: tuple, names: list[str], schema: pa.Schema, bound: int) -> StoreSnapshot | None:
+    """A snapshot over `files`: the rows of each file a live snapshot
+    holds, and each other file read with pyarrow — none when their
+    footers count more than `bound` rows. The largest file comes first,
+    before the vector array exists, so its read never sits beside it."""
+    with _LOCK:
+        cached = [_FILES.get((f, schema)) for f in files]
+    counts = [
+        len(p.valid) if p is not None else pq.read_metadata(f[0]).num_rows
+        for p, f in zip(cached, files)
+    ]
+    if sum(counts) > bound:
+        return None
+    first = np.cumsum([0, *counts[:-1]])
+    parts = (
+        (int(first[i]), cached[i] or _Rows(_read_file(files[i][0], names, schema)))
+        for i in sorted(range(len(files)), key=lambda i: -counts[i])
+    )
+    snap = _built(parts, sum(counts))
+    if snap is not None:
+        with _LOCK:
+            for f, p in zip(files, snap.parts):
+                _FILES[(f, schema)] = p
+    return snap
+
+
+def _read_file(path: str, names: list[str], schema: pa.Schema) -> pa.Table:
+    """One parquet file's snapshot columns, typed as `toArrow` types
+    them (`schema`): the stored columns read with pyarrow (a column the
+    file lacks is NULL), each partition column from the file's
+    `name=value` directory, unescaped as Spark does
+    (`__HIVE_DEFAULT_PARTITION__` is NULL) and cast to its type."""
+    dirs = path.split("/")[-1 - len(names) : -1] if names else []
+    values = {}
+    for name, d in zip(names, dirs, strict=True):
+        key, eq, raw = d.partition("=")
+        if key != name or not eq:
+            raise ValueError(f"{path}: no {name}=value directory")
+        values[name] = None if raw == "__HIVE_DEFAULT_PARTITION__" else unquote(raw)
+    # a buffered stream read in batches holds the reader at ~1.6× the
+    # decoded columns at peak; a whole row group at once takes ~2.9×
+    f = pq.ParquetFile(path, pre_buffer=False, buffer_size=1 << 16)
+    stored = [c for c in schema.names if c not in values and c in f.schema_arrow.names]
+    table = pa.Table.from_batches(
+        f.iter_batches(batch_size=1024, columns=stored),
+        schema=pa.schema([f.schema_arrow.field(c) for c in stored]),
+    )
+    n = table.num_rows
+    cols = []
+    for field in schema:
+        if field.name in values and values[field.name] is not None:
+            cols.append(pa.repeat(pa.scalar(values[field.name]).cast(field.type), n))
+        elif field.name in stored:
+            cols.append(table.column(field.name))
+        else:
+            cols.append(pa.nulls(n, field.type))
+    return pa.table(cols, names=schema.names).cast(schema)
 
 
 def _footer_rows(store: DataFrame) -> int | None:
     """Rows in the parquet files `store` scans, summed from their
     footers with no Spark job; None unless it scans local parquet files
     only."""
-    files = store.inputFiles()
-    if not files or not all(f.startswith("file:") for f in files):
+    files = _local_paths(store.inputFiles())
+    if files is None:
         return None
     try:
-        return sum(pq.read_metadata(unquote(urlparse(f).path)).num_rows for f in files)
+        return sum(pq.read_metadata(f).num_rows for f in files)
     except (OSError, pa.ArrowException):
         return None
 
@@ -597,35 +838,3 @@ def retrieve_batch(
     Returns ≤k rows per query with hop + score, score-desc ranked.
     """
     return retrieve_batch_multi(store, with_scope_params(queries, scope, params))
-
-
-def mmr_rerank(rows: list[dict], k: int, lambda_mult: float = 0.35) -> list[dict]:
-    """Maximal-marginal-relevance re-rank (ingest factory strategy,
-    GraphRetrieverFactory.py:148-161): greedy pick balancing query
-    relevance vs redundancy. Runs driver-side on ≤k candidates (tiny).
-
-    rows: dicts with 'score' (relevance) and 'body'; diversity proxy is
-    token-set overlap of bodies (no vectors needed at this stage).
-    """
-    if not rows:
-        return []
-    chosen: list[dict] = []
-    remaining = list(rows)
-
-    def overlap(a: dict, b: dict) -> float:
-        ta = set((a.get("body") or "").lower().split())
-        tb = set((b.get("body") or "").lower().split())
-        if not ta or not tb:
-            return 0.0
-        return len(ta & tb) / len(ta | tb)
-
-    while remaining and len(chosen) < k:
-        best, best_val = None, float("-inf")
-        for r in remaining:
-            redundancy = max((overlap(r, c) for c in chosen), default=0.0)
-            val = lambda_mult * (r.get("score") or 0.0) - (1 - lambda_mult) * redundancy
-            if val > best_val:
-                best, best_val = r, val
-        chosen.append(best)
-        remaining.remove(best)
-    return chosen

@@ -132,7 +132,6 @@ def ingest_pipeline(
     namespace: str = "default",
     branch: str = "main",
     collection: str = "misc",
-    dev_forced: bool = False,
     output_path: str | None = None,
     raw_dump_path: str | None = None,
     embedder=None,
@@ -148,8 +147,7 @@ def ingest_pipeline(
     The result's frames are lazy and persist nothing: the pipeline is
     one chain, which the caller's write (`output_path`) runs once. A
     caller reading several of them should persist what it reads twice.
-    `collection` lands in the audit; `dev_forced` (the reference's
-    dev_forced_standalone flag) reaches no stored row or audit column.
+    `collection` lands in the audit.
 
     `collect_stage_times` is a DIAGNOSTIC mode (EXPLAIN ANALYZE-style):
     it persists the per-document pass's rows and forces them, then the

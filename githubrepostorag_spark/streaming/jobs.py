@@ -36,6 +36,10 @@ a hidden temp name renamed over the final one:
 - two job streams with different checkpoints can share a sink.
 A trigger runs one Spark job, the dequeue `collect`; below the store's
 snapshot bound the agent runs none (`operators.retrieval.store_snapshot`).
+A parquet-scan store, such as a fresh `read_latest_store` view, loads
+its snapshot with no Spark job either: pyarrow reads its files, the
+snapshot is keyed on them, and a view of a new version reads only the
+files that changed.
 """
 
 from __future__ import annotations

@@ -155,22 +155,7 @@ def test_repodir_skips_files_that_are_not_utf8(spark, tmp_path):
     assert [r.file_path for r in docs.collect()] == ["src/app.py"]
 
 
-# ---------------- MMR re-rank + notebook helpers ----------------
-
-
-def test_mmr_rerank_balances_relevance_and_redundancy():
-    from githubrepostorag_spark.operators.retrieval import mmr_rerank
-
-    rows = [
-        {"body": "spark shuffle partition join", "score": 0.9},
-        {"body": "spark shuffle partition join", "score": 0.89},  # near-dup of #1
-        {"body": "cassandra vector index sai", "score": 0.5},
-    ]
-    picked = mmr_rerank(rows, k=2, lambda_mult=0.35)
-    # the redundant twin loses to the diverse lower-scored row
-    assert picked[0]["score"] == 0.9
-    assert picked[1]["body"].startswith("cassandra")
-    assert mmr_rerank([], 3) == []
+# ---------------- notebook helpers ----------------
 
 
 def test_kernel_language_detection():

@@ -4,7 +4,11 @@ expression `F.round(V.dot(V.as_double(vector), V.as_double(qvec)), 6)`."""
 
 from __future__ import annotations
 
+import os
+import time
+
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -219,11 +223,12 @@ def test_null_vector_element_scores_null(spark):
 
 
 def test_bound_verdict_ships_no_rows(spark, tmp_path, monkeypatch):
-    """Below the bound a parquet store loads with one job, its footers
-    having counted it. Above the bound a store is found so before any
-    body or vector reaches the driver — by its footers, or by a count
-    of row_ids when it has no file list — and keeps the Spark path. A
-    filter the footers over-count is settled by that count."""
+    """Below the bound a parquet store loads with no Spark job, its
+    footers having counted it. Above the bound a store is found so
+    before any body or vector reaches the driver — by its footers, or
+    by a count of row_ids when it has no file list — and keeps the
+    Spark path: neither `toArrow` nor the file reader runs. A filter
+    the footers over-count is settled by that count."""
     from githubrepostorag_spark.operators import retrieval as R
 
     rows = [(f"r{i}", [float(i), 1.0, 0.0]) for i in range(6)]
@@ -238,16 +243,17 @@ def test_bound_verdict_ships_no_rows(spark, tmp_path, monkeypatch):
         assert R.store_snapshot(fresh) is not None
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("snapshot-load")) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("snapshot-load")) == 0
 
     monkeypatch.setattr(R, "snapshot_bound", lambda spark: 5)
     snap = R.store_snapshot(spark.read.parquet(path).filter("row_id < 'r3'"))
     assert snap is not None and len(snap.docs["row_id"]) == 3
 
-    def no_load(self):
+    def no_load(*_):
         raise AssertionError("an above-bound store shipped to the driver")
 
     monkeypatch.setattr(type(_tiny_store(spark, rows)), "toArrow", no_load)
+    monkeypatch.setattr(R, "_read_file", no_load)
     assert R.store_snapshot(spark.read.parquet(path)) is None
     assert R.store_snapshot(_tiny_store(spark, rows)) is None
 
@@ -338,3 +344,250 @@ def test_snapshot_cache_shared_across_threads(spark):
     assert len(got) == 12
     assert all(s is got[0][0] for s, _ in got)
     assert all(rows == got[0][1] and rows for _, rows in got)
+
+
+# ---------------- the file reader: a parquet-scan store with no Spark job
+
+
+def _file_read(store):
+    """The file reader's table for `store`: each scanned file read by
+    `_read_file`, concatenated."""
+    from githubrepostorag_spark.operators import retrieval as R
+
+    paths, names = R._parquet_scan(store)
+    schema = R._arrow_schema(store)
+    return pa.concat_tables([R._read_file(p, names, schema) for p in paths])
+
+
+def _sorted(table):
+    keys = ("row_id", "body", "scope", "namespace", "repo", "module", "file_path", "language")
+    return table.sort_by([(k, "ascending") for k in keys])
+
+
+def _stream_store(spark, tmp_path, ticks):
+    """A stream store landed tick by tick: each tick is a list of
+    (repo, file_path, text) rows, one `stream_ingest_docs` run each."""
+    from githubrepostorag_spark.streaming.ingest import stream_ingest_docs
+
+    src, store, ckpt = (str(tmp_path / d) for d in ("src", "store", "ckpt"))
+    schema = "repo string, file_path string, text string"
+
+    def land(rows):
+        spark.createDataFrame(rows, schema).write.mode("append").json(src)
+        stream_ingest_docs(spark.readStream.schema(schema).json(src), store, ckpt).awaitTermination(300)
+
+    for rows in ticks:
+        land(rows)
+    return store, land
+
+
+_BASE = [
+    ("repoA", "m0/a.py", "def retry_timeout():\n    raise Exception(1)\n" * 60),
+    ("repoB", "m0/b.py", "def handler_error():\n    return 2\n" * 60),
+    ("repoB", "m1/c.py", "class Cache:\n    size = 3\n" * 40),
+]
+_TICK = [("repoA", "m0/a.py", "def retry_timeout():\n    return 9\n" * 30)]
+
+
+def _stream_meta():
+    from githubrepostorag_spark.plans.agent import GraphRAGAgent
+
+    texts = ("stacktrace timeout exception in retry", "cache size handler", "error")
+    filters = ({}, {"repo": "repoB"}, {"module": "m0"})
+    return GraphRAGAgent._query_meta(
+        [(f"q{i}-{j}", t, f, "code") for i, t in enumerate(texts) for j, f in enumerate(filters)]
+    )
+
+
+class _Counting:
+    """Wraps `_read_file`, counting the paths it reads."""
+
+    def __init__(self, read, pause=0.0):
+        self.read, self.pause, self.paths = read, pause, []
+
+    def __call__(self, path, names, schema):
+        self.paths.append(path)
+        time.sleep(self.pause)
+        return self.read(path, names, schema)
+
+
+def _jobs(spark, group, call):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_file_read_equals_spark_load_batch_store(spark, tmp_path):
+    """The batch store `ingest_pipeline` writes, partitioned by
+    (scope, namespace): the file reader returns exactly the rows and
+    Arrow types of `store.select(*_SNAPSHOT_COLS).toArrow()`."""
+    from githubrepostorag_spark.llm.stub import DeterministicLLM
+    from githubrepostorag_spark.operators import retrieval as R
+    from githubrepostorag_spark.operators.vector_write import read_vector_tables
+    from githubrepostorag_spark.plans.ingest import ingest_pipeline
+    from tests.fixtures_corpus import corpus_df
+
+    path = str(tmp_path / "store")
+    ingest_pipeline(corpus_df(spark), ingest_run_id="run-files", llm_factory=DeterministicLLM,
+                    output_path=path)
+    store = read_vector_tables(spark, path)
+    got, want = _file_read(store), store.select(*R._SNAPSHOT_COLS).toArrow()
+    assert got.schema.equals(want.schema)
+    assert _sorted(got).equals(_sorted(want)) and got.num_rows > 0
+    assert set(got.column("scope").to_pylist()) == {"chunk", "file", "module", "repo", "catalog"}
+
+
+def test_file_read_equals_spark_load_stream_view(spark, tmp_path):
+    """A stream latest view (`repo=R/batch_id=N` directories, `repo` a
+    partition column): the file reader equals the Spark load."""
+    from githubrepostorag_spark.operators import retrieval as R
+    from githubrepostorag_spark.streaming.ingest import read_latest_store
+
+    store, _ = _stream_store(spark, tmp_path, [_BASE, _TICK])
+    view = read_latest_store(spark, store)
+    got, want = _file_read(view), view.select(*R._SNAPSHOT_COLS).toArrow()
+    assert got.schema.equals(want.schema)
+    assert _sorted(got).equals(_sorted(want))
+    assert set(got.column("repo").to_pylist()) == {"repoA", "repoB"}
+
+
+def test_file_read_equals_spark_load_escaped_partition_values(spark, tmp_path):
+    """Partition values Spark escapes in directory names (space, `/`,
+    `%`, `=`), a NULL (`__HIVE_DEFAULT_PARTITION__`) and a
+    numeric-looking `007` (a string here, beside the others) read back
+    as Spark reads them."""
+    from githubrepostorag_spark.operators import retrieval as R
+
+    names = ["a b", "x/y", "p%q", "k=v", None, "007"]
+    rows = [
+        (f"r{i}", f"body {i}", "chunk", ns, "repo", "m", f"m/{i}.py", "py", ["t"], [float(i), 1.0])
+        for i, ns in enumerate(names)
+    ]
+    path = str(tmp_path / "store")
+    spark.createDataFrame(
+        rows,
+        "row_id string, body string, scope string, namespace string, repo string, "
+        "module string, file_path string, language string, topics array<string>, "
+        "vector array<float>",
+    ).write.partitionBy("namespace").parquet(path)
+    store = spark.read.parquet(path)
+    got, want = _file_read(store), store.select(*R._SNAPSHOT_COLS).toArrow()
+    assert got.schema.equals(want.schema)
+    assert _sorted(got).equals(_sorted(want))
+    assert sorted(got.column("namespace").to_pylist(), key=str) == sorted(names, key=str)
+
+
+def test_fresh_views_of_one_version_share_a_snapshot(spark, tmp_path, monkeypatch):
+    """Two freshly resolved latest views of one store version return the
+    same snapshot: the second runs no Spark job and reads no file."""
+    from githubrepostorag_spark.operators import retrieval as R
+    from githubrepostorag_spark.streaming.ingest import read_latest_store
+
+    store, _ = _stream_store(spark, tmp_path, [_BASE])
+    reads = _Counting(R._read_file)
+    monkeypatch.setattr(R, "_read_file", reads)
+    view = read_latest_store(spark, store)
+    first, jobs = _jobs(spark, "snap-first", lambda: R.store_snapshot(view))
+    assert first is not None and jobs == 0 and len(reads.paths) == len(set(reads.paths)) > 0
+    reads.paths.clear()
+    view = read_latest_store(spark, store)
+    again, jobs = _jobs(spark, "snap-again", lambda: R.store_snapshot(view))
+    assert again is first and jobs == 0 and reads.paths == []
+
+
+def _one_repo_tick(spark, tmp_path, monkeypatch):
+    """A stream store, its snapshot before a one-repo tick, the view
+    after it, that view's snapshot and the files its refresh read (with
+    the refresh's Spark job count)."""
+    from githubrepostorag_spark.operators import retrieval as R
+    from githubrepostorag_spark.streaming.ingest import read_latest_store
+
+    store, land = _stream_store(spark, tmp_path, [_BASE])
+    before = R.store_snapshot(read_latest_store(spark, store))
+    land(_TICK)
+    view = read_latest_store(spark, store)
+    reads = _Counting(R._read_file)
+    monkeypatch.setattr(R, "_read_file", reads)
+    snap, jobs = _jobs(spark, "snap-tick", lambda: R.store_snapshot(view))
+    return store, before, view, snap, reads.paths, jobs
+
+
+def test_one_repo_tick_refreshes_only_its_files(spark, tmp_path, monkeypatch):
+    """After a tick that lands one repo, the refreshed snapshot runs no
+    Spark job and reads only that repo's new version; it equals a fresh
+    Spark load in rows and in bit-identical `retrieve` output."""
+    from githubrepostorag_spark.operators import retrieval as R
+
+    store, before, view, snap, paths, jobs = _one_repo_tick(spark, tmp_path, monkeypatch)
+    new_dir = os.path.join(store, "repo=repoA", "batch_id=1")
+    assert jobs == 0 and paths
+    assert {os.path.dirname(p) for p in paths} == {new_dir}
+    assert sorted(paths) == sorted(
+        os.path.join(new_dir, f) for f in os.listdir(new_dir) if f.endswith(".parquet")
+    )
+    assert snap is not before
+    table = view.select(*R._SNAPSHOT_COLS).toArrow()
+    fresh = R._built([(0, R._Rows(table))], table.num_rows)
+    assert _sorted(snap.docs).equals(_sorted(fresh.docs))
+    meta = _stream_meta()
+    got, want = snap.retrieve(meta), fresh.retrieve(meta)
+    assert got == want and len(got) > len(meta)
+    assert {r["repo"] for r in got} == {"repoA", "repoB"}
+
+
+def test_spliced_snapshot_answers_after_compaction(spark, tmp_path, monkeypatch):
+    """A snapshot spliced from cached files (repoB's) and a new one
+    (repoA's) answers the same after `compact_store` deletes repoA's
+    old version, and a view resolved after compaction shares it."""
+    from githubrepostorag_spark.operators import retrieval as R
+    from githubrepostorag_spark.streaming.ingest import compact_store, read_latest_store
+
+    store, _, view, snap, paths, _ = _one_repo_tick(spark, tmp_path, monkeypatch)
+    meta = _stream_meta()
+    want = snap.retrieve(meta)
+    compact_store(spark, store)
+    assert not os.path.exists(os.path.join(store, "repo=repoA", "batch_id=0"))
+    assert R.store_snapshot(view).retrieve(meta) == want and want
+    n = len(paths)
+    assert R.store_snapshot(read_latest_store(spark, store)) is snap
+    assert len(paths) == n
+
+
+def test_concurrent_asks_load_a_version_once(spark, tmp_path, monkeypatch):
+    """Two threads asking at once for the snapshot of one version — two
+    fresh views of its files, or one in-memory frame — load it once:
+    the second waits for the first's load instead of running its own."""
+    import threading
+
+    from githubrepostorag_spark.operators import retrieval as R
+
+    path = str(tmp_path / "store")
+    _tiny_store(spark, [(f"r{i}", [float(i), 1.0, 0.5]) for i in range(8)]).repartition(3).write.parquet(path)
+    reads = _Counting(R._read_file, pause=0.2)
+    monkeypatch.setattr(R, "_read_file", reads)
+    loads = []
+    to_arrow = type(_tiny_store(spark, [])).toArrow
+
+    def counting_to_arrow(df):
+        loads.append(df)
+        time.sleep(0.2)
+        return to_arrow(df)
+
+    monkeypatch.setattr(type(_tiny_store(spark, [])), "toArrow", counting_to_arrow)
+    mem = _tiny_store(spark, [(f"m{i}", [1.0, float(i), 0.0]) for i in range(5)])
+    for stores in ([spark.read.parquet(path), spark.read.parquet(path)], [mem, mem]):
+        got = []
+        threads = [threading.Thread(target=lambda s=s: got.append(R.store_snapshot(s))) for s in stores]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert len(got) == 2 and got[0] is got[1] is not None
+    n_files = len(spark.read.parquet(path).inputFiles())
+    assert sorted(reads.paths) == sorted(set(reads.paths)) and len(reads.paths) == n_files
+    assert len(loads) == 1
